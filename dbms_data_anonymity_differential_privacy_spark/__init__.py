@@ -292,10 +292,7 @@ from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
     private_export_batch,
     private_export_stream,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.util import (
-    gate_broadcast_keys,
-    release_cached_relations,
-)
+from dbms_data_anonymity_differential_privacy_spark.operators.util import release_cached_relations
 
 __all__ = [
     "get_spark",
@@ -495,7 +492,6 @@ __all__ = [
     "funnel_stateful",
     "private_export_batch",
     "private_export_stream",
-    "gate_broadcast_keys",
     "release_cached_relations",
     "rolling_anomaly_stateful",
     "rolling_anomaly_stream",

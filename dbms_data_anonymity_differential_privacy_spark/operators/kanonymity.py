@@ -20,8 +20,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbms_data_anonymity_differential_privacy_spark.operators.util import gate_broadcast_keys
-
 CLASS_SIZE_COL = "class_size"
 
 
@@ -42,18 +40,17 @@ def with_class_size(df: DataFrame, qi: Sequence[str], out_col: str = CLASS_SIZE_
 def k_anonymize_suppress(df: DataFrame, qi: Sequence[str], k: int) -> DataFrame:
     """C1 — drop every row whose QI equivalence class has < k members.
 
-    Physical shape (SURVEY P5→P6→P8): group-frequency aggregate + broadcast
-    LEFT SEMI join of the frequent-class keys back onto the fact scan. The
-    fact table is never shuffled: the aggregate ships only QI tuples with
-    map-side partial counts (skew-safe — a modal class partial-aggregates
-    on every mapper instead of landing on one reducer, the failure mode of
-    the window-count formulation), and the output path is scan + broadcast
-    probe. The hint is SIZE-GATED (``gate_broadcast_keys``): the frequent
-    relation is worst-case rows/k keys, so it is counted once and
-    broadcast only under ``spark.graft.broadcast.keyRowLimit`` rows —
-    above that AQE plans a shuffled semi join with skew splitting instead
-    of a forced broadcast OOMing the driver. Reference semantics:
-    ``naive-suppresion.py:29-40`` / ``t-closeness.py:91-95``.
+    Physical shape (SURVEY P5→P6→P8): group-frequency aggregate + LEFT
+    SEMI join of the frequent-class keys back onto the fact scan. The
+    aggregate ships only QI tuples with map-side partial counts (skew-safe
+    — a modal class partial-aggregates on every mapper instead of landing
+    on one reducer, the failure mode of the window-count formulation).
+    The join carries no hint: Spark's static ``autoBroadcastJoinThreshold``
+    plus AQE's runtime join selection choose the strategy — a broadcast
+    probe (the fact table never shuffles) while the key relation is
+    small, a skew-split shuffled semi join when it is not (worst case
+    rows/k keys). Reference semantics: ``naive-suppresion.py:29-40`` /
+    ``t-closeness.py:91-95``.
 
     NULL handling contract: a row with ANY NULL QI value is always
     suppressed, whatever k — the semi-join uses SQL equality, under which
@@ -69,9 +66,7 @@ def k_anonymize_suppress(df: DataFrame, qi: Sequence[str], k: int) -> DataFrame:
         .select(*qi)
     )
     # semi-join hoists join keys to the front — restore the input order
-    return df.join(gate_broadcast_keys(frequent), on=list(qi), how="left_semi").select(
-        *df.columns
-    )
+    return df.join(frequent, on=list(qi), how="left_semi").select(*df.columns)
 
 
 def k_anonymity_audit(df: DataFrame, qi: Sequence[str], k: int) -> DataFrame:

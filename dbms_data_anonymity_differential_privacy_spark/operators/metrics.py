@@ -12,7 +12,7 @@ import os
 import time
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import (
@@ -112,18 +112,28 @@ def ncp(
     o = orig.agg(*[cd(c).alias(f"__o_{i}") for i, c in enumerate(qi)])
     a = anon.agg(*[cd(c).alias(f"__a_{i}") for i, c in enumerate(qi)])
     joined = o.crossJoin(F.broadcast(a))
+    return joined.select(
+        _ncp_expr(
+            [F.col(f"__o_{i}") for i in range(len(qi))],
+            [F.col(f"__a_{i}") for i in range(len(qi))],
+        ).alias("ncp")
+    )
+
+
+def _ncp_expr(orig_distinct: Sequence[Column], anon_distinct: Sequence[Column]) -> Column:
+    """The NCP formula over per-QI-column distinct counts (original side,
+    anonymized side), in :func:`ncp`'s exact arithmetic order. The
+    pipelines pass ``countDistinct`` aggregates directly, so NCP folds into
+    their one metrics aggregation."""
     # try_divide: a column whose ORIGINAL distinct count is 0 (all-NULL —
     # countDistinct ignores NULLs) has no defined information loss; emit
     # NULL instead of an ANSI divide-by-zero. Real corpora never hit this
     # (divisor > 0 → identical to plain division, oracle unaffected).
-    per_col = [
-        F.try_divide(F.col(f"__o_{i}") - F.col(f"__a_{i}"), F.col(f"__o_{i}"))
-        for i in range(len(qi))
-    ]
+    per_col = [F.try_divide(o - a, o) for o, a in zip(orig_distinct, anon_distinct)]
     total = per_col[0]
     for p in per_col[1:]:
         total = total + p
-    return joined.select(F.round(total / F.lit(len(qi)), ROUND_DP).alias("ncp"))
+    return F.round(total / F.lit(len(per_col)), ROUND_DP)
 
 
 def group_percentiles(

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import k_anonymize_suppress
-from dbms_data_anonymity_differential_privacy_spark.operators.util import gate_broadcast_keys
+from dbms_data_anonymity_differential_privacy_spark.operators.util import track_cached
 
 ROUND_DP = 9
 
@@ -92,7 +92,7 @@ def class_emd(df: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
     from it. At 100 TB the big table contributes one aggregation; all EMD
     math happens on kilobytes.
     """
-    counts = (
+    counts = track_cached(
         df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
     )
     return _emd_from_counts(counts, qi, sensitive)
@@ -100,7 +100,8 @@ def class_emd(df: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
 
 def _emd_from_counts(counts: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
     """EMD math over a pre-aggregated ``(*qi, sensitive, __cnt)`` relation.
-    Callers persist ``counts`` (it feeds four small consumers).
+    Callers persist ``counts``: it feeds an eager collect of the global
+    distribution here and the per-class aggregation after it.
 
     Shape (r11 rewrite): the sensitive support is SMALL BY DEFINITION in
     t-closeness (it is the attribute whose distribution is being
@@ -168,6 +169,24 @@ def _emd_from_counts(counts: DataFrame, qi: Sequence[str], sensitive: str) -> Da
     return per_class.select(*qi, F.round(emd, ROUND_DP).alias("emd"))
 
 
+def _verdict_keys(
+    counts: DataFrame, qi: Sequence[str], sensitive: str, k: int, t: float, mode: str
+) -> DataFrame:
+    """Keys of the classes that survive t-closeness suppression, derived
+    from the persisted ``(*qi, sensitive, __cnt)`` relation: class sizes →
+    k-filter → (strict mode) EMD to the post-k-anonymity distribution ≤ t.
+    Shared by :func:`t_closeness_filter` and ``pipelines.t_closeness_pipeline``."""
+    if mode not in ("strict", "reference"):
+        raise ValueError(f"unknown mode: {mode}")
+    sizes = counts.groupBy(*qi).agg(F.sum("__cnt").alias("__class_size"))
+    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*qi)
+    if mode == "reference":
+        return big  # SURVEY §3.4: as-written = k-filter only
+    kcounts = track_cached(counts.join(big, on=list(qi), how="left_semi").persist())
+    emd = _emd_from_counts(kcounts, qi, sensitive)
+    return emd.filter(F.col("emd") <= F.lit(t)).select(*qi)
+
+
 def t_closeness_filter(
     df: DataFrame,
     qi: Sequence[str],
@@ -189,29 +208,16 @@ def t_closeness_filter(
     aggregation produces the (class, sensitive, count) relation; class
     sizes, the k-filter, and the EMD verdict are all computed on that tiny
     relation; surviving class keys join back onto the fact scan as a
-    semi-join whose broadcast hint is SIZE-GATED (``gate_broadcast_keys``):
-    the verdict relation is worst-case rows/k keys, so it is counted once
-    and broadcast only under ``spark.graft.broadcast.keyRowLimit`` rows —
-    above that the hint is withheld and AQE plans a shuffled semi-join
-    with runtime skew splitting; the algebra is unchanged.
+    plain semi join. The verdict relation is worst-case rows/k keys, so
+    the join carries no hint: Spark's static ``autoBroadcastJoinThreshold``
+    plus AQE's runtime join selection pick broadcast or shuffled (skew-
+    split) semi join; the algebra is the same either way.
     """
-    if mode not in ("strict", "reference"):
-        raise ValueError(f"unknown mode: {mode}")
-    counts = (
+    counts = track_cached(
         df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
     )
-    sizes = counts.groupBy(*qi).agg(F.sum("__cnt").alias("__class_size"))
-    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*qi)
-    if mode == "reference":
-        return df.join(gate_broadcast_keys(big), on=list(qi), how="left_semi")
-    # strict: EMD measured over the post-k-anonymity population. The gated
-    # `big` keys feed BOTH the counts semi-join and nothing else; `ok` is
-    # gated separately before the fact probe.
-    big = gate_broadcast_keys(big)
-    kcounts = counts.join(big, on=list(qi), how="left_semi").persist()
-    emd = _emd_from_counts(kcounts, qi, sensitive)
-    ok = emd.filter(F.col("emd") <= F.lit(t)).select(*qi)
-    return df.join(gate_broadcast_keys(ok), on=list(qi), how="left_semi")
+    ok = _verdict_keys(counts, qi, sensitive, k, t, mode)
+    return df.join(ok, on=list(qi), how="left_semi")
 
 
 def l_diversity_filter(
@@ -223,9 +229,9 @@ def l_diversity_filter(
     t-closeness without l-diversity leaves the homogeneity attack open;
     the three filters share one physical shape.
 
-    Same zero-fact-shuffle plan as ``t_closeness_filter``: one aggregation
-    to (class, #distinct-sensitive, size), verdict keys joined back with
-    the same size-gated broadcast hint.
+    Same plan as ``t_closeness_filter``: one aggregation to (class,
+    #distinct-sensitive, size), verdict keys joined back with a plain semi
+    join whose strategy Spark's threshold and AQE choose.
     """
     stats = df.groupBy(*qi).agg(
         F.countDistinct(sensitive).alias("__nsv"),
@@ -234,20 +240,24 @@ def l_diversity_filter(
     ok = stats.filter(
         (F.col("__nsv") >= F.lit(l)) & (F.col("__sz") >= F.lit(k))
     ).select(*qi)
-    return df.join(gate_broadcast_keys(ok), on=list(qi), how="left_semi").select(*df.columns)
+    return df.join(ok, on=list(qi), how="left_semi").select(*df.columns)
 
 
 def t_violations(df: DataFrame, qi: Sequence[str], sensitive: str, t: float = 0.2) -> DataFrame:
     """C9 — single-row report: #classes with EMD > t vs the table
     distribution, total classes, violation rate (reference
     ``t-closeness.py:186-208``)."""
-    emd = class_emd(df, qi, sensitive)
+    return _violation_row(class_emd(df, qi, sensitive), t)
+
+
+def _violation_row(emd: DataFrame, t: float) -> DataFrame:
+    """``violations, total_groups, violation_rate`` over a ``(*qi, emd)``
+    relation — NULL violations/rate when it has no classes."""
+    violated = F.sum(F.when(F.col("emd") > t, 1).otherwise(0))
     return emd.agg(
-        F.sum(F.when(F.col("emd") > t, 1).otherwise(0)).alias("violations"),
+        violated.alias("violations"),
         F.count(F.lit(1)).alias("total_groups"),
-        F.round(
-            F.sum(F.when(F.col("emd") > t, 1).otherwise(0)) / F.count(F.lit(1)), ROUND_DP
-        ).alias("violation_rate"),
+        F.round(violated / F.count(F.lit(1)), ROUND_DP).alias("violation_rate"),
     )
 
 

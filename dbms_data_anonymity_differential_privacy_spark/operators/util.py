@@ -37,98 +37,10 @@ def nondet_true() -> Column:
     return F.size(F.shuffle(F.array(F.lit(1)))) > 0
 
 
-BROADCAST_KEY_ROW_LIMIT_CONF = "spark.graft.broadcast.keyRowLimit"
-DEFAULT_KEY_ROW_LIMIT = 1_000_000
-
-
-def gate_broadcast_keys(
-    keys: DataFrame, row_limit: int | None = None, hint: str = "auto"
-) -> DataFrame:
-    """Size-gate a class-key relation before it is used as the built side
-    of a semi/anti join: broadcast-hint it ONLY when it is actually small.
-
-    The k-anonymity / t-closeness family joins a derived key relation
-    (frequent classes, EMD-passing classes) back onto the fact scan. That
-    relation is worst-case rows/k keys — on a 100 TB fact table with a
-    high-cardinality QI it can reach tens of GB, and a hard-coded
-    ``F.broadcast`` hint would OOM the driver (the hint overrides Spark's
-    own ``autoBroadcastJoinThreshold`` safety). Editing source to "drop
-    the hint" is not a scale strategy, so the decision is data-driven:
-
-    - the key relation is persisted and counted ONCE (the count reuses
-      the aggregation the broadcast exchange would have to run anyway;
-      the persisted blocks then feed the join probe, so the fact table
-      still contributes exactly one pass per aggregation),
-    - under ``row_limit`` rows (default 1M ≈ tens of MB of QI tuples,
-      configurable per session via ``spark.graft.broadcast.keyRowLimit``)
-      the relation returns wrapped in ``F.broadcast`` → BHJ, fact side
-      never shuffles,
-    - at or above the limit it returns un-hinted → AQE plans a shuffled
-      semi join with runtime skew splitting (and may still pick a
-      runtime broadcast if the post-shuffle size allows).
-
-    Streaming inputs pass through un-hinted (no count possible); the
-    stream-side k-anon gates build their key relations per micro-batch.
-
-    Cache contract (ownership + release): the persisted key relation is
-    NOT unpersisted here — the caller's join consumes it lazily, so this
-    function cannot know when release is safe. Instead every persisted
-    relation is tracked in a module-level registry;
-    :func:`release_cached_relations` unpersists and clears them all, and
-    is the contract for long-lived sessions that compose many
-    k-anonymize/t-closeness calls: run the consuming action, then call
-    ``release_cached_relations()`` (the engine's harnesses — bench, the oracle
-    gate, the plans fixture — already ``clearCache()`` between queries,
-    which subsumes it). In the hinted branch the residue is bounded by
-    ``row_limit`` rows; in the un-hinted branch the cache is what saves
-    the second fact-table pass the shuffled join would otherwise pay.
-    The count also makes the operator EAGER at CONSTRUCTION time — the
-    deliberate cost of a data-driven plan decision, the same trade AQE
-    makes with runtime statistics (callers that build plans in a loop
-    should pass ``hint=`` to skip it).
-
-    ``hint`` escape hatch for composition loops that already know the
-    answer (or must stay lazy):
-
-    - ``'auto'`` (default): persist + count + registry, data-driven.
-    - ``'broadcast'``: trust the caller — wrap in ``F.broadcast`` with
-      NO persist and NO eager count (plan construction stays lazy; the
-      broadcast exchange is the only materialization).
-    - ``'shuffle'``: pass through un-hinted, no persist, no count — AQE
-      owns the join strategy entirely.
-    """
-    if hint not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"hint must be 'auto'|'broadcast'|'shuffle', got {hint!r}")
-    if keys.isStreaming:
-        # a stream cannot be counted ('auto') or broadcast: honor
-        # 'shuffle'/'auto' as passthrough, but an explicit 'broadcast'
-        # is a contradiction the caller must hear about, not a silent
-        # downgrade
-        if hint == "broadcast":
-            raise ValueError(
-                "hint='broadcast' on a streaming key relation: a stream "
-                "cannot be broadcast — build per-micro-batch keys or use "
-                "hint='shuffle'"
-            )
-        return keys
-    if hint == "broadcast":
-        return F.broadcast(keys)
-    if hint == "shuffle":
-        return keys
-    if row_limit is None:
-        row_limit = int(
-            keys.sparkSession.conf.get(
-                BROADCAST_KEY_ROW_LIMIT_CONF, str(DEFAULT_KEY_ROW_LIMIT)
-            )
-        )
-    keys = track_cached(keys.persist())
-    return F.broadcast(keys) if keys.count() <= row_limit else keys
-
-
 # Session-scoped ledger of every relation the engine persists on the
-# caller's behalf (gate_broadcast_keys key relations, the pipelines'
-# shared counts relations). Each entry's blocks are bounded by its own
-# slim relation, never fact rows. HARD-capped: harnesses that rely on
+# caller's behalf (the pipelines' and t-closeness operators' shared
+# counts and verdict-key relations, the pipelines' released relations).
+# HARD-capped: harnesses that rely on
 # spark.catalog.clearCache() between queries never drain the ledger's
 # Python/JVM plan references, so without a cap a long bench sweep or
 # composition loop would accumulate them until process exit. On

@@ -22,38 +22,34 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbms_data_anonymity_differential_privacy_spark.functions.binning import bin_equal_width
 from dbms_data_anonymity_differential_privacy_spark.operators.clustering import cluster_anonymize
-from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import (
-    class_sizes,
-    k_anonymize_suppress,
-    with_class_size,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.metrics import (
-    ncp,
-    reid_risk,
-    suppression_rate,
-    uniqueness_rate,
-)
+from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import class_sizes
+from dbms_data_anonymity_differential_privacy_spark.operators.metrics import _ncp_expr, ncp
 from dbms_data_anonymity_differential_privacy_spark.operators.tcloseness import (
     ROUND_DP as _ROUND_DP,
     _emd_from_counts,
+    _verdict_keys,
+    _violation_row,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.util import gate_broadcast_keys, track_cached
+from dbms_data_anonymity_differential_privacy_spark.operators.util import track_cached
 
 ROUND_DP = 9
 
 
-def _one_row(*dfs: DataFrame) -> DataFrame:
-    """Combine single-row metric DataFrames into one row. Each side is one
-    row → broadcast cross joins, no shuffle."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.crossJoin(F.broadcast(d))
-    return out
+def _suppression_cols(size: Column, kept_size: Column) -> list[Column]:
+    """``n_orig, n_anon, suppression_rate`` as aggregates over a class
+    relation: ``size`` per class, ``kept_size`` NULL for a suppressed class."""
+    n_orig = F.coalesce(F.sum(size), F.lit(0))
+    n_anon = F.coalesce(F.sum(kept_size), F.lit(0))
+    return [
+        n_orig.alias("n_orig"),
+        n_anon.alias("n_anon"),
+        F.round((n_orig - n_anon) / n_orig, _ROUND_DP).alias("suppression_rate"),
+    ]
 
 
 def naive_suppression_pipeline(
@@ -67,45 +63,42 @@ def naive_suppression_pipeline(
     k_satisfied`` (:56), ``uniqueness_rate`` rows-denominator (:60-62),
     ``reid_risk`` (:64-69), ``ncp`` (:74-83).
 
-    The whole metrics row derives from ONE aggregation of the fact table:
+    The whole metrics row is ONE aggregation over the class-size relation:
     suppression removes entire classes, so the anonymized class-size
-    relation is exactly the kept subset of the original one, and NCP's
-    per-column distinct counts are identical over the class relation and
-    the fact rows (every distinct QI value appears in some class tuple).
-    Fact rows are only rescanned to build the anonymized output relation.
+    relation is exactly the kept subset of the original one, and every
+    "after" metric is a conditional aggregate over ``kept_size`` (NULL for
+    a suppressed class). NCP's per-column distinct counts are identical
+    over the class relation and the fact rows (every distinct QI value
+    appears in some class tuple). Fact rows are aggregated once and
+    rescanned only to build the anonymized output relation.
     """
     clean = df.na.drop("any")
     sizes = track_cached(class_sizes(clean, qi).persist())  # the one fact aggregation
-    kept = track_cached(sizes.filter(F.col("class_size") >= F.lit(k)).persist())
-    # frequent-class keys: size-gated hint (worst-case rows/k keys)
+    size = F.col("class_size")
+    kept = size >= F.lit(k)
+    kept_size = F.when(kept, size)
+    # frequent-class keys: Spark's threshold + AQE pick the join strategy
     anon = clean.join(
-        gate_broadcast_keys(kept.select(*qi)), on=list(qi), how="left_semi"
+        sizes.filter(kept).select(*qi), on=list(qi), how="left_semi"
     ).select(*clean.columns)
     anon = track_cached(anon.persist())
 
-    n_orig = sizes.agg(F.coalesce(F.sum("class_size"), F.lit(0)).alias("__n_orig"))
-    n_anon = kept.agg(F.coalesce(F.sum("class_size"), F.lit(0)).alias("__n_anon"))
-    supp = n_orig.crossJoin(F.broadcast(n_anon)).select(
-        F.col("__n_orig").alias("n_orig"),
-        F.col("__n_anon").alias("n_anon"),
+    # no class survives → NULL sums: uniqueness and reid_risk stay NULL
+    # (NULL/NULL, never an ANSI 0/0)
+    metrics = sizes.agg(
+        *_suppression_cols(size, kept_size),
+        F.coalesce(F.min(kept_size), F.lit(0)).alias("min_class_size"),
+        F.coalesce(F.min(kept_size) >= k, F.lit(False)).alias("k_satisfied"),
         F.round(
-            (F.col("__n_orig") - F.col("__n_anon")) / F.col("__n_orig"), _ROUND_DP
-        ).alias("suppression_rate"),
-    )
-    kcheck = kept.agg(
-        F.coalesce(F.min("class_size"), F.lit(0)).alias("min_class_size"),
-        F.coalesce(F.min("class_size") >= k, F.lit(False)).alias("k_satisfied"),
-    )
-    uniq = kept.agg(
-        F.round(
-            F.sum(F.when(F.col("class_size") == 1, 1).otherwise(0)) / F.sum("class_size"),
+            F.sum(F.when(kept, F.when(size == 1, 1).otherwise(0))) / F.sum(kept_size),
             _ROUND_DP,
-        ).alias("uniqueness_rate")
+        ).alias("uniqueness_rate"),
+        F.round(F.count(kept_size) / F.sum(kept_size), _ROUND_DP).alias("reid_risk"),
+        _ncp_expr(
+            [F.countDistinct(c) for c in qi],
+            [F.countDistinct(F.when(kept, F.col(c))) for c in qi],
+        ).alias("ncp"),
     )
-    reid = kept.agg(
-        F.round(F.count(F.lit(1)) / F.sum("class_size"), _ROUND_DP).alias("reid_risk")
-    )
-    metrics = _one_row(supp, kcheck, uniq, reid, ncp(sizes, kept, qi))
     return {"anonymized": anon, "metrics": metrics}
 
 
@@ -134,25 +127,23 @@ def clustering_pipeline(
     # an MLlib model transform → always worth pinning.
     clustered = track_cached(clustered.persist())
 
-    sizes = class_sizes(clustered, ["cluster"])
-    kcheck = sizes.agg(
-        (F.min("class_size") >= k).alias("k_satisfied"),
+    # every metric but NCP from ONE aggregation over the cluster sizes:
+    # reid_risk telescopes to n_clusters / n_rows (operators.metrics.
+    # reid_risk), and the rows in clusters < k are those clusters' sizes
+    size = F.col("class_size")
+    n_rows = F.sum(size)
+    per_cluster = class_sizes(clustered, ["cluster"]).agg(
+        (F.min(size) >= k).alias("k_satisfied"),
         F.round(
-            F.sum(F.when(F.col("class_size") == 1, 1).otherwise(0)) / F.lit(n_clusters),
-            ROUND_DP,
+            F.sum(F.when(size == 1, 1).otherwise(0)) / F.lit(n_clusters), ROUND_DP
         ).alias("uniqueness_rate"),
-    )
-    risk = reid_risk(clustered, ["cluster"])
-    suppressed = with_class_size(clustered, ["cluster"], "__csize").agg(
+        F.round(F.count(F.lit(1)) / n_rows, ROUND_DP).alias("reid_risk"),
         F.round(
-            F.sum(F.when(F.col("__csize") < k, 1).otherwise(0)) / F.count(F.lit(1)),
-            ROUND_DP,
-        ).alias("suppression_rate")
+            F.sum(F.when(size < k, size).otherwise(0)) / n_rows, ROUND_DP
+        ).alias("suppression_rate"),
     )
     # NCP with the generalization table as the anonymized side (:85-88).
-    ncp_df = ncp(clustered, generalized, qi)
-
-    metrics = _one_row(kcheck, risk, suppressed, ncp_df)
+    metrics = per_cluster.crossJoin(F.broadcast(ncp(clustered, generalized, qi)))
     return {"anonymized": clustered, "generalization": generalized, "metrics": metrics}
 
 
@@ -241,55 +232,37 @@ def t_closeness_pipeline(
             .persist()
         )
     )
-    sizes = counts.groupBy(*eff_qi).agg(F.sum("__cnt").alias("__class_size"))
-    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*eff_qi)
-    # Verdict-key relations are worst-case rows/k keys — size-gated hint
-    # (gate_broadcast_keys) instead of a hard F.broadcast: counted once
-    # (the persisted relation then feeds both consumers below), broadcast
-    # only under spark.graft.broadcast.keyRowLimit, else AQE shuffled semi.
-    if mode == "reference":
-        ok = gate_broadcast_keys(big)  # SURVEY §3.4: as-written = k-filter only
-    else:
-        kcounts = counts.join(gate_broadcast_keys(big), on=eff_qi, how="left_semi")
-        ok = gate_broadcast_keys(
-            _emd_from_counts(kcounts, eff_qi, sensitive)
-            .filter(F.col("emd") <= F.lit(t))
-            .select(*eff_qi)
-        )
+    # the verdict keys feed post_counts, anon and the metrics row: persist
+    # them once; the join strategy is Spark's (threshold + AQE)
+    ok = track_cached(_verdict_keys(counts, eff_qi, sensitive, k, t, mode).persist())
     post_counts = track_cached(counts.join(ok, on=eff_qi, how="left_semi").persist())
     anon = track_cached(work.join(ok, on=eff_qi, how="left_semi").persist())
 
-    # metric definitions identical to suppression_rate / uniqueness_rate /
-    # t_violations (operators/metrics.py, operators/tcloseness.py), just
-    # sourced from the counts relation instead of fact rows.
-    n_orig = counts.agg(F.coalesce(F.sum("__cnt"), F.lit(0)).alias("__n_orig"))
-    n_anon = post_counts.agg(F.coalesce(F.sum("__cnt"), F.lit(0)).alias("__n_anon"))
-    supp = n_orig.crossJoin(F.broadcast(n_anon)).select(
-        F.col("__n_orig").alias("n_orig"),
-        F.col("__n_anon").alias("n_anon"),
+    # metric definitions identical to suppression_rate / uniqueness_rate
+    # (classes denominator) / ncp (operators/metrics.py), as ONE class-level
+    # aggregation: each class carries its size and a pass flag (NULL for a
+    # suppressed class), and every "after" metric is a conditional
+    # aggregate. NCP's per-column distincts over class tuples equal those
+    # over fact rows. No class passes → NULL sum over 0 classes: the
+    # uniqueness rate stays NULL (NULL/0, never an ANSI 0/0).
+    sizes = counts.groupBy(*eff_qi).agg(F.sum("__cnt").alias("class_size"))
+    flagged = sizes.join(ok.withColumn("__ok", F.lit(True)), on=eff_qi, how="left")
+    size, passed = F.col("class_size"), F.col("__ok")
+    kept_size = F.when(passed, size)
+    per_class = flagged.agg(
+        *_suppression_cols(size, kept_size),
         F.round(
-            (F.col("__n_orig") - F.col("__n_anon")) / F.col("__n_orig"), _ROUND_DP
-        ).alias("suppression_rate"),
-    )
-    post_sizes = post_counts.groupBy(*eff_qi).agg(F.sum("__cnt").alias("class_size"))
-    uniq = post_sizes.agg(
-        F.round(
-            F.sum(F.when(F.col("class_size") == 1, 1).otherwise(0)) / F.count(F.lit(1)),
+            F.sum(F.when(passed, F.when(size == 1, 1).otherwise(0))) / F.count(kept_size),
             _ROUND_DP,
-        ).alias("uniqueness_rate")
+        ).alias("uniqueness_rate"),
+        _ncp_expr(
+            [F.countDistinct(c) for c in eff_qi],
+            [F.countDistinct(F.when(passed, F.col(c))) for c in eff_qi],
+        ).alias("ncp"),
     )
-    viol = _emd_from_counts(post_counts, eff_qi, sensitive).agg(
-        F.sum(F.when(F.col("emd") > t, 1).otherwise(0)).alias("violations"),
-        F.count(F.lit(1)).alias("total_groups"),
-        F.round(
-            F.sum(F.when(F.col("emd") > t, 1).otherwise(0)) / F.count(F.lit(1)), _ROUND_DP
-        ).alias("violation_rate"),
-    )
-    # NCP over the counts relations, not fact rows: every distinct QI value
-    # appears in some class tuple, so per-column countDistinct is identical
-    # — the metrics row therefore needs NO fact access beyond the one
-    # counts aggregation (anon only materializes if the caller consumes it)
-    metrics = _one_row(supp, uniq, ncp(counts, post_counts, eff_qi), viol)
+    # t_violations' report, against the post-filter distribution
+    viol = _violation_row(_emd_from_counts(post_counts, eff_qi, sensitive), t)
+    metrics = per_class.crossJoin(F.broadcast(viol))
     return {"anonymized": anon, "metrics": metrics}
 
 

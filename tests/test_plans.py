@@ -63,21 +63,50 @@ def test_no_cartesian_product_anywhere(plans):
     assert offenders == []
 
 
+def _children(plan: str, node: str) -> list[str]:
+    """Subtree texts of the children of the first plan line matching the
+    regex ``node``, in plan order (for a BuildRight join: probe, build)."""
+
+    def depth(line: str) -> int:
+        m = re.match(r"^((?:   |:  )*)[+:]- ", line)
+        return len(m.group(1)) if m else -1
+
+    lines = plan.splitlines()
+    i = next(n for n, line in enumerate(lines) if re.search(node, line))
+    d = depth(lines[i])
+    out: list[list[str]] = []
+    for line in lines[i + 1 :]:
+        if depth(line) <= d:
+            break
+        if depth(line) == d + 3:
+            out.append([])
+        out[-1].append(line)
+    return ["\n".join(sub) for sub in out]
+
+
 def test_flagship_single_fact_shuffle(plans):
-    """c01 = bin + class-frequency agg + broadcast semi join. The
-    frequent-key relation is persisted by the size gate, so the explain
-    text embeds its (already materialized) cached plan — the QI-tuple
-    aggregation with its ONE hash exchange lives there; the LIVE probe
-    plan (everything above the InMemoryRelation) must have ZERO hash
-    exchanges: fact rows reach the output without any shuffle."""
+    """c01 = bin + class-frequency agg + broadcast semi join. The plan has
+    exactly ONE hash exchange — the QI-tuple aggregation — and it lives
+    inside the broadcast build subtree of the semi join; the fact-side
+    probe has none: fact rows reach the output without any shuffle."""
     p = plans["c01_k_anonymize_suppress"]
-    live, _, cached = p.partition("InMemoryRelation")
-    assert cached, "frequent-key relation no longer persisted by the gate"
-    assert len(re.findall(r"Exchange hashpartitioning", live)) == 0
-    assert "BroadcastExchange" in live
-    assert "BroadcastHashJoin" in live and "LeftSemi" in live
-    # the one QI-tuple shuffle lives inside the cached key-relation plan
-    assert "Exchange hashpartitioning" in cached
+    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
+    probe, build = _children(p, r"BroadcastHashJoin .*LeftSemi, BuildRight")
+    assert build.lstrip(" :+-").startswith("BroadcastExchange HashedRelationBroadcastMode")
+    assert "Exchange hashpartitioning" in build
+    assert "Exchange hashpartitioning" not in probe
+
+
+def test_naive_metrics_row_is_one_aggregation(plans):
+    """pipe_naive_metrics: the whole metrics row is one aggregation over
+    the persisted class-size relation — no join node above its scan, so
+    per-metric one-row aggregates cross-joined together cannot grow back.
+    (Below the scan sits the registry input's own binning, whose min/max
+    cross join is not part of the pipeline.)"""
+    p = plans["pipe_naive_metrics"]
+    live, _, cached = p.partition("InMemoryTableScan")
+    assert cached, "class-size relation no longer persisted"
+    assert "Join" not in live and "CartesianProduct" not in live
 
 
 def test_join_back_broadcasts_frequent_classes(plans):
@@ -99,15 +128,12 @@ def test_tcloseness_filter_broadcasts_class_verdicts(plans):
 
 
 def test_class_key_broadcast_hint_is_size_gated(spark, sf001):
-    """The k-anonymity / t-closeness class-key joins hint broadcast ONLY
-    when the key relation is under spark.graft.broadcast.keyRowLimit —
-    above the limit the hint is withheld and the plan falls back to a
-    shuffled semi join (AQE skew-splittable) instead of a forced
-    broadcast that would OOM the driver on a rows/k-key relation at
-    100 TB. Gate both flavors: BHJ under the limit (the module-level
-    `plans` gates above), shuffled LeftSemi with the limit forced to 0
-    here (autoBroadcastJoinThreshold disabled so Spark's own size
-    estimate can't re-introduce a broadcast at toy scale), with result
+    """The k-anonymity / t-closeness class-key joins carry no broadcast
+    hint: Spark's own size threshold (plus AQE at runtime) picks the
+    strategy. A key relation is worst-case rows/k keys, so a forced
+    broadcast would OOM the driver at 100 TB. Gate both flavors: BHJ under
+    the threshold (the module-level `plans` gates above), shuffled
+    LeftSemi with autoBroadcastJoinThreshold disabled here, with result
     counts identical under both strategies."""
     from dbms_data_anonymity_differential_privacy_spark import queries_registry as qr
 
@@ -117,9 +143,7 @@ def test_class_key_broadcast_hint_is_size_gated(spark, sf001):
         for n in ("c01_k_anonymize_suppress", "c04_t_closeness_strict")
     }
     spark.catalog.clearCache()
-    prev_limit = spark.conf.get("spark.graft.broadcast.keyRowLimit", None)
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.graft.broadcast.keyRowLimit", "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         for name, n_rows in baseline.items():
@@ -129,16 +153,12 @@ def test_class_key_broadcast_hint_is_size_gated(spark, sf001):
             # relations (support/global distribution) — the gate applies
             # to the CLASS-KEY semi joins only.
             assert not re.search(r"BroadcastHashJoin.*LeftSemi", p), (
-                f"{name}: class-key semi join still broadcast at limit 0"
+                f"{name}: class-key semi join still broadcast with the threshold off"
             )
             assert "LeftSemi" in p, f"{name}: semi join vanished"
-            assert df.count() == n_rows, f"{name}: gated plan changed the result"
+            assert df.count() == n_rows, f"{name}: shuffled plan changed the result"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        if prev_limit is None:
-            spark.conf.unset("spark.graft.broadcast.keyRowLimit")
-        else:
-            spark.conf.set("spark.graft.broadcast.keyRowLimit", prev_limit)
         spark.catalog.clearCache()
 
 

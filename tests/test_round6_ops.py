@@ -894,32 +894,14 @@ def test_jaccard_adaptive_switch_on_zipfian_boilerplate(spark):
     assert "array_intersect" not in plan(ngram_jaccard_pairs(benign, threshold=0.5, n=3))
 
 
-def test_gate_broadcast_keys_contract(spark, tmp_path):
-    """Size-gate unit contract: hinted under the limit, un-hinted above,
-    streaming passthrough, and the partition-count probe memoizes by
-    semantic hash (no repeated plan->RDD conversions in composition
-    loops)."""
+def test_partition_count_memoizes_by_semantic_hash(spark):
+    """The partition-count probe memoizes by semantic hash (no repeated
+    plan->RDD conversions in composition loops)."""
     from dbms_data_anonymity_differential_privacy_spark.operators.util import (
         _PARTITION_COUNT_CACHE,
         _partition_count,
-        gate_broadcast_keys,
     )
 
-    keys = spark.range(100).select(F.col("id").alias("k"))
-    hinted = gate_broadcast_keys(keys, row_limit=1000)
-    unhinted = gate_broadcast_keys(keys, row_limit=10)
-    # the hint lives in the logical plan as a ResolvedHint node
-    assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
-    assert "hint" not in unhinted._jdf.queryExecution().logical().toString().lower()
-
-    # streaming relations pass through untouched (no count possible)
-    sdir = tmp_path / "s"
-    sdir.mkdir()
-    spark.range(5).write.mode("overwrite").parquet(str(sdir / "p"))
-    stream = spark.readStream.schema("id long").parquet(str(sdir / "p"))
-    assert gate_broadcast_keys(stream) is stream
-
-    # memoized probe: same semantic plan -> one cache entry, stable value
     _PARTITION_COUNT_CACHE.clear()
     df = spark.range(0, 1000, 1, 4)
     n1 = _partition_count(df)

@@ -1,6 +1,6 @@
-"""Round-7 operator tests: gate_broadcast_keys lifecycle + hint escape
-hatch, the session cache ledger, self-blocking semantic dedup, the
-distributed-PageRank round batching, the leakage-safe-split exact-dup
+"""Round-7 operator tests: the session cache ledger (zero residue after
+release), all-suppressed pipeline metrics, self-blocking semantic dedup,
+the distributed-PageRank round batching, the leakage-safe-split exact-dup
 guarantee, and the streaming private-export composite.
 """
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from dbms_data_anonymity_differential_privacy_spark import queries_registry as qr
 from dbms_data_anonymity_differential_privacy_spark.operators.util import (
     _CACHE_LEDGER,
-    gate_broadcast_keys,
     release_cached_relations,
 )
 
@@ -23,70 +22,79 @@ def _persistent_ids(spark) -> set[int]:
 
 
 # ---------------------------------------------------------------------------
-# gate_broadcast_keys: hint escape hatch + cache-ledger ownership
+# Cache-ledger ownership and all-suppressed metrics rows
 # ---------------------------------------------------------------------------
 
 
-def test_gate_hint_branches_are_lazy_and_unpersisted(spark):
-    """hint='broadcast'/'shuffle' must not run a job (no eager count) and
-    must not persist: a keys relation that EXPLODES on evaluation passes
-    through construction untouched."""
-    bomb = spark.range(1).select(
-        F.assert_true(F.lit(False)).alias("x"), F.col("id").alias("k")
-    )
-    n_ledger = len(_CACHE_LEDGER)
-    gate_broadcast_keys(bomb, hint="broadcast")  # would raise if counted
-    gate_broadcast_keys(bomb, hint="shuffle")
-    assert len(_CACHE_LEDGER) == n_ledger  # nothing persisted/tracked
-
-    with pytest.raises(ValueError):
-        gate_broadcast_keys(bomb, hint="bogus")
-
-
-def test_gate_hint_broadcast_forces_bhj(spark):
-    keys = spark.range(10).select(F.col("id").alias("k"))
-    fact = spark.range(1000).select((F.col("id") % 10).alias("k"), "id")
-    j = fact.join(gate_broadcast_keys(keys, hint="broadcast"), on="k", how="left_semi")
-    plan = j._jdf.queryExecution().sparkPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_gate_auto_tracks_and_release_unpersists(spark):
-    release_cached_relations()  # drain entries left by other tests
-    before = _persistent_ids(spark)
-    keys = spark.range(64).select(F.col("id").alias("k"))
-    gate_broadcast_keys(keys, row_limit=1000)
-    assert _persistent_ids(spark) - before, "auto mode should persist"
-    released = release_cached_relations()
-    assert released >= 1
-    # no NEW residue survives (relations persisted by earlier tests and
-    # never tracked are not this contract's to release)
-    assert not (_persistent_ids(spark) - before)
-    assert len(_CACHE_LEDGER) == 0
-
-
-def test_tcloseness_pipeline_end_to_end_zero_cache_residue(spark, sf0001):
-    """The ownership contract the r6 verdict asked for: after running the
-    full t-closeness pipeline end to end and calling
-    release_cached_relations(), NO persisted relation the engine created
-    survives — composition loops in long-lived sessions cannot
-    accumulate residue."""
+@pytest.mark.parametrize(
+    "query",
+    [
+        "pipe_naive_metrics",
+        "pipe_tcloseness_metrics",
+        "c01_k_anonymize_suppress",
+        "c04_t_closeness_strict",
+        "c04_class_emd",
+    ],
+)
+def test_end_to_end_zero_cache_residue(spark, sf0001, query):
+    """The ownership contract: after running a k-anonymity / t-closeness
+    query end to end and calling release_cached_relations(), NO persisted
+    relation the engine created survives — composition loops in
+    long-lived sessions cannot accumulate residue."""
     release_cached_relations()  # start clean of other tests' entries
     before = _persistent_ids(spark)
-    out = qr.QUERIES["pipe_tcloseness_metrics"](spark, sf0001)
-    rows = out.collect()
-    assert len(rows) == 1
+    qr.QUERIES[query](spark, sf0001).collect()
     release_cached_relations()
     leaked = _persistent_ids(spark) - before
     assert not leaked, f"persisted residue after release: {leaked}"
+    assert len(_CACHE_LEDGER) == 0
 
 
-def test_naive_pipeline_end_to_end_zero_cache_residue(spark, sf0001):
+def _census(spark):
+    rows = [(20 + i % 7, ("F", "M")[i % 2], ("<=50K", ">50K")[i % 3 == 0]) for i in range(40)]
+    return spark.createDataFrame(rows, "age int, sex string, income string")
+
+
+def test_naive_pipeline_all_suppressed_metrics(spark):
+    """k above every class size suppresses the whole release: the metrics
+    row reports it without an ANSI divide-by-zero, NULL where a rate has
+    no class to average over."""
+    from dbms_data_anonymity_differential_privacy_spark import pipelines
+
+    out = pipelines.naive_suppression_pipeline(_census(spark), ["age", "sex"], k=1000)
+    row = out["metrics"].collect()[0].asDict()
     release_cached_relations()
-    before = _persistent_ids(spark)
-    qr.QUERIES["pipe_naive_metrics"](spark, sf0001).collect()
+    assert row == {
+        "n_orig": 40,
+        "n_anon": 0,
+        "suppression_rate": 1.0,
+        "min_class_size": 0,
+        "k_satisfied": False,
+        "uniqueness_rate": None,
+        "reid_risk": None,
+        "ncp": 1.0,
+    }
+
+
+def test_tcloseness_pipeline_all_suppressed_metrics(spark):
+    from dbms_data_anonymity_differential_privacy_spark import pipelines
+
+    out = pipelines.t_closeness_pipeline(
+        _census(spark), ["age", "sex"], "income", k=1000, bin_spec={"age": 3}
+    )
+    row = out["metrics"].collect()[0].asDict()
+    assert out["anonymized"].count() == 0
     release_cached_relations()
-    assert not (_persistent_ids(spark) - before)
+    assert row == {
+        "n_orig": 40,
+        "n_anon": 0,
+        "suppression_rate": 1.0,
+        "uniqueness_rate": None,
+        "ncp": 1.0,
+        "violations": None,
+        "total_groups": 0,
+        "violation_rate": None,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -375,30 +383,6 @@ def test_private_export_stream_equals_batch(spark, sf0001, tmp_path):
     finally:
         q.stop()
     assert got == batch
-
-
-def test_gate_hint_matches_auto_semantics(spark, sf0001):
-    """All three hints produce the same ROWS for the naive k-anon join
-    (the hint changes the physical strategy only)."""
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    cust = load_table(spark, sf0001, "customer")
-    qi = ["c_mktsegment", "c_nationkey"]
-    sizes = cust.groupBy(*qi).agg(F.count(F.lit(1)).alias("n"))
-    keys = sizes.filter(F.col("n") >= 5).select(*qi)
-
-    def run(hint):
-        return sorted(
-            cust.join(gate_broadcast_keys(keys, hint=hint), on=qi, how="left_semi")
-            .groupBy(*qi)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-
-    base = run("auto")
-    assert run("broadcast") == base
-    assert run("shuffle") == base
-    release_cached_relations()
 
 
 # ---------------------------------------------------------------------------
