@@ -60,12 +60,8 @@ HEADLINE = [
     "x17_session_errors",
     "x18_contamination",
     "x19_vocab",
-    "x20_bm25_search",
-    "x21_pack_chunks",
     "x22_group_percentiles",
     "x23_bigram_lm",
-    "x26_mixture_rates",
-    "x27_gopher_quality",
     "x28_incremental_admit",
     "x29_bpe_tokens",
     "x31_fuzzy_pairs",
@@ -78,7 +74,6 @@ HEADLINE = [
     "x38_vgh",
     "x39_recursive_cl",
     "x40_span_stats",
-    "x41_image_pairs",
     "x43_profile",
     "x44_centroid_sums",
     "x45_quantize",
@@ -117,11 +112,7 @@ HEADLINE = [
     "x80_mann_whitney",
     "x81_knn_join",
     "x82_quality_dedup",
-    "x83_bm25_many",
     "x84_stratified_split",
-    "x85_domain_quality",
-    "x85_domain_gate",
-    "x86_temperature_sample",
     "x87_rolling_anomaly",
     "x88_cusum",
     "x89_set_union_exact",
@@ -130,8 +121,6 @@ HEADLINE = [
     "x92_user_growth",
     "x94_step_latency",
     "x95_zorder",
-    "pipe_private_export",
-    "pipe_private_export_stream",
     "x98_session_impact",
     "x99_tfidf_topk",
     "x100_qi_search",
@@ -145,7 +134,6 @@ HEADLINE = [
     "x105_pivot_release",
     "x106_m_invariance",
     "x107_funnel_windowed",
-    "pipe_corpus_datasheet",
     "x108_ks_test",
     "x109_spearman",
     "x110_anova",
@@ -153,7 +141,6 @@ HEADLINE = [
     "x113_source_overlap",
     "x114_dp_heatmap_exact",
     "x115_weighted_median",
-    "x116_top_p",
     "x117_oov_rate",
     "x119_interp_gapfill",
     "x120_burstiness",
@@ -162,18 +149,14 @@ HEADLINE = [
     "x123_path_trigrams",
     "x124_decay_attribution",
     "x111_gini",
-    "x96_media_curation",
     "x97_delta_presence",
     "x81_knn_join_arrow",
     "x64_mutual_information",
-    "pipe_event_analytics",
-    "pipe_training_export",
     "x125_scd2",
     "x126_pagerank",
     "x127_anatomy",
     "x128_zipf",
     "x129_bloom",
-    "x130_chunks",
     "x131_containment",
     "x132_negative_samples",
     "x133_hard_negatives",
@@ -184,7 +167,6 @@ HEADLINE = [
     "x138_triangles",
     "x139_hitk",
     "x140_retrieval_eval",
-    "x141_rrf_fuse",
     "x142_acf",
     "x143_mann_kendall",
     "x144_target_encode",
@@ -197,7 +179,6 @@ HEADLINE = [
     "x151_assortativity",
     "x152_powerlaw",
     "x153_skyline",
-    "x154_dsir_weights",
     "x155_adamic_adar",
     "x156_kruskal_wallis",
     "x157_cliffs_delta",
@@ -214,7 +195,6 @@ HEADLINE = [
     "x168_sequential_ab",
     "x169_delete_plan",
     "x170_join_cardinality",
-    "pipe_graph_insights",
     "x171_kcenter",
     "x172_feature_hashing",
     "x01_dp_noise_moments",
@@ -225,7 +205,6 @@ HEADLINE = [
     "x126_pagerank_dist",
     "x160_label_prop_dist",
     "x166_bfs_dist",
-    "x173_linear_quality",
     "x174_leakage_safe_split",
     "x175_semantic_dedup",
     "x175_semantic_dedup_auto",
@@ -240,19 +219,16 @@ HEADLINE = [
     "x184_good_turing",
     "x185_heaps_fit",
     "x186_stream_drift",
-    "x187_gating_curve",
     "x188_markov_stationary",
     "x189_langid_eval",
     "x190_pmi_collocations",
     "x191_cohens_kappa",
-    "x192_calibration",
     "x193_parity",
     "x194_holt",
     "x195_local_clustering",
     "x196_hits",
     "x197_logrank",
     "x198_ktruss",
-    "x199_packing_efficiency",
     "x200_brown_forsythe",
     "x201_seasonal_decompose",
     "x202_hll_distinct",
@@ -287,13 +263,11 @@ HEADLINE = [
     "x230_ljung_box",
     "x231_neyman_allocation",
     "x232_count_min",
-    "x233_boilerplate",
     "x234_minhash_estimate",
     "x235_anderson_ksamp",
     "x236_theil_u",
     "x237_msttr",
     "x238_line_dup_profile",
-    "x239_dedup_survivor_bias",
     "x240_vocab_coverage",
     "x241_near_dup_plan",
     "x38_vgh_min_level",

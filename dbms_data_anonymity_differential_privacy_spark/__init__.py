@@ -5,7 +5,7 @@ A Spark-first rebuild of the capabilities of the reference study
 suppression, clustering-based anonymization, t-closeness filtering,
 privacy/utility metrics — plus the north-star extensions: differential
 privacy on aggregates, deduplication, similarity search, text analysis,
-multimodal column plumbing, and streaming anonymization.
+and streaming anonymization.
 
 Everything is expressed against the DataFrame API so Catalyst handles
 planning/pushdown, and designed for a 1000-executor / 100 TB deployment:
@@ -100,11 +100,6 @@ from dbms_data_anonymity_differential_privacy_spark.operators.sampling import (
     stratified_sample_n,
     stratified_split,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-    pack_concat_chunks,
-    packing_efficiency,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk, bm25_topk_many
 from dbms_data_anonymity_differential_privacy_spark.streaming.audience import (
     windowed_distinct_users_batch,
     windowed_distinct_users_stream,
@@ -129,19 +124,6 @@ from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_l
 from dbms_data_anonymity_differential_privacy_spark.operators.clean import (
     clean_text,
     filter_boilerplate_lines,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.mixing import (
-    apply_mixture,
-    temperature_rates,
-    temperature_sample,
-    mixture_rates,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-    quality_gating_curve,
-    domain_gate,
-    domain_quality_report,
-    gopher_quality,
-    linear_quality_score,
 )
 from dbms_data_anonymity_differential_privacy_spark.operators.bpe import bpe_tokenize, bpe_train
 from dbms_data_anonymity_differential_privacy_spark.operators.linkage import (
@@ -170,20 +152,12 @@ from dbms_data_anonymity_differential_privacy_spark.operators.synth import (
     dp_synthesize,
     dp_synthesize_chain,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-    audio_fingerprints,
-    audio_near_dup_pairs,
-    image_dhash,
-    image_near_dup_pairs,
-    media_curation_stats,
-)
 from dbms_data_anonymity_differential_privacy_spark.operators.utility import utility_accuracy
 from dbms_data_anonymity_differential_privacy_spark import pipelines
 from dbms_data_anonymity_differential_privacy_spark.sources.writers import (
     write_release,
     write_bucketed,
     write_adult_csv,
-    write_training_shards,
 )
 from dbms_data_anonymity_differential_privacy_spark.operators.profile import profile_columns
 from dbms_data_anonymity_differential_privacy_spark.operators.embeddings import (
@@ -288,10 +262,6 @@ from dbms_data_anonymity_differential_privacy_spark.streaming.anomaly import (
     rolling_anomaly_stream,
 )
 from dbms_data_anonymity_differential_privacy_spark.streaming.funnel import funnel_stateful
-from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
-    private_export_batch,
-    private_export_stream,
-)
 from dbms_data_anonymity_differential_privacy_spark.operators.util import release_cached_relations
 
 __all__ = [
@@ -329,7 +299,6 @@ __all__ = [
     "dedup_exact",
     "dp_noise_moments",
     "leakage_safe_split",
-    "linear_quality_score",
     "semantic_dedup",
     "dedup_lines_corpus",
     "random_project",
@@ -354,7 +323,6 @@ __all__ = [
     "logrank_test",
     "brown_forsythe",
     "seasonal_decompose_dow",
-    "packing_efficiency",
     "cramers_v",
     "cochran_armitage",
     "ipw_ate",
@@ -378,7 +346,6 @@ __all__ = [
     "friedman_test",
     "tost_equivalence",
     "dp_histogram_consistent",
-    "quality_gating_curve",
     "drift_windows_batch",
     "drift_windows_stream",
     "reference_counts",
@@ -399,9 +366,6 @@ __all__ = [
     "embedding_near_dup_pairs",
     "embedding_dedup",
     "cosine_pairs_topm",
-    "bm25_topk",
-    "bm25_topk_many",
-    "pack_concat_chunks",
     "ann_topk_lsh",
     "ivf_index",
     "ivf_topk",
@@ -415,13 +379,6 @@ __all__ = [
     "bigram_lm_scores",
     "clean_text",
     "filter_boilerplate_lines",
-    "mixture_rates",
-    "apply_mixture",
-    "temperature_rates",
-    "temperature_sample",
-    "gopher_quality",
-    "domain_gate",
-    "domain_quality_report",
     "incremental_admit",
     "repeated_span_stats",
     "remove_repeated_spans",
@@ -442,16 +399,10 @@ __all__ = [
     "apply_vgh",
     "min_level_for_k",
     "utility_accuracy",
-    "image_dhash",
-    "image_near_dup_pairs",
-    "media_curation_stats",
-    "audio_fingerprints",
-    "audio_near_dup_pairs",
     "pipelines",
     "write_release",
     "write_bucketed",
     "write_adult_csv",
-    "write_training_shards",
     "profile_columns",
     "quantize_embeddings",
     "dequantize",
@@ -490,8 +441,6 @@ __all__ = [
     "psi_drift_bins",
     "dp_covariance",
     "funnel_stateful",
-    "private_export_batch",
-    "private_export_stream",
     "release_cached_relations",
     "rolling_anomaly_stateful",
     "rolling_anomaly_stream",

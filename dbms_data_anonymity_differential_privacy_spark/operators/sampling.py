@@ -154,10 +154,10 @@ def assign_shards(
       shard is a content-derived pseudo-random permutation, so
       sequentially-read shards still deliver i.i.d.-looking batches.
 
-    Map-only (no shuffle here — the WRITE repartitions by shard; see
-    ``sources.writers.write_training_shards``). Re-running on a grown
-    corpus never moves an existing row to a different shard or changes its
-    sort key: per-row decisions only.
+    Map-only (no shuffle here — a writer wanting one sorted file per
+    shard repartitions by ``shard`` and sorts within it by ``sort_key``).
+    Re-running on a grown corpus never moves an existing row to a
+    different shard or changes its sort key: per-row decisions only.
     """
     if not 1 <= n_shards <= 1 << 20:
         raise ValueError("n_shards must be in [1, 2^20]")  # keeps hash*n in int64

@@ -7,34 +7,7 @@ import threading
 from collections import OrderedDict
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def nondet_true() -> Column:
-    """An always-true boolean Catalyst must treat as nondeterministic.
-
-    AND-ing this onto a computed per-row verdict column pins a caller's
-    ``filter(verdict)`` ABOVE the projection that computes it:
-    ``PushPredicateThroughNonJoin`` only pushes a filter through a
-    Project whose fields are ALL deterministic, and would otherwise
-    substitute the verdict's aliases downward — restating the whole
-    (often interpreted, CodegenFallback) expression chain once per
-    predicate term below the fan-out exchange. Measured on
-    pipe_private_export's Gopher gate at sf0.1: the pushed-down form
-    re-evaluated the clean+redact+tokenize chain ~8x per row in a
-    single-threaded pre-shuffle stage, 3.4s vs 0.4s.
-
-    ``size(shuffle(array(1))) > 0`` specifically: ``shuffle`` is
-    nondeterministic but allowed in streaming plans (unlike
-    ``monotonically_increasing_id``), and the optimizer cannot fold the
-    comparison (Spark 4 DOES fold bounded comparisons on ``rand()``,
-    e.g. ``rand() > -1`` simplifies to true and the barrier vanishes —
-    measured). Per-row cost is one 1-element array shuffle: noise.
-
-    Value and schema are unchanged; only alias substitution is blocked.
-    """
-    return F.size(F.shuffle(F.array(F.lit(1)))) > 0
+from pyspark.sql import DataFrame
 
 
 # Session-scoped ledger of every relation the engine persists on the

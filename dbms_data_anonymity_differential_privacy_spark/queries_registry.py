@@ -1533,35 +1533,6 @@ def x06_dp_stream_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dp_windowed_count_batch(ev, epsilon=1.0, window="1 hour", seed=42)
 
 
-@query("x07_multimodal_features")
-def x07_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_media,
-        extract_features,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return extract_features(documents_as_media(docs))
-
-
-@query("x07_multimodal_pixels")
-def x07_multimodal_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real image path end-to-end: docs → 16x16 BMP blobs → nearest-neighbor
-    resize to 8x8 (decode + resample + re-encode) → pixel features from the
-    resized BMPs. Pure-Python codecs in Arrow-batched mapInPandas
-    (operators/multimodal.py); rows-only (binary pipeline, not
-    SQL-expressible)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_bmp,
-        extract_features,
-        resize_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = documents_as_bmp(docs, width=16, height=16)
-    return extract_features(resize_media(media, width=8, height=8))
-
-
 @query(
     "c02_k_anonymity_audit",
     f"""
@@ -1722,56 +1693,6 @@ def pipe_tcloseness_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         bin_spec={"o_totalprice": 10},
         mode="strict",
     )["metrics"]
-
-
-@query(
-    "pipe_corpus_curation",
-    f"""
-    WITH fp AS (SELECT *, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS __fp
-                FROM documents),
-    d AS (SELECT doc_id, text FROM fp
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY __fp ORDER BY doc_id) = 1),
-    f AS (SELECT doc_id,
-            CASE WHEN TRIM(text) = '' THEN 0
-                 ELSE len(string_split_regex(TRIM(text), '\\s+')) END AS n_tokens,
-            ROUND(LEAST(LENGTH(text) / 200.0, 1.0)
-                  * (1.0 - CASE WHEN LENGTH(text) > 0
-                      THEN LENGTH(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))
-                           / LENGTH(text)
-                      ELSE 1.0 END)
-                  * LEAST(0.5 + len(regexp_extract_all(text, '{_EN_SQL}')) / 10.0, 1.0),
-              9) AS quality,
-            len(regexp_extract_all(lower(text), '\\b(the|and|of|to|in)\\b')) AS s_en,
-            len(regexp_extract_all(lower(text), '\\b(der|die|und|das|ist)\\b')) AS s_de,
-            len(regexp_extract_all(lower(text), '\\b(le|la|les|et|est)\\b')) AS s_fr,
-            len(regexp_extract_all(lower(text), '\\b(el|los|las|es|una)\\b')) AS s_es,
-            len(regexp_extract_all(lower(text), '[一-鿿]')) AS s_zh
-          FROM d),
-    p AS (SELECT *,
-            CASE WHEN GREATEST(s_en, s_de, s_fr, s_es, s_zh) = 0 THEN 'und'
-                 WHEN s_en = GREATEST(s_en, s_de, s_fr, s_es, s_zh) THEN 'en'
-                 WHEN s_de = GREATEST(s_en, s_de, s_fr, s_es, s_zh) THEN 'de'
-                 WHEN s_fr = GREATEST(s_en, s_de, s_fr, s_es, s_zh) THEN 'fr'
-                 WHEN s_es = GREATEST(s_en, s_de, s_fr, s_es, s_zh) THEN 'es'
-                 ELSE 'zh' END AS lang_pred
-          FROM f),
-    k AS (SELECT * FROM p WHERE lang_pred IN ('en','de','fr','es','zh')
-          AND quality >= 0.05 AND n_tokens BETWEEN 5 AND 100000)
-    SELECT lang_pred, COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           ROUND(AVG(quality), 9) AS avg_quality
-    FROM k GROUP BY 1
-    """,
-)
-def pipe_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data curation composite (pipelines.corpus_curation_pipeline):
-    fingerprint dedup -> text features -> lang/quality/length gates ->
-    per-language stats. One dedup shuffle + one map-only feature pass +
-    one rollup; oracle-checked end to end."""
-    from dbms_data_anonymity_differential_privacy_spark import pipelines
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pipelines.corpus_curation_pipeline(docs)["stats"]
 
 
 @query("pipe_clustering_metrics")
@@ -2394,120 +2315,6 @@ def x19_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_stats(docs, top_k=50)
 
 
-def _bm25_oracle_sql(terms: list[str], k: int, k1: float, b: float) -> str:
-    """DuckDB twin of operators/search.bm25_topk for literal query terms.
-
-    Mirrors the engine expression shape op-for-op: list_filter tf counts,
-    one exact-integer division for avgdl, ln-idf via the same C libm the
-    driver's math.log binds, fixed left-associative term sum, ROUND 6.
-    """
-    tf_cols = ",\n                 ".join(
-        f"len(list_filter(toks, x -> x = '{t}')) AS tf{i}" for i, t in enumerate(terms)
-    )
-    df_cols = ", ".join(
-        f"SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(terms))
-    )
-    idf = lambda i: f"ln((s.n - f.df{i} + 0.5) / (f.df{i} + 0.5) + 1.0)"  # noqa: E731
-    part = (
-        lambda i: f"(tf{i} * ({k1} + 1.0)) / "
-        f"(tf{i} + {k1} * ((1.0 - {b}) + {b} * dl / s.avgdl))"
-    )  # noqa: E731
-    score = " + ".join(f"{idf(i)} * {part(i)}" for i in range(len(terms)))
-    any_hit = " OR ".join(f"tf{i} > 0" for i in range(len(terms)))
-    return f"""
-    WITH t AS (SELECT doc_id,
-                      list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                  x -> x <> '') AS toks
-               FROM documents),
-    d AS (SELECT doc_id, len(toks) AS dl,
-                 {tf_cols}
-          FROM t),
-    s AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM d),
-    f AS (SELECT {df_cols} FROM d)
-    SELECT doc_id, ROUND({score}, 6) AS score
-    FROM d CROSS JOIN s CROSS JOIN f
-    WHERE {any_hit}
-    ORDER BY score DESC, doc_id LIMIT {k}
-    """
-
-
-def _bm25_many_oracle_sql(
-    queries: dict[int, list[str]], k: int, k1: float, b: float
-) -> str:
-    """DuckDB twin of operators/search.bm25_topk_many: same distinct-term
-    tf columns, same two corpus-stat CTEs, one UNION ALL branch per query
-    (score = left-associative sum in the QUERY's term order, matching the
-    engine's expression construction), per-query ROW_NUMBER cap."""
-    all_terms = sorted({t for ts in queries.values() for t in ts})
-    t_idx = {t: i for i, t in enumerate(all_terms)}
-    tf_cols = ",\n                 ".join(
-        f"len(list_filter(toks, x -> x = '{t}')) AS tf{i}" for t, i in t_idx.items()
-    )
-    df_cols = ", ".join(
-        f"SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(all_terms))
-    )
-    idf = lambda i: f"ln((s.n - f.df{i} + 0.5) / (f.df{i} + 0.5) + 1.0)"  # noqa: E731
-    part = (
-        lambda i: f"(tf{i} * ({k1} + 1.0)) / "
-        f"(tf{i} + {k1} * ((1.0 - {b}) + {b} * dl / s.avgdl))"
-    )  # noqa: E731
-    branches = []
-    for qid, terms in sorted(queries.items()):
-        score = " + ".join(f"{idf(t_idx[t])} * {part(t_idx[t])}" for t in terms)
-        hit = " OR ".join(f"tf{t_idx[t]} > 0" for t in terms)
-        branches.append(
-            f"SELECT CAST({qid} AS INTEGER) AS query_id, doc_id,\n"
-            f"       ROUND({score}, 6) AS score\n"
-            f"FROM d CROSS JOIN s CROSS JOIN f WHERE {hit}"
-        )
-    union = "\n    UNION ALL\n    ".join(branches)
-    return f"""
-    WITH t AS (SELECT doc_id,
-                      list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                  x -> x <> '') AS toks
-               FROM documents),
-    d AS (SELECT doc_id, len(toks) AS dl,
-                 {tf_cols}
-          FROM t),
-    s AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM d),
-    f AS (SELECT {df_cols} FROM d),
-    scored AS ({union}),
-    r AS (SELECT query_id, doc_id, score,
-                 CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
-          FROM scored)
-    SELECT query_id, doc_id, score, rnk FROM r WHERE rnk <= {k}
-    """
-
-
-_BM25_TERMS = ["hash", "join", "vector"]
-_BM25_QUERIES = {1: ["hash", "join"], 2: ["vector", "scan"], 3: ["filter"]}
-
-
-@query("x83_bm25_many", _bm25_many_oracle_sql(_BM25_QUERIES, k=8, k1=1.2, b=0.75))
-def x83_bm25_many(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X83 — batched BM25 retrieval (operators/search.py bm25_topk_many):
-    every query scored in ONE map-only corpus scan, per-query top-k via
-    map-side WindowGroupLimit — the lexical sibling of the x81 k-NN
-    join."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk_many
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk_many(docs, _BM25_QUERIES, k=8)
-
-
-@query("x20_bm25_search", _bm25_oracle_sql(_BM25_TERMS, k=10, k1=1.2, b=0.75))
-def x20_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X20 — BM25 keyword search over the corpus (operators/search.py):
-    map-only tf/dl folds + two scalar corpus stats + TakeOrdered top-k."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, _BM25_TERMS, k=10)
-
-
 @query(
     "x22_group_percentiles",
     """
@@ -2527,39 +2334,6 @@ def x22_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return group_percentiles(ev, ["event_type"], "value")
-
-
-@query(
-    "x21_pack_chunks",
-    """
-    WITH t AS (SELECT doc_id,
-                      CAST(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                           x -> x <> '')) AS BIGINT) AS n_tokens
-               FROM documents),
-    c AS (SELECT doc_id, n_tokens,
-                 CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                      AS BIGINT) AS tok_start
-          FROM t)
-    SELECT doc_id, n_tokens, tok_start,
-           CASE WHEN n_tokens > 0 THEN tok_start // 512 END AS chunk_first,
-           CASE WHEN n_tokens > 0 THEN (tok_start + n_tokens - 1) // 512 END AS chunk_last,
-           CAST(CASE WHEN n_tokens > 0
-                     THEN (tok_start + n_tokens - 1) // 512 - tok_start // 512 + 1
-                     ELSE 0 END AS BIGINT) AS n_chunks
-    FROM c
-    """,
-)
-def x21_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X21 — concat-and-chunk sequence packing (operators/packing.py).
-    The oracle is the literal single-reducer SUM OVER (ORDER BY); the
-    engine runs the two-pass distributed prefix sum (range partition →
-    per-partition offsets → partitioned window) — exactly the
-    independence the gate wants, and all-integer so bit-exact."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import pack_concat_chunks
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_concat_chunks(docs, seq_len=512)
 
 
 @query(
@@ -2690,31 +2464,6 @@ def x25_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Target corpus mixture for x26 ('es' present in data but untargeted →
-# rate 0; shares sum to 1).
-_MIX_TARGET = {"en": 0.4, "zh": 0.3, "de": 0.2, "fr": 0.1}
-
-
-def _mixture_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import mixture_rates_sql
-
-    return mixture_rates_sql("documents", "lang", _MIX_TARGET)
-
-
-@query("x26_mixture_rates", _mixture_sql())
-def x26_mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X26 — corpus mixture reweighting (operators/mixing.py): per-group
-    keep rates realizing a target language mix, feasibility capped by the
-    scarcest targeted group. One group-count shuffle + broadcast share
-    table + 1-row min; bit-exact oracle (identical float op order, no
-    rounding). The apply step (apply_mixture) rides the deterministic
-    hash sampler and is pytest-covered."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import mixture_rates
-
-    docs = load_table(spark, sf_dir, "documents")
-    return mixture_rates(docs, "lang", _MIX_TARGET)
-
-
 @query(
     "pipe_lm_buckets",
     """
@@ -2753,32 +2502,6 @@ def pipe_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SQL["pipe_lm_buckets"] = ORACLE_SQL["pipe_lm_buckets"].replace(
     "{X23}", ORACLE_SQL["x23_bigram_lm"]
 )
-
-
-# The synthetic corpus is word-salad with at most ONE distinct stopword
-# per doc, so the published min_stopwords=2 fails every row (verified).
-# The query tunes that one threshold so the verdict is data-dependent:
-# n_tokens (10-99) straddles the 50 floor AND stopword presence varies.
-_GOPHER_TUNING = {"min_stopwords": 1}
-
-
-def _gopher_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    return gopher_quality_sql("documents", thresholds=_GOPHER_TUNING)
-
-
-@query("x27_gopher_quality", _gopher_sql())
-def x27_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X27 — the full Gopher/MassiveText shape gate (operators/quality.py):
-    token bounds, mean word length, alpha-word fraction, symbol ratio,
-    bullet/ellipsis line fractions, stopword presence — one map-only
-    projection, thresholds shared with the generated SQL twin (tuned per
-    _GOPHER_TUNING so the verdict varies on this corpus)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality
-
-    docs = load_table(spark, sf_dir, "documents")
-    return gopher_quality(docs, thresholds=_GOPHER_TUNING)
 
 
 @query(
@@ -2832,36 +2555,6 @@ def x28_incremental_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") % 10 < 2)
     corpus = docs.where(F.col("doc_id") % 10 >= 2)
     return incremental_admit(batch, corpus, n=3, max_overlap=0.5)
-
-
-def _curate_stats_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    gq = gopher_quality_sql("cleaned", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH cleaned AS (SELECT doc_id, lang, {clean_text_sql("text")} AS text
-                     FROM documents),
-    g AS ({gq})
-    SELECT cleaned.lang, COUNT(*) AS n_docs,
-           CAST(SUM(g.n_tokens) AS BIGINT) AS total_tokens
-    FROM g JOIN cleaned USING (doc_id)
-    WHERE g.pass_gopher
-    GROUP BY 1
-    """
-
-
-@query("x30_curate_stats", _curate_stats_sql())
-def x30_curate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X30 — the batch twin of the streaming corpus-curation rollup
-    (streaming/corpus.py curate_stats): clean -> tuned Gopher gate ->
-    per-language docs/token volume. The streaming flavor runs the SAME
-    projection (stream≡batch byte-identity pytest); this oracle row
-    checks the semantics end to end through both generated SQL twins."""
-    from dbms_data_anonymity_differential_privacy_spark.streaming.corpus import curate_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    return curate_stats(docs, thresholds=_GOPHER_TUNING)
 
 
 @query(
@@ -3339,124 +3032,6 @@ def x40_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X41 — perceptual image dedup (operators/multimodal.py): dHash over the
-# decoded pixels + SimHash-style pigeonhole block join. Rows-only (DuckDB
-# cannot decode images); pigeonhole exactness vs brute force pinned in
-# test_multimodal_codecs.py.
-# --------------------------------------------------------------------------
-@query("x41_image_phash")
-def x41_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_bmp,
-        image_dhash,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return image_dhash(documents_as_bmp(docs))
-
-
-@query("x41_image_pairs")
-def x41_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_bmp,
-        image_near_dup_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return image_near_dup_pairs(documents_as_bmp(docs), max_hamming=4)
-
-
-# --------------------------------------------------------------------------
-# X41-exact — full hash check for the pigeonhole Hamming join that BOTH
-# near-dup detectors (x41 dHash images, x42 audio fingerprints) share.
-# The Python-side codec/hash step keeps its pytest pinning
-# (test_multimodal_codecs.py: pigeonhole == brute force over real decodes);
-# here the 64-bit fingerprints are replaced by an engine-portable
-# deterministic fixture relation derived from doc_id (Knuth multiplicative
-# mix, 62-bit, with near-duplicates planted every 20 docs by XOR-flipping
-# two low bits), so DuckDB can brute-force the exact same pair set while
-# Spark runs the REAL hamming_pairs_64 block-join + verify operator.
-# --------------------------------------------------------------------------
-_X41_HASH_SPARK = (
-    "CAST(CASE WHEN doc_id % 20 = 4 THEN "
-    "(((doc_id - 1) * 2654435761) % 1073741824 * 4294967296 "
-    " + ((doc_id - 1) * 40503 + 2531011) % 4294967296) ^ 3 "
-    "ELSE "
-    "(doc_id * 2654435761) % 1073741824 * 4294967296 "
-    " + (doc_id * 40503 + 2531011) % 4294967296 "
-    "END AS BIGINT)"
-)
-
-
-@query(
-    "x41_pairs_exact",
-    """
-    WITH h AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 20 = 4 THEN
-               xor(((doc_id - 1) * 2654435761) % 1073741824 * 4294967296
-                   + ((doc_id - 1) * 40503 + 2531011) % 4294967296, 3)
-             ELSE
-               (doc_id * 2654435761) % 1073741824 * 4294967296
-               + (doc_id * 40503 + 2531011) % 4294967296
-             END AS h64
-      FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.h64, b.h64)) AS INT) AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.h64, b.h64)) <= 4
-    """,
-)
-def x41_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact driver twin for the shared near-dup pair join: the DuckDB side
-    brute-forces all O(n^2) pairs (fine at oracle SF), the Spark side runs
-    the production pigeonhole block join — so a hash mismatch would expose
-    any candidate the blocking scheme missed."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import hamming_pairs_64
-
-    docs = load_table(spark, sf_dir, "documents")
-    h = docs.select("doc_id", F.expr(_X41_HASH_SPARK).alias("h64"))
-    return hamming_pairs_64(h, "doc_id", "h64", max_hamming=4).select(
-        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-# --------------------------------------------------------------------------
-# X42 — audio near-dup (operators/multimodal.py): energy-delta
-# fingerprints over real PCM16 WAV decode + the same shared pigeonhole
-# Hamming join as image dedup. Rows-only (no audio decode in DuckDB).
-# --------------------------------------------------------------------------
-@query("x96_media_curation")
-def x96_media_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X96 — media curation with quarantine accounting (rows-only: the
-    decode is Python-side): every 50th blob is deterministically
-    truncated, the quarantine decode skips it as one (mime, outcome)
-    row, and the rollup reports decodable vs quarantined counts + byte
-    volume — pytest pins the exact outcome split."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_mixed_media,
-        media_curation_stats,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return media_curation_stats(documents_as_mixed_media(docs))
-
-
-@query("x42_audio_pairs")
-def x42_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        audio_near_dup_pairs,
-        documents_as_wav,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    # 12 of 64 bits: tight enough to stay selective on this corpus (5
-    # pairs of 500 docs at sf0.01), loose enough that the block join and
-    # verification path produce a non-empty smoke result
-    return audio_near_dup_pairs(documents_as_wav(docs), max_hamming=12)
-
-
-# --------------------------------------------------------------------------
 # X43 — one-pass column profiling (operators/profile.py): per-column
 # n/nulls/distinct/min/max in ONE scan; the DuckDB twin is generated from
 # the SAME column list so coverage can't drift. Doubles as the r4 read-path
@@ -3608,11 +3183,10 @@ def x46_dp_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X47 — deterministic training-shard export (operators/sampling.py
-# assign_shards + sources/writers.py write_training_shards). The query is
-# the shard PLAN relation (per-shard count + sort-key range) — the part an
-# oracle can check; the physical partitioned/sorted parquet layout is
-# pinned by test_export_shards.py.
+# X47 — deterministic training-shard assignment (operators/sampling.py
+# assign_shards). The query is the shard PLAN relation (per-shard count +
+# sort-key range); layout independence and append stability are pinned by
+# test_export_shards.py.
 # --------------------------------------------------------------------------
 @query(
     "x47_shard_plan",
@@ -3636,49 +3210,6 @@ def x47_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("sort_key").alias("first_key"),
         F.max("sort_key").alias("last_key"),
     )
-
-
-
-# --------------------------------------------------------------------------
-# pipe_training_export — the full pretraining-export funnel (clean → tuned
-# Gopher gate → fingerprint dedup → shard plan), every stage reusing an
-# operator that already holds its own oracle row; this row checks the
-# COMPOSITION end to end through the same generated SQL twins.
-# --------------------------------------------------------------------------
-def _training_export_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    gq = gopher_quality_sql("cleaned", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH cleaned AS (SELECT doc_id, lang, {clean_text_sql("text")} AS text
-                     FROM documents),
-    g AS ({gq}),
-    kept AS (SELECT cleaned.doc_id, cleaned.lang, cleaned.text, g.n_tokens
-             FROM g JOIN cleaned USING (doc_id) WHERE g.pass_gopher),
-    d AS (SELECT * FROM (
-            SELECT kept.*,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS __fp
-            FROM kept)
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY __fp ORDER BY doc_id) = 1),
-    h AS (SELECT lang, n_tokens,
-            (CAST('0x' || substr(md5(cast(doc_id AS varchar) || '|export'), 1, 8)
-                  AS BIGINT) * 8) >> 32 AS shard
-          FROM d)
-    SELECT shard, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-    FROM h GROUP BY shard, lang
-    """
-
-
-@query("pipe_training_export", _training_export_sql())
-def pipe_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark import pipelines
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pipelines.training_export_plan(docs, n_shards=8, gopher_thresholds=_GOPHER_TUNING)
-
-
 
 
 # --------------------------------------------------------------------------
@@ -3738,8 +3269,6 @@ def x48_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff_summary(old, new)
 
 
-
-
 # --------------------------------------------------------------------------
 # X49 — Misra-Gries heavy hitters (operators/sketch.py): bounded-memory
 # frequent values, per-partition Arrow summaries + SQL merge with an error
@@ -3780,7 +3309,6 @@ def x49_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return heavy_hitters(skewed, "skewed_key", k=8)
-
 
 
 # --------------------------------------------------------------------------
@@ -4637,63 +4165,6 @@ def x73_range_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# pipe_event_analytics — the product-analytics dashboard as one row,
-# composing x54 funnel + x55 retention + x72 transitions + busiest-hour
-# the way a user would (the pipe_training_export convention: every stage
-# holds its own oracle row; this row checks the COMPOSITION).
-# --------------------------------------------------------------------------
-@query(
-    "pipe_event_analytics",
-    """
-    WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                WHERE event_type = 'signup' GROUP BY 1),
-    s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-           WHERE e.event_type = 'click' AND e.ts >= s1.t1 GROUP BY 1),
-    s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1),
-    f AS (SELECT (SELECT COUNT(*) FROM s1) AS u1, (SELECT COUNT(*) FROM s2) AS u2,
-                 (SELECT COUNT(*) FROM s3) AS u3),
-    act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS period FROM events),
-    fc AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1),
-    reto AS (SELECT CAST((period - cohort) // 7 AS INT) AS off, COUNT(*) AS au
-             FROM act JOIN fc USING (user_id) GROUP BY 1),
-    r AS (SELECT ROUND(CAST(SUM(CASE WHEN off = 1 THEN au END) AS DOUBLE)
-                       / CAST(SUM(CASE WHEN off = 0 THEN au END) AS DOUBLE), 9)
-                     AS week1_retention_r FROM reto),
-    p AS (SELECT user_id, event_type,
-                 LAG(event_type) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id) AS from_type
-          FROM events),
-    tc AS (SELECT from_type, event_type AS to_type, COUNT(*) AS cnt
-           FROM p WHERE from_type IS NOT NULL GROUP BY 1, 2),
-    tp AS (SELECT from_type AS top_from, to_type AS top_to, cnt,
-                  ROUND(CAST(cnt AS DOUBLE)
-                        / CAST(SUM(cnt) OVER (PARTITION BY from_type) AS DOUBLE), 9)
-                      AS top_p_r
-           FROM tc),
-    tb AS (SELECT top_from, top_to, top_p_r FROM tp
-           ORDER BY cnt DESC, top_from, top_to LIMIT 1),
-    bh AS (SELECT CAST(EXTRACT(hour FROM ts) AS INT) AS busiest_hour,
-                  CAST(COUNT(*) AS BIGINT) AS busiest_hour_events
-           FROM events GROUP BY 1 ORDER BY 2 DESC, 1 ASC LIMIT 1),
-    t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_events,
-                 CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users FROM events)
-    SELECT t.n_events, t.n_users, CAST(f.u1 AS BIGINT) AS signup_users,
-           ROUND(CAST(f.u2 AS DOUBLE) / CAST(f.u1 AS DOUBLE), 9) AS click_rate_r,
-           ROUND(CAST(f.u3 AS DOUBLE) / CAST(f.u1 AS DOUBLE), 9) AS purchase_rate_r,
-           r.week1_retention_r, tb.top_from, tb.top_to, tb.top_p_r,
-           bh.busiest_hour, bh.busiest_hour_events
-    FROM t CROSS JOIN f CROSS JOIN r CROSS JOIN tb CROSS JOIN bh
-    """,
-)
-def pipe_event_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark import pipelines
-
-    ev = load_table(spark, sf_dir, "events")
-    return pipelines.event_analytics_summary(ev)
-
-
-# --------------------------------------------------------------------------
 # X74 — A/B conversion analysis (operators/stats.py ab_test_proportions):
 # deterministic hash-split assignment + two-proportion z, the experiment
 # primitive, oracle-checkable end to end.
@@ -5011,107 +4482,6 @@ def x97_delta_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# pipe_private_export — the privacy-aware export funnel: clean → PII
-# redaction (typed placeholders + per-doc accounting) → Gopher gate over
-# the REDACTED text → fingerprint dedup → shard rollup carrying
-# n_docs_redacted. Oracle assembled from the same generated stage twins
-# (clean_text_sql ∘ redact_pii_sql ∘ gopher_quality_sql), so the
-# composition is checked end to end.
-# --------------------------------------------------------------------------
-def _private_export_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.pii import redact_pii_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    cleaned = clean_text_sql("text")
-    red = redact_pii_sql("c.__clean")
-    gq = gopher_quality_sql("redacted", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH c AS (SELECT doc_id, lang, {cleaned} AS __clean FROM documents),
-    redacted AS (SELECT doc_id, lang, {red} AS text,
-                        CASE WHEN {red} <> c.__clean THEN 1 ELSE 0 END AS __redacted
-                 FROM c),
-    g AS ({gq}),
-    kept AS (SELECT redacted.doc_id, redacted.lang, redacted.text,
-                    g.n_tokens, redacted.__redacted
-             FROM g JOIN redacted USING (doc_id) WHERE g.pass_gopher),
-    d AS (SELECT * FROM (
-            SELECT kept.*,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS __fp
-            FROM kept)
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY __fp ORDER BY doc_id) = 1),
-    h AS (SELECT lang, n_tokens, __redacted,
-            (CAST('0x' || substr(md5(cast(doc_id AS varchar) || '|pexport'), 1, 8)
-                  AS BIGINT) * 8) >> 32 AS shard
-          FROM d)
-    SELECT shard, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(SUM(__redacted) AS BIGINT) AS n_docs_redacted
-    FROM h GROUP BY shard, lang
-    """
-
-
-@query("pipe_private_export", _private_export_sql())
-def pipe_private_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark import pipelines
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pipelines.private_export_plan(docs, n_shards=8, gopher_thresholds=_GOPHER_TUNING)
-
-
-# --------------------------------------------------------------------------
-# pipe_private_export_stream — the STREAMING private-export composite's
-# batch twin (streaming/export.py). Differences from pipe_private_export
-# are exactly the representative-independence requirements of the
-# streaming dedup: dedup key carries lang, shard hashes the content
-# FINGERPRINT (not doc_id) — so first-arrival (stream) and min-id
-# (batch) representatives roll up byte-identically; stream≡batch is
-# pinned in tests/test_round7_ops.py over real micro-batches.
-# --------------------------------------------------------------------------
-def _private_export_stream_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.pii import redact_pii_sql
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    cleaned = clean_text_sql("text")
-    red = redact_pii_sql("c.__clean")
-    gq = gopher_quality_sql("redacted", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH c AS (SELECT doc_id, lang, {cleaned} AS __clean FROM documents),
-    redacted AS (SELECT doc_id, lang, {red} AS text,
-                        CASE WHEN {red} <> c.__clean THEN 1 ELSE 0 END AS __redacted
-                 FROM c),
-    g AS ({gq}),
-    kept AS (SELECT redacted.doc_id, redacted.lang, redacted.text,
-                    g.n_tokens, redacted.__redacted
-             FROM g JOIN redacted USING (doc_id) WHERE g.pass_gopher),
-    d AS (SELECT * FROM (
-            SELECT kept.*,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS __fp
-            FROM kept)
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY lang, __fp ORDER BY doc_id) = 1),
-    h AS (SELECT lang, n_tokens, __redacted,
-            (CAST('0x' || substr(md5(__fp || '|pexport-stream'), 1, 8)
-                  AS BIGINT) * 8) >> 32 AS shard
-          FROM d)
-    SELECT shard, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(SUM(__redacted) AS BIGINT) AS n_docs_redacted
-    FROM h GROUP BY shard, lang
-    """
-
-
-@query("pipe_private_export_stream", _private_export_stream_sql())
-def pipe_private_export_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming private-export composite (fingerprint
-    dedup on dropDuplicatesWithinWatermark in stream mode)."""
-    from dbms_data_anonymity_differential_privacy_spark.streaming.export import private_export_batch
-
-    docs = load_table(spark, sf_dir, "documents")
-    return private_export_batch(docs, n_shards=8, thresholds=_GOPHER_TUNING)
-
-
-# --------------------------------------------------------------------------
 # X95 — Z-order layout key (operators/sampling.py zorder_layout): the
 # lakehouse OPTIMIZE ZORDER primitive — equal-width bin each dimension,
 # bit-interleave the bins, sort by the key before write so per-file
@@ -5389,109 +4759,6 @@ def x89_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = ev.select("user_id", F.get_json_object("props", "$.k").alias("item"))
     return dp_set_union(
         items, "item", "user_id", epsilon=2.0, delta=0.05, max_items=3, release="x89"
-    )
-
-
-# --------------------------------------------------------------------------
-# X86 — temperature resampling (operators/mixing.py temperature_sample):
-# the multilingual rebalancing step (XLM-R α-convention: p ∝ share^α, so
-# rate ∝ share^(α−1) with downsample-only max-normalization — the
-# smallest language keeps rate 1, heads are thinned; max() is
-# order-independent, unlike a Σ-normalization). The powered weights use
-# C-libm pow on both sides: driver-side math.pow for the Spark literals,
-# POWER() in the DuckDB twin (the x20 ln convention); the keep predicate
-# is the fixed-width printf('%08x') hex-threshold compare, portable
-# bytewise.
-# --------------------------------------------------------------------------
-@query(
-    "x86_temperature_sample",
-    """
-    WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-    tot AS (SELECT SUM(n) AS total FROM c),
-    w AS (SELECT lang, POWER(CAST(n AS DOUBLE) / total, 0.7 - 1.0) AS wgt
-          FROM c CROSS JOIN tot),
-    m AS (SELECT MAX(wgt) AS mw FROM w),
-    r AS (SELECT lang, wgt / m.mw AS rate FROM w CROSS JOIN m)
-    SELECT d.doc_id, d.lang, d.source
-    FROM documents d JOIN r USING (lang)
-    WHERE r.rate >= 1.0
-       OR substring(md5(CAST(d.doc_id AS VARCHAR) || '|' || 'temp'), 1, 8)
-          < printf('%08x', CAST(FLOOR(r.rate * 4294967296.0) AS BIGINT))
-    """,
-)
-def x86_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tempered (α=0.7) per-language resample of the corpus: the
-    smallest language keeps rate 1, head languages are thinned — the
-    distribution flattens toward the α-tempered mix without
-    upsampling."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import temperature_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return temperature_sample(docs, "lang", ["doc_id"], temperature=0.7).select(
-        "doc_id", "lang", "source"
-    )
-
-
-# --------------------------------------------------------------------------
-# X85 — domain-level quality gating (operators/quality.py): per-domain
-# Gopher pass-rate rollup + blocklist verdict, the CCNet/C4 drop-bad-
-# domains step. Report oracle reuses the generated Gopher twin; the gate
-# query returns the kept corpus (broadcast semi-join, fact never
-# shuffles).
-# --------------------------------------------------------------------------
-def _x85_report_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    gq = gopher_quality_sql("documents", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH g AS ({gq})
-    SELECT d.source, COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN g.pass_gopher THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
-           CAST(SUM(g.n_tokens) AS BIGINT) AS total_tokens,
-           ROUND(CAST(SUM(CASE WHEN g.pass_gopher THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 9) AS pass_rate_r,
-           (CAST(SUM(CASE WHEN g.pass_gopher THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*) >= 0.5) AS domain_pass
-    FROM g JOIN documents d USING (doc_id)
-    GROUP BY 1
-    """
-
-
-@query("x85_domain_quality", _x85_report_sql())
-def x85_domain_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain Gopher rollup + blocklist verdict."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        domain_quality_report,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return domain_quality_report(docs, min_pass_rate=0.5, thresholds=_GOPHER_TUNING)
-
-
-def _x85_gate_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    gq = gopher_quality_sql("documents", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH g AS ({gq}),
-    rep AS (SELECT d.source,
-                   (CAST(SUM(CASE WHEN g.pass_gopher THEN 1 ELSE 0 END) AS DOUBLE)
-                         / COUNT(*) >= 0.5) AS domain_pass
-            FROM g JOIN documents d USING (doc_id) GROUP BY 1)
-    SELECT documents.* FROM documents
-    SEMI JOIN (SELECT source FROM rep WHERE domain_pass) USING (source)
-    """
-
-
-@query("x85_domain_gate", _x85_gate_sql())
-def x85_domain_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The kept corpus after dropping below-rate domains — one broadcast
-    semi-join on the domains-sized verdict relation."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import domain_gate
-
-    docs = load_table(spark, sf_dir, "documents")
-    return domain_gate(docs, min_pass_rate=0.5, thresholds=_GOPHER_TUNING).select(
-        "doc_id", "text", "lang", "source", "n_chars"
     )
 
 
@@ -6143,41 +5410,6 @@ def x129_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             9,
         ).alias("fp_rate_r"),
     )
-
-
-# --------------------------------------------------------------------------
-# X130 — sliding context-window chunk plan (operators/packing.py
-# sliding_chunks): RAG/long-context preprocessing; pure integer window
-# arithmetic, map-only sequence+explode fan-out.
-# --------------------------------------------------------------------------
-@query(
-    "x130_chunks",
-    """
-    WITH t AS (SELECT doc_id,
-                      CAST(len(list_filter(
-                        string_split_regex(lower(trim(text)), '\\s+'),
-                        w -> w <> '')) AS BIGINT) AS n_tokens
-               FROM documents),
-    c AS (SELECT doc_id, n_tokens,
-                 unnest(generate_series(0,
-                   CAST(CEIL(GREATEST(n_tokens - 512, 0) / 448.0) AS BIGINT)))
-                   AS chunk_id
-          FROM t WHERE n_tokens > 0)
-    SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
-           CAST(chunk_id * 448 AS BIGINT) AS start_tok,
-           CAST(LEAST(chunk_id * 448 + 512, n_tokens) AS BIGINT) AS end_tok,
-           CAST(LEAST(chunk_id * 448 + 512, n_tokens) - chunk_id * 448 AS BIGINT)
-             AS chunk_tokens,
-           n_tokens
-    FROM c
-    """,
-)
-def x130_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """512-token windows with 64-token overlap over every document."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import sliding_chunks
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sliding_chunks(docs, chunk_size=512, overlap=64)
 
 
 # --------------------------------------------------------------------------
@@ -6850,77 +6082,6 @@ def x152_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return powerlaw_alpha(edges, d_min=2)
 
 
-
-
-
-
-
-# --------------------------------------------------------------------------
-# X141 — reciprocal-rank fusion (operators/search.py rrf_fuse): hybrid
-# retrieval combiner over bounded candidate lists — BM25 top-100 fused
-# with a document-length prior top-100. Exact int64 weight sums via the
-# driver-built rrf_weights table (shared verbatim with the oracle); all
-# stages run on candidate-list-sized relations.
-# --------------------------------------------------------------------------
-def _x141_sql(n: int = 100, k0: int = 60, topk: int = 25) -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import rrf_weights
-
-    wvals = ", ".join(f"({r}, {w})" for r, w in rrf_weights(n, k0))
-    bm25 = _bm25_oracle_sql(_BM25_TERMS, k=n, k1=1.2, b=0.75)
-    return f"""
-    WITH wt(rnk, w) AS (VALUES {wvals}),
-    la AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id)
-                               AS INTEGER) AS r
-           FROM ({bm25})),
-    lb AS (SELECT doc_id, r FROM (
-             SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id)
-                                 AS INTEGER) AS r
-             FROM documents) WHERE r <= {n}),
-    u AS (SELECT * FROM la UNION ALL SELECT * FROM lb),
-    g AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_lists,
-                 CAST(MIN(r) AS INTEGER) AS best_rank,
-                 CAST(SUM(wt.w) AS BIGINT) AS rrf_int
-          FROM u JOIN wt ON wt.rnk = u.r
-          GROUP BY 1),
-    f AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY rrf_int DESC, doc_id)
-                         AS INTEGER) AS fused_rank
-          FROM g)
-    SELECT doc_id, n_lists, best_rank, rrf_int,
-           ROUND(CAST(rrf_int AS DOUBLE) / 1e12, 9) AS rrf, fused_rank
-    FROM f WHERE fused_rank <= {topk}
-    """
-
-
-@query("x141_rrf_fuse", None)
-def x141_rrf_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRF of BM25 top-100 and the length-prior top-100, top-25 release."""
-    from pyspark.sql import Window
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import (
-        bm25_topk,
-        rrf_fuse,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = bm25_topk(docs, _BM25_TERMS, k=100)
-    a = a.withColumn(
-        "rnk",
-        F.row_number().over(Window.orderBy(F.desc("score"), F.col("doc_id"))),
-    ).select("doc_id", "rnk")
-    # TakeOrdered first (distributed partial top-k), THEN rank the 100-row
-    # result — never a global-order window over the whole corpus.
-    b = docs.select("doc_id", "n_chars").orderBy(F.desc("n_chars"), "doc_id").limit(100)
-    b = b.withColumn(
-        "rnk",
-        F.row_number().over(Window.orderBy(F.desc("n_chars"), F.col("doc_id"))),
-    ).select("doc_id", "rnk")
-    out = rrf_fuse([a, b], k0=60, max_rank=100, topk=25)
-    return out.withColumn("n_lists", F.col("n_lists").cast("long"))
-
-
-ORACLE_SQL["x141_rrf_fuse"] = _x141_sql(100, 60, 25)
-
-
 # --------------------------------------------------------------------------
 # X142 — autocorrelation function (operators/stats.py acf): exact ACF of
 # the hourly rate series on a dense spine; n²-cleared estimator in
@@ -7389,20 +6550,6 @@ def x119_interp_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X118 — compression ratio (operators/quality.py compression_ratio):
-# zlib repetition/entropy signal via Arrow mapInPandas (rows-only: no
-# SQL zlib; determinism + bound invariants pinned in pytest).
-# --------------------------------------------------------------------------
-@query("x118_compression_ratio")
-def x118_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document zlib compression ratio (level 6)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import compression_ratio
-
-    docs = load_table(spark, sf_dir, "documents")
-    return compression_ratio(docs)
-
-
-# --------------------------------------------------------------------------
 # X117 — OOV rate (operators/text.py oov_rate): per-doc coverage against
 # the corpus's own top-k vocabulary (freq desc, token asc deterministic);
 # word-count shuffle + broadcast vocab join.
@@ -7465,35 +6612,6 @@ def x115_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     return weighted_median(li, ["l_returnflag"], "l_extendedprice", "l_quantity")
-
-
-# --------------------------------------------------------------------------
-# X116 — top-p (nucleus) support (operators/mixing.py top_p_support):
-# smallest head set covering p of each group's mass; exact scaled-int
-# threshold, (count desc, value) rank order.
-# --------------------------------------------------------------------------
-@query(
-    "x116_top_p",
-    """
-    WITH agg AS (SELECT lang, source AS value, CAST(COUNT(*) AS BIGINT) AS cnt
-                 FROM documents GROUP BY 1, 2),
-    r AS (SELECT lang, value, cnt,
-                 CAST(ROW_NUMBER() OVER w AS INTEGER) AS rank,
-                 CAST(COALESCE(SUM(cnt) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                              AND 1 PRECEDING), 0) AS BIGINT) AS prev,
-                 CAST(SUM(cnt) OVER (PARTITION BY lang) AS BIGINT) AS total
-          FROM agg WINDOW w AS (PARTITION BY lang ORDER BY cnt DESC, value ASC))
-    SELECT lang, value, cnt, rank,
-           prev * 1000000 < 900000 * total AS kept
-    FROM r
-    """,
-)
-def x116_top_p(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nucleus (p=0.9) source support per language."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import top_p_support
-
-    docs = load_table(spark, sf_dir, "documents")
-    return top_p_support(docs, ["lang"], "source", p=0.9)
 
 
 # --------------------------------------------------------------------------
@@ -7766,60 +6884,6 @@ def x108_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# pipe_corpus_datasheet — the dataset card as one row (pipelines.py
-# corpus_datasheet): volume, language spread, dup rate, Gopher pass
-# rate, mean quality — every term composed from an operator that holds
-# its own oracle row (the pipe_event_analytics convention).
-# --------------------------------------------------------------------------
-def _datasheet_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    g = gopher_quality_sql(thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH g AS ({g}),
-    e AS (SELECT d.lang, LENGTH(d.text) AS chars,
-                 CASE WHEN TRIM(d.text) = '' THEN 0
-                      ELSE len(string_split_regex(TRIM(d.text), '\\s+')) END AS toks,
-                 md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS fp,
-                 ROUND(LEAST(LENGTH(d.text) / 200.0, 1.0)
-                       * (1.0 - CASE WHEN LENGTH(d.text) > 0
-                           THEN LENGTH(regexp_replace(d.text, '[A-Za-z0-9 ]', '', 'g'))
-                                / LENGTH(d.text)
-                           ELSE 1.0 END)
-                       * LEAST(0.5 + len(regexp_extract_all(d.text, '{_EN_SQL}')) / 10.0, 1.0),
-                   9) AS q,
-                 g.pass_gopher
-          FROM documents d JOIN g ON g.doc_id = d.doc_id),
-    t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                 CAST(SUM(chars) AS BIGINT) AS total_chars,
-                 CAST(SUM(toks) AS BIGINT) AS total_tokens,
-                 CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-                 ROUND(1.0 - COUNT(DISTINCT fp) * 1.0 / COUNT(*), 9) AS dup_rate_r,
-                 ROUND(SUM(CASE WHEN pass_gopher THEN 1 ELSE 0 END) * 1.0
-                       / COUNT(*), 9) AS gopher_pass_rate_r,
-                 ROUND(AVG(q), 9) AS mean_quality_r
-          FROM e),
-    tl AS (SELECT lang AS top_lang, COUNT(*) AS top_n FROM e
-           GROUP BY 1 ORDER BY COUNT(*) DESC, lang LIMIT 1)
-    SELECT t.*, tl.top_lang,
-           ROUND(tl.top_n * 1.0 / t.n_docs, 9) AS top_lang_share_r
-    FROM t CROSS JOIN tl
-    """
-
-
-@query("pipe_corpus_datasheet", None)  # SQL attached below (needs helpers)
-def pipe_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus dataset card in one row."""
-    from dbms_data_anonymity_differential_privacy_spark.pipelines import corpus_datasheet
-
-    docs = load_table(spark, sf_dir, "documents")
-    return corpus_datasheet(docs, gopher_thresholds=_GOPHER_TUNING)
-
-
-ORACLE_SQL["pipe_corpus_datasheet"] = _datasheet_sql()
-
-
-# --------------------------------------------------------------------------
 # X107 — windowed funnel (operators/funnel.py funnel(within_seconds=...)):
 # conversion bounded to a step-1-anchored window — the "converted within
 # 72 h of signup" product metric. Same fold, one extra guard; the oracle
@@ -8003,45 +7067,6 @@ def x153_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     return skyline_2d(o, "o_totalprice", "o_orderdate", payload=["o_orderkey"])
-
-
-# --------------------------------------------------------------------------
-# X154 — DSIR importance weights (operators/mixing.py dsir_importance):
-# score every non-target document by the unigram log-likelihood ratio of
-# a target pool (source='src0') vs the raw pool, add-1 smoothed over the
-# shared top-2000 vocabulary (x19 tie-break convention). The selection
-# signal of Xie et al. 2023's importance resampling. Both sides sum
-# libm/StrictMath ln values rounded at 6 dp after a ~100-term sum — the
-# same float-absorption contract as x23/x104.
-# --------------------------------------------------------------------------
-@query(
-    "x154_dsir_weights",
-    """
-    WITH tok AS (SELECT doc_id, source = 'src0' AS is_t,
-                        unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-                 FROM documents),
-    tok2 AS (SELECT * FROM tok WHERE w <> ''),
-    counts AS (SELECT w, COUNT(*) AS n_all,
-                      SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct
-               FROM tok2 GROUP BY w),
-    vocab AS (SELECT w, ct, n_all - ct AS cr FROM counts
-              ORDER BY n_all DESC, w LIMIT 2000),
-    tot AS (SELECT SUM(ct) AS t_tot, SUM(cr) AS r_tot FROM vocab),
-    llr AS (SELECT w, ln((ct + 1.0) / (t_tot + 2000.0))
-                     - ln((cr + 1.0) / (r_tot + 2000.0)) AS llr
-            FROM vocab CROSS JOIN tot)
-    SELECT doc_id, ROUND(SUM(llr), 6) AS dsir_weight,
-           COUNT(*) AS n_terms
-    FROM tok2 JOIN llr USING (w) WHERE NOT is_t
-    GROUP BY doc_id
-    """,
-)
-def x154_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR unigram importance weight per non-target document."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import dsir_importance
-
-    d = load_table(spark, sf_dir, "documents")
-    return dsir_importance(d, F.col("source") == "src0")
 
 
 # --------------------------------------------------------------------------
@@ -8707,73 +7732,6 @@ def x168_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# pipe_graph_insights — composite graph datasheet (pipelines.py
-# graph_insights): ONE co-purchase edge build fanned to integer
-# PageRank (both orientations) + 3-round label propagation + community
-# sizes, joined per node. Oracle = the x126 + x160 CTE chains over the
-# shared edge CTE.
-# --------------------------------------------------------------------------
-def _pipe_graph_sql(pr_iters: int = 10, lp_iters: int = 3) -> str:
-    ctes = [
-        "items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem)",
-        "prr AS (SELECT a.i AS x, b.i AS y FROM items a"
-        " JOIN items b ON a.b = b.b AND a.i < b.i"
-        " GROUP BY 1, 2 HAVING COUNT(*) >= 2)",
-        "e0 AS (SELECT x AS src, y AS dst FROM prr UNION ALL SELECT y, x FROM prr)",
-        "nodes AS (SELECT src AS node FROM e0 UNION SELECT dst FROM e0)",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        "deg AS (SELECT src AS node, COUNT(*) AS d FROM e0 GROUP BY 1)",
-        "pr0 AS (SELECT node, CAST(1000000000 // nn.n AS BIGINT) AS r"
-        " FROM nodes CROSS JOIN nn)",
-    ]
-    for i in range(1, pr_iters + 1):
-        ctes.append(
-            f"pr{i} AS (SELECT n.node, CAST(150000000 // nn.n"
-            f" + (17 * COALESCE(s.c, 0)) // 20 AS BIGINT) AS r"
-            f" FROM nodes n CROSS JOIN nn LEFT JOIN"
-            f" (SELECT e.dst AS node, SUM(p.r // d.d) AS c"
-            f" FROM pr{i - 1} p JOIN e0 e ON e.src = p.node"
-            f" JOIN deg d ON d.node = p.node GROUP BY 1) s USING (node))"
-        )
-    ctes.append("l0 AS (SELECT node, node AS label FROM nodes)")
-    prev = "l0"
-    for i in range(1, lp_iters + 1):
-        ctes.append(
-            f"r{i} AS (SELECT a.dst AS node, l.label FROM e0 a"
-            f" JOIN {prev} l ON l.node = a.src)"
-        )
-        ctes.append(f"c{i} AS (SELECT node, label, COUNT(*) AS c FROM r{i} GROUP BY 1, 2)")
-        ctes.append(
-            f"l{i} AS (SELECT node, label FROM"
-            f" (SELECT node, label, ROW_NUMBER() OVER (PARTITION BY node"
-            f" ORDER BY c DESC, label) AS rk FROM c{i}) WHERE rk = 1)"
-        )
-        prev = f"l{i}"
-    ctes.append(
-        f"sizes AS (SELECT label AS community, CAST(COUNT(*) AS BIGINT)"
-        f" AS community_size FROM {prev} GROUP BY 1)"
-    )
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + f" SELECT p.node, p.r AS rank_ppb, l.label AS community, s.community_size"
-        f" FROM pr{pr_iters} p JOIN {prev} l ON l.node = p.node"
-        f" JOIN sizes s ON s.community = l.label"
-    )
-
-
-@query("pipe_graph_insights", _pipe_graph_sql())
-def pipe_graph_insights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part graph datasheet: PageRank + community over co-purchase."""
-    from dbms_data_anonymity_differential_privacy_spark.pipelines import graph_insights
-
-    # shared basket edge builder (identical edge set to the items
-    # self-join form it replaced; see _copurchase_part_edges, r10)
-    edges = _copurchase_part_edges(spark, sf_dir)
-    return graph_insights(edges)
-
-
-# --------------------------------------------------------------------------
 # X169 — GDPR deletion-impact plan (operators/integrity.py
 # deletion_impact_plan): per-day rewrite cost for the ~1% of users whose
 # portable md5 lands under the threshold (stand-in for a deletion-
@@ -8943,58 +7901,6 @@ def x172_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return feature_hashing(d, n_buckets=64)
-
-
-# --------------------------------------------------------------------------
-# X173 — linear quality-classifier inference (operators/quality.py
-# linear_quality_score): the fastText/CCNet-style learned quality gate,
-# run as pure inference over the x172 hashed features with a
-# deterministic published weight vector; the release is the raw logit
-# (monotone in the probability), so there are no transcendentals and the
-# fold is engine-exact.
-# --------------------------------------------------------------------------
-# Shared CTE core for the linear-quality logit: x173 releases it per doc,
-# x187 builds the gating curve on it — one definition, zero drift.
-_X173_CORE = r"""tok AS (SELECT doc_id,
-                        unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
-                 FROM documents),
-    h AS (SELECT doc_id, md5(w) AS hh FROM tok WHERE w <> ''),
-    f AS (SELECT doc_id,
-                 CAST('0x' || substr(hh, 1, 8) AS BIGINT) % 64 AS bucket,
-                 CASE WHEN substr(hh, 9, 1) < '8' THEN 1 ELSE -1 END AS s
-          FROM h),
-    feat AS (SELECT doc_id, bucket, SUM(s) AS feat
-             FROM f GROUP BY 1, 2 HAVING SUM(s) <> 0),
-    terms AS (SELECT doc_id,
-                     feat * (CAST((bucket * 2654435761 + 12345) % 1000003 AS DOUBLE)
-                             / 1000003.0 - 0.5) AS t
-              FROM feat),
-    pd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-                  list_reduce(list_sort(list(t)), (a, b) -> a + b) AS logit
-           FROM terms GROUP BY 1),
-    scored AS (SELECT d.doc_id,
-                      COALESCE(pd.n_feats, 0) AS n_feats,
-                      ROUND(COALESCE(pd.logit, 0.0), 9) AS logit_r,
-                      COALESCE(pd.logit, 0.0) > 0.0 AS keep
-               FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id)"""
-
-
-@query(
-    "x173_linear_quality",
-    f"""
-    WITH {_X173_CORE}
-    SELECT doc_id, n_feats, logit_r, keep FROM scored
-    """,
-)
-def x173_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear quality-classifier inference (logit release) over signed
-    hashed bag-of-words features."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        linear_quality_score,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    return linear_quality_score(d, n_buckets=64)
 
 
 # --------------------------------------------------------------------------
@@ -9731,55 +8637,6 @@ def x186_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X187 — quality-gating (data-pruning) curve (operators/quality.py
-# quality_gating_curve): per score-decile threshold, the exact cumulative
-# doc/token retention — built on the shared x173 logit core, ntile on
-# (logit DESC, doc_id) is a total order, cumulative windows run on the
-# 10-row tile relation.
-# --------------------------------------------------------------------------
-@query(
-    "x187_gating_curve",
-    f"""
-    WITH {{X173_CORE}},
-    nt AS (SELECT s.doc_id, s.logit_r,
-                  len(list_filter(string_split_regex(lower(trim(d.text)), '\\s+'),
-                                  w -> w <> '')) AS ntk,
-                  CAST(NTILE(10) OVER (ORDER BY s.logit_r DESC, s.doc_id) AS INTEGER)
-                      AS tile
-           FROM scored s JOIN documents d ON d.doc_id = s.doc_id),
-    pt AS (SELECT tile, COUNT(*) AS dd, SUM(ntk) AS tt, MIN(logit_r) AS score_floor_r
-           FROM nt GROUP BY tile)
-    SELECT tile, score_floor_r,
-           CAST(SUM(dd) OVER (ORDER BY tile ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS BIGINT) AS n_docs_cum,
-           CAST(SUM(tt) OVER (ORDER BY tile ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS BIGINT) AS n_tokens_cum,
-           ROUND(CAST(SUM(dd) OVER (ORDER BY tile ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS DOUBLE)
-                 / CAST(SUM(dd) OVER () AS DOUBLE), 9) AS frac_docs_r,
-           ROUND(CAST(SUM(tt) OVER (ORDER BY tile ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS DOUBLE)
-                 / CAST(SUM(tt) OVER () AS DOUBLE), 9) AS frac_tokens_r
-    FROM pt
-    """,
-)
-def x187_gating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-pruning curve: cumulative doc/token retention at each
-    linear-quality score decile."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        quality_gating_curve,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return quality_gating_curve(docs, n_tiles=10)
-
-
-ORACLE_SQL["x187_gating_curve"] = ORACLE_SQL["x187_gating_curve"].replace(
-    "{X173_CORE}", _X173_CORE
-)
-
-
-# --------------------------------------------------------------------------
 # X188 — stationary distribution of the event-type Markov chain
 # (operators/stats.py markov_stationary): the x72 counts row-normalized
 # with UNROUNDED exact-int divisions, dangling states self-looped,
@@ -9978,65 +8835,6 @@ def x191_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select("lang", tx.lang_id(F.col("text")).alias("lang_pred"))
     return cohens_kappa(pairs, "lang", "lang_pred")
-
-
-# --------------------------------------------------------------------------
-# X192 — calibration / reliability table + ECE (operators/stats.py
-# calibration_table) of the x173 linear quality logit against the
-# is-English label: min-max ppb normalization makes every tile mean an
-# exact int64 sum; tiles are the explicit (rank-1)*k//n formula.
-# --------------------------------------------------------------------------
-@query(
-    "x192_calibration",
-    """
-    WITH {X173_CORE},
-    lab AS (SELECT s.doc_id, s.logit_r AS sc,
-                   CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-            FROM scored s JOIN documents d USING (doc_id)),
-    mm AS (SELECT MIN(sc) AS mn, MAX(sc) AS mx,
-                  CAST(COUNT(*) AS BIGINT) AS n_all FROM lab),
-    pp AS (SELECT doc_id, sc, y,
-                  CASE WHEN mm.mx = mm.mn THEN 0
-                       ELSE CAST(FLOOR((sc - mm.mn) * 1000000000.0
-                                       / (mm.mx - mm.mn)) AS BIGINT) END AS ppb,
-                  mm.n_all
-           FROM lab CROSS JOIN mm),
-    rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY sc DESC, doc_id) AS rn FROM pp),
-    tl AS (SELECT ((rn - 1) * 10) // n_all + 1 AS tile, y, ppb, n_all FROM rk),
-    pt AS (SELECT tile, CAST(COUNT(*) AS BIGINT) AS n,
-                  CAST(SUM(y) AS BIGINT) AS n_pos,
-                  CAST(SUM(ppb) AS BIGINT) AS sppb, MAX(n_all) AS n_all
-           FROM tl GROUP BY 1),
-    g AS (SELECT CAST(tile AS INT) AS tile, n, n_pos,
-                 ROUND(CAST(sppb AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * 1000000000.0), 9) AS mean_score_r,
-                 ROUND(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 9) AS pos_rate_r,
-                 ROUND(ABS(CAST(sppb AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000.0)
-                           - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)), 9)
-                   AS abs_gap_r,
-                 ABS(CAST(sppb AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000.0)
-                     - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE))
-                   * CAST(n AS DOUBLE) / CAST(n_all AS DOUBLE) AS wg
-          FROM pt),
-    e AS (SELECT ROUND(SUM(wg), 9) AS ece_r FROM g)
-    SELECT g.tile, g.n, g.n_pos, g.mean_score_r, g.pos_rate_r, g.abs_gap_r, e.ece_r
-    FROM g CROSS JOIN e
-    """,
-)
-def x192_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability deciles + ECE of the linear quality logit vs the
-    is-English label."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        linear_quality_score,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.operators.stats import calibration_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = linear_quality_score(docs, n_buckets=64)
-    lab = scored.join(docs.select("doc_id", "lang"), on="doc_id").withColumn(
-        "__y", (F.col("lang") == "en").cast("int")
-    )
-    return calibration_table(lab, "logit_r", "__y", n_tiles=10, id_col="doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -10243,9 +9041,6 @@ def x196_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SQL["x191_cohens_kappa"] = ORACLE_SQL["x191_cohens_kappa"].replace(
     "{LANG_SCORE_CTE}", _LANG_SCORE_CTE
 )
-ORACLE_SQL["x192_calibration"] = ORACLE_SQL["x192_calibration"].replace(
-    "{X173_CORE}", _X173_CORE
-)
 
 
 # --------------------------------------------------------------------------
@@ -10377,47 +9172,6 @@ def x198_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same shared basket edge builder as x195 (identical edge set to the
     # items self-join form it replaced; see _copurchase_part_edges)
     return ktruss(_copurchase_part_edges(spark, sf_dir), k=3, rounds=3)
-
-
-# --------------------------------------------------------------------------
-# X199 — sequence-packing economics (operators/packing.py
-# packing_efficiency): padding-vs-packing waste per candidate context
-# length — all exact int64 token arithmetic, two final divisions.
-# --------------------------------------------------------------------------
-@query(
-    "x199_packing_efficiency",
-    r"""
-    WITH t AS (SELECT CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-                                           x -> x <> '')) AS BIGINT) AS tok
-               FROM documents),
-    g AS (SELECT seq_len,
-                 CAST(COUNT(*) AS BIGINT) AS n_docs,
-                 CAST(SUM(tok) AS BIGINT) AS total_tokens,
-                 CAST(SUM(CASE WHEN tok < seq_len THEN seq_len - tok ELSE 0 END)
-                      AS BIGINT) AS pad_tokens,
-                 CAST(SUM(CASE WHEN tok > seq_len THEN tok - seq_len ELSE 0 END)
-                      AS BIGINT) AS trunc_tokens
-          FROM t CROSS JOIN (VALUES (CAST(256 AS BIGINT)), (512), (1024), (2048))
-                            ls(seq_len)
-          GROUP BY 1)
-    SELECT seq_len, n_docs, total_tokens, pad_tokens, trunc_tokens,
-           CAST((total_tokens + seq_len - 1) // seq_len AS BIGINT) AS n_seqs_packed,
-           ROUND(CAST(total_tokens - trunc_tokens AS DOUBLE)
-                 / CAST(n_docs * seq_len AS DOUBLE), 9) AS util_padded_r,
-           ROUND(CAST(total_tokens AS DOUBLE)
-                 / CAST(((total_tokens + seq_len - 1) // seq_len) * seq_len
-                        AS DOUBLE), 9) AS util_packed_r
-    FROM g
-    """,
-)
-def x199_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Padding-vs-packing token waste at context lengths 256..2048."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-        packing_efficiency,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return packing_efficiency(docs, seq_lens=(256, 512, 1024, 2048))
 
 
 # --------------------------------------------------------------------------
@@ -12082,55 +10836,6 @@ def x232_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X233 — per-source boilerplate detection (operators/quality.py
-# boilerplate_by_source): the C4/CCNet template-removal stage as a
-# per-source scorecard; x176's 4-token segmentation, one word-count-
-# shaped (source, line) aggregation.
-# --------------------------------------------------------------------------
-@query(
-    "x233_boilerplate",
-    """
-    WITH t AS (SELECT doc_id, source,
-                      string_split_regex(trim(text), '\\s+') AS toks
-               FROM documents),
-    e AS (SELECT doc_id, source, unnest(toks) AS tok,
-                 unnest(range(1, len(toks) + 1)) AS pos FROM t),
-    l AS (SELECT source, doc_id, CAST(floor((pos - 1) / 4) AS BIGINT) AS lpos,
-                 string_agg(tok, ' ' ORDER BY pos) AS line,
-                 CAST(COUNT(*) AS BIGINT) AS ntok
-          FROM e GROUP BY 1, 2, 3),
-    per_line AS (SELECT source, line,
-                        CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
-                        CAST(SUM(ntok) AS BIGINT) AS tok_mass
-                 FROM l GROUP BY 1, 2),
-    dps AS (SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-                   CAST(COUNT(*) AS BIGINT) AS n_lines
-            FROM l GROUP BY 1),
-    roll AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_distinct_lines,
-                    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                      AS n_boilerplate_lines,
-                    CAST(SUM(CASE WHEN df >= 2 THEN tok_mass ELSE 0 END) AS BIGINT)
-                      AS bp_mass,
-                    CAST(SUM(tok_mass) AS BIGINT) AS mass
-             FROM per_line GROUP BY 1)
-    SELECT dps.source, n_docs, n_lines, n_distinct_lines, n_boilerplate_lines,
-           ROUND(CASE WHEN mass > 0
-                      THEN CAST(bp_mass AS DOUBLE) / CAST(mass AS DOUBLE)
-                      ELSE 0.0 END, 9) AS boilerplate_token_share_r
-    FROM dps JOIN roll USING (source)
-    """,
-)
-def x233_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """How much of each source's token mass is repeated template?"""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        boilerplate_by_source,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return boilerplate_by_source(docs, line_tokens=4, min_df=2)
-
-
-# --------------------------------------------------------------------------
 # X234 — MinHash estimator audit (operators/dedup.py
 # minhash_jaccard_audit): exact Jaccard vs 32-permutation MinHash
 # estimate per qualifying pair — portable md5 base hash so DuckDB
@@ -12332,8 +11037,8 @@ def x237_msttr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # X238 — corpus line-duplication profile (operators/dedup.py
 # line_duplication_profile): histogram of line multiplicities with
-# token-mass accounting — the datasheet shape question before x176/x233
-# act on it.
+# token-mass accounting — the datasheet shape question before x176
+# acts on it.
 # --------------------------------------------------------------------------
 @query(
     "x238_line_dup_profile",
@@ -12369,52 +11074,6 @@ def x238_line_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return line_duplication_profile(docs, line_tokens=4)
-
-
-# --------------------------------------------------------------------------
-# X239 — dedup survivor-bias audit (operators/quality.py
-# dedup_survivor_bias): Gopher pass rate + mean tokens of kept vs
-# dropped docs under the greedy 3-gram near-dedup — does dedup shift
-# the quality distribution?
-# --------------------------------------------------------------------------
-def _x239_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality_sql
-
-    gq = gopher_quality_sql("documents", thresholds=_GOPHER_TUNING)
-    return f"""
-    WITH {SHINGLE_CTES},
-    p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.ns AS na, b.ns AS nb,
-                 COUNT(*) AS inter
-          FROM e a JOIN e b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4),
-    drops AS (SELECT DISTINCT id_b AS doc_id FROM p
-              WHERE ROUND(inter / (na + nb - inter), 9) >= 0.2),
-    g AS ({gq}),
-    j AS (SELECT CASE WHEN drops.doc_id IS NOT NULL THEN 'dropped'
-                      ELSE 'kept' END AS status,
-                 g.n_tokens, CASE WHEN g.pass_gopher THEN 1 ELSE 0 END AS pg
-          FROM g LEFT JOIN drops USING (doc_id))
-    SELECT status, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(pg) AS BIGINT) AS n_pass_gopher,
-           ROUND(CAST(SUM(pg) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-             AS pass_rate_r,
-           ROUND(CAST(SUM(n_tokens) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-             AS mean_tokens_r
-    FROM j GROUP BY 1
-    """
-
-
-@query("x239_dedup_survivor_bias", _x239_sql())
-def x239_dedup_survivor_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Did near-dedup drop different-quality docs than it kept?"""
-    from dbms_data_anonymity_differential_privacy_spark.operators.dedup import ngram_jaccard_pairs
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        dedup_survivor_bias,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.2, n=3)
-    return dedup_survivor_bias(docs, pairs, thresholds=_GOPHER_TUNING)
 
 
 # --------------------------------------------------------------------------

@@ -82,38 +82,3 @@ def write_adult_csv(df: DataFrame, path: str, mode: str = "error") -> None:
     round-trips through ``readers.read_adult_csv``."""
     df.write.mode(mode).option("header", True).option("nullValue", "?").csv(path)
 
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    n_shards: int,
-    salt: str = "",
-    mode: str = "error",
-) -> None:
-    """X47 — publish a training-ready sharded export.
-
-    Composes ``operators.sampling.assign_shards`` (deterministic shard
-    membership + content-hash sort key) with the physical layout a
-    dataloader wants: exactly one sorted parquet file per ``shard=N/``
-    directory. ``repartition(shard)`` routes each shard to one task and
-    ``sortWithinPartitions(shard, sort_key)`` bakes in the pseudo-random
-    row order, so a sequential reader of one file sees the exported
-    permutation with zero runtime shuffling.
-
-    Scale: shard count is the parallelism — pick n_shards ≈ data /
-    target-file-size (the usual 100 TB export is thousands of ~1 GB
-    shards, well inside the [1, 2^20] operator bound). Contents per shard
-    are layout-independent (content-hash membership), so re-exports after
-    appends only ADD rows to shards, never move them.
-    """
-    from ..operators.sampling import assign_shards
-
-    sharded = assign_shards(df, key_cols, n_shards, salt=salt)
-    (
-        sharded.repartition(int(n_shards), "shard")
-        .sortWithinPartitions("shard", "sort_key")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path)
-    )

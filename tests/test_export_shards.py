@@ -1,4 +1,4 @@
-"""X47 — deterministic shard assignment + sharded training export.
+"""X47 — deterministic shard assignment.
 X46 — user-level DP distinct counts (dp_count_distinct_users)."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from dbms_data_anonymity_differential_privacy_spark.operators.dp import (
     dp_count_distinct_users,
 )
 from dbms_data_anonymity_differential_privacy_spark.operators.sampling import assign_shards
-from dbms_data_anonymity_differential_privacy_spark.sources.writers import write_training_shards
 
 
 @pytest.fixture(scope="module")
@@ -55,32 +54,6 @@ def test_n_shards_validated(docs):
         assign_shards(docs, ["doc_id"], 0)
     with pytest.raises(ValueError):
         assign_shards(docs, ["doc_id"], (1 << 20) + 1)
-
-
-def test_write_training_shards_layout(docs, tmp_path, spark):
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path, ["doc_id"], 4, salt="t")
-    # one sorted file per shard directory
-    import glob
-
-    for shard in range(4):
-        files = [
-            f
-            for f in glob.glob(f"{path}/shard={shard}/*")
-            if f.endswith(".parquet") or ".parquet" in f
-        ]
-        assert len(files) == 1, files
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    # within-file order is the sort_key order (read order == file order for
-    # a single parquet file scanned by one task)
-    one = spark.read.parquet(f"{path}/shard=0").limit(10_000)
-    keys = [r["sort_key"] for r in one.collect()]
-    assert keys == sorted(keys)
-    # contents per shard match the plan relation
-    expect = assign_shards(docs, ["doc_id"], 4, salt="t").filter(F.col("shard") == 0)
-    got_ids = {r["doc_id"] for r in spark.read.parquet(f"{path}/shard=0").select("doc_id").collect()}
-    assert got_ids == {r["doc_id"] for r in expect.select("doc_id").collect()}
 
 
 # ---------------------------------------------------------------- X46 ----
@@ -143,29 +116,6 @@ def test_budget_spend_and_validation(events):
         dp_count_distinct_users(
             events, ["event_type"], "user_id", epsilon=1.0, max_groups=0, release="x"
         )
-
-
-# ------------------------------------------------- pipe_training_export ----
-
-
-def test_training_export_funnel_consistent(docs):
-    from dbms_data_anonymity_differential_privacy_spark import pipelines
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text
-    from dbms_data_anonymity_differential_privacy_spark.operators.dedup import dedup_by_fingerprint
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality
-
-    th = {"min_stopwords": 1}
-    plan = pipelines.training_export_plan(docs, n_shards=4, gopher_thresholds=th)
-    rows = plan.collect()
-    # plan totals equal the manually-composed funnel
-    cleaned = docs.select("doc_id", "lang", clean_text(F.col("text")).alias("text"))
-    gated = gopher_quality(cleaned, thresholds=th, keep_cols=("lang", "text"))
-    kept = gated.filter(F.col("pass_gopher"))
-    surviving = dedup_by_fingerprint(kept.select("doc_id", "lang", "text", "n_tokens"))
-    assert sum(r["n_docs"] for r in rows) == surviving.count()
-    assert surviving.count() <= kept.count() <= docs.count()
-    assert {r["shard"] for r in rows} <= set(range(4))
-    assert all(r["total_tokens"] > 0 for r in rows)
 
 
 # ------------------------------------------------------- snapshot diff ----

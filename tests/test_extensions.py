@@ -1,4 +1,4 @@
-"""Extension operators: DP, dedup, similarity, text, multimodal (SURVEY §2c)."""
+"""Extension operators: DP, dedup, similarity, text (SURVEY §2c)."""
 
 from __future__ import annotations
 
@@ -503,29 +503,6 @@ def test_dp_stream_release_identical_to_batch(spark, sf0001, tmp_path):
     assert any(exact != dp for exact, dp in batch.values())  # noise present
 
 
-def test_multimodal_plumbing(spark, sf0001):
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        decode_media,
-        documents_as_media,
-        extract_features,
-    )
-
-    docs = load_table(spark, sf0001, "documents")
-    media = documents_as_media(docs)
-    feats = extract_features(media).collect()
-    assert len(feats) == docs.count()
-    for r in feats[:20]:
-        assert r.n_bytes > 0
-        assert len(r.feature) == 3
-        assert r.feature[0] == float(r.n_bytes)
-    # JPEG decodes for real now (test_multimodal_codecs); truncated bytes
-    # are a data error, and codec-less formats still refuse honestly
-    with pytest.raises(ValueError):
-        decode_media(b"\xff\xd8\xff", "image/jpeg")
-    with pytest.raises(NotImplementedError):
-        decode_media(b"RIFFxxxxWEBP", "image/webp")
-
-
 def test_ivf_topk_recall(spark, sf0001):
     from dbms_data_anonymity_differential_privacy_spark.operators.similarity import ivf_index, ivf_topk
     from dbms_data_anonymity_differential_privacy_spark import load_table
@@ -812,50 +789,38 @@ def test_group_percentiles_exact_and_sketch_band(spark, sf0001):
 
 
 def test_tokenization_consistent_across_text_operators(spark, sf0001):
-    """vocab_stats, BM25, and sequence packing all claim the engine's one
-    tokenization convention (lower, trim, whitespace split, empty tokens
-    dropped). Drift between them would silently corrupt cross-operator
-    pipelines: total corpus tokens must agree between packing's per-doc
-    counts and the vocabulary's term frequencies."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-        pack_concat_chunks,
+    """vocab_stats and the per-doc token counter both claim the engine's
+    one tokenization convention (lower, trim, whitespace split, empty
+    tokens dropped). Drift between them would silently corrupt
+    cross-operator pipelines: total corpus tokens must agree between the
+    per-doc counts and the vocabulary's term frequencies."""
+    from dbms_data_anonymity_differential_privacy_spark.operators.text import (
+        token_count,
+        vocab_stats,
     )
-    from dbms_data_anonymity_differential_privacy_spark.operators.text import vocab_stats
 
     docs = load_table(spark, sf0001, "documents")
-    packed_total = (
-        pack_concat_chunks(docs, seq_len=512).agg(F.sum("n_tokens")).first()[0]
-    )
+    doc_total = docs.agg(F.sum(token_count(F.col("text")))).first()[0]
     # top_k far above the distinct-token count (covers the whole vocab)
     # but bounded: TakeOrdered allocates its heap eagerly, so a huge
     # literal limit risks driver memory for nothing
     vocab_total = (
         vocab_stats(docs, top_k=10**6).agg(F.sum("term_freq")).first()[0]
     )
-    assert packed_total == vocab_total > 0
+    assert doc_total == vocab_total > 0
 
 
 def test_degenerate_inputs_dont_crash(spark):
     """Empty and all-null inputs: operators must return empty/zero
-    results (or raise a clear ValueError where contractually required),
-    never a confusing runtime failure deep in a plan."""
-    import pytest as _pytest
-
+    results, never a confusing runtime failure deep in a plan."""
     from dbms_data_anonymity_differential_privacy_spark import (
         k_anonymize_suppress,
         ncp,
         reid_risk,
     )
     from dbms_data_anonymity_differential_privacy_spark.operators.dedup import dedup_exact
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-        pack_concat_chunks,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    assert pack_concat_chunks(empty_docs, seq_len=16).count() == 0
-    with _pytest.raises(ValueError):
-        bm25_topk(empty_docs, ["x"])
     assert dedup_exact(empty_docs, ["text"], "doc_id").count() == 0
 
     empty_cust = spark.createDataFrame(
@@ -873,82 +838,6 @@ def test_degenerate_inputs_dont_crash(spark):
     assert k_anonymize_suppress(nulls, ["c_nationkey", "c_mktsegment"], 1).count() == 0
     n = ncp(nulls, nulls.limit(0), ["c_nationkey"]).first()
     assert n is not None  # defined (degenerate) rather than crashing
-
-
-def test_pack_chunks_layout_invariants(spark, sf0001):
-    """Concat-and-chunk layout: offsets are the exact prefix sums in id
-    order (checked against a python cumsum), documents tile the token
-    stream with no gaps or overlaps, and chunk ranges match div
-    arithmetic. Also pins partitioning-independence: a 3-partition
-    re-layout of the input produces identical rows."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-        pack_concat_chunks,
-    )
-
-    docs = load_table(spark, sf0001, "documents")
-    L = 128
-    rows = sorted(
-        pack_concat_chunks(docs, seq_len=L).collect(), key=lambda r: r.doc_id
-    )
-    acc = 0
-    for r in rows:
-        assert r.tok_start == acc  # gapless tiling in id order
-        acc += r.n_tokens
-        if r.n_tokens > 0:
-            assert r.chunk_first == r.tok_start // L
-            assert r.chunk_last == (r.tok_start + r.n_tokens - 1) // L
-            assert r.n_chunks == r.chunk_last - r.chunk_first + 1
-        else:
-            assert r.chunk_first is None and r.n_chunks == 0
-    re_laid = sorted(
-        pack_concat_chunks(docs.repartition(3), seq_len=L).collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert re_laid == rows
-
-
-def test_bm25_crafted_corpus_exact_scores(spark):
-    """BM25 on a 4-doc corpus with hand-computable tf/dl/df: scores must
-    equal the textbook formula exactly (same rounding), ranking and
-    tie-break must hold, and zero-hit docs must be absent."""
-    import math
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "cat cat cat dog"),      # tf(cat)=3, dl=4
-            (2, "cat fish"),             # tf(cat)=1, dl=2
-            (3, "dog dog bird"),         # no cat, no fish... dog only
-            (4, "whale plankton"),       # zero query hits
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.score for r in bm25_topk(docs, ["cat", "fish"], k=10).collect()}
-    assert set(got) == {1, 2}  # docs 3,4 match no term
-
-    k1, b = 1.2, 0.75
-    n, avgdl = 4, (4 + 2 + 3 + 2) / 4
-    def idf(df_t):
-        return math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
-    def part(tf, dl):
-        return (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-    exp1 = round(idf(2) * part(3, 4) + idf(1) * 0.0, 6)
-    exp2 = round(idf(2) * part(1, 2) + idf(1) * part(1, 2), 6)
-    assert got[1] == pytest.approx(exp1, abs=1e-9)
-    assert got[2] == pytest.approx(exp2, abs=1e-9)
-
-
-def test_bm25_rare_term_outranks_common(spark, sf0001):
-    """idf sanity on the real corpus: a doc hitting a rarer term must be
-    reachable in top-k, and k bounds the output."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import bm25_topk
-
-    docs = load_table(spark, sf0001, "documents")
-    top = bm25_topk(docs, ["hash", "join", "vector"], k=5).collect()
-    assert 0 < len(top) <= 5
-    scores = [r.score for r in top]
-    assert scores == sorted(scores, reverse=True)
 
 
 def test_publish_then_reaudit_roundtrip(spark, sf0001, tmp_path):
@@ -1038,26 +927,6 @@ def test_near_dedup_corpus_invariants(spark, sf001):
     min_ids = {min(r.id_a, r.id_b) for r in pairs.collect()}
     kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
     assert (min_ids - {r.id_b for r in pairs.collect()}) <= kept_ids
-
-
-def test_multimodal_resize_and_frames(spark, sf0001):
-    from dbms_data_anonymity_differential_privacy_spark.operators.multimodal import (
-        documents_as_media,
-        frame_sample,
-        resize_media,
-    )
-    from dbms_data_anonymity_differential_privacy_spark import load_table
-
-    media = documents_as_media(load_table(spark, sf0001, "documents"))
-    n = media.count()
-    rs = resize_media(media, width=8, height=8)
-    rows = rs.collect()
-    assert len(rows) == n
-    assert all(len(r.content) == 64 and r.width == 8 for r in rows)
-    fr = frame_sample(media, every_n_bytes=32, max_frames=4)
-    per = fr.groupBy("media_id").count().collect()
-    assert len(per) == n
-    assert all(1 <= r["count"] <= 4 for r in per)
 
 
 def test_dp_release_uniqueness_enforced(spark, sf0001):
@@ -1520,63 +1389,6 @@ def test_incremental_admit_empty_batch(spark):
     assert incremental_admit(batch, corpus).count() == 0
 
 
-def test_streaming_corpus_curation_matches_batch(spark, sf0001, tmp_path):
-    """The clean+Gopher curation projection (streaming/corpus.py) is
-    stateless map-only, so the streaming run over the same file must be
-    BYTE-IDENTICAL to the batch run — cleaned text, every statistic, and
-    the per-language rollup."""
-    import shutil
-
-    from dbms_data_anonymity_differential_privacy_spark.streaming.corpus import (
-        curate,
-        curate_stats,
-        documents_readstream,
-    )
-
-    tuned = {"min_stopwords": 1}  # corpus has <= 1 stopword/doc (see x27)
-    docs = load_table(spark, sf0001, "documents")
-    batch = {r["doc_id"]: r.asDict() for r in curate(docs, tuned).collect()}
-    batch_stats = {
-        r["lang"]: (r["n_docs"], r["total_tokens"]) for r in curate_stats(docs, tuned).collect()
-    }
-
-    stream_dir = tmp_path / "docs"
-    stream_dir.mkdir()
-    shutil.copy(f"{sf0001}/documents.parquet", stream_dir / "part-000.parquet")
-    stream = documents_readstream(spark, str(stream_dir))
-    q = (
-        curate(stream, tuned)
-        .writeStream.format("memory")
-        .queryName("curate_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt1"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"]: r.asDict() for r in spark.sql("SELECT * FROM curate_stream_test").collect()}
-    assert got == batch
-    # curated stream is a strict filter of the corpus with clean text
-    assert 0 < len(got) <= docs.count()
-    assert all(r["pass_gopher"] for r in got.values())
-
-    q2 = (
-        curate_stats(stream, tuned)
-        .writeStream.format("memory")
-        .queryName("curate_stats_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q2.awaitTermination(120)
-    got_stats = {
-        r["lang"]: (r["n_docs"], r["total_tokens"])
-        for r in spark.sql("SELECT * FROM curate_stats_test").collect()
-    }
-    assert got_stats == batch_stats
-
-
 def test_repeated_span_stats_and_removal(spark):
     """x40: cross-doc duplicated token windows are found with exact
     interval-union coverage, and the removal half cuts exactly the
@@ -1686,35 +1498,6 @@ def test_dedup_corpus_best_keeps_highest_score(spark):
 
     with pytest.raises(ValueError, match="score_col"):
         dedup_corpus(docs, pairs, policy="best")
-
-
-def test_bm25_many_matches_per_query_singles(spark, sf0001):
-    """x83: the batched ranker must reproduce each query's single-query
-    bm25_topk ranking exactly (same scores, same tie order), including a
-    single-term query."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import (
-        bm25_topk,
-        bm25_topk_many,
-    )
-
-    docs = load_table(spark, sf0001, "documents")
-    queries = {7: ["hash", "join"], 9: ["vector"], 11: ["scan", "filter", "merge"]}
-    batched = {}
-    for r in bm25_topk_many(docs, queries, k=6).collect():
-        batched.setdefault(r.query_id, []).append((r.rnk, r.doc_id, r.score))
-    for qid, terms in queries.items():
-        single = [
-            (i + 1, r.doc_id, r.score)
-            for i, r in enumerate(bm25_topk(docs, terms, k=6).collect())
-        ]
-        assert sorted(batched[qid]) == single, f"query {qid} diverged"
-
-    import pytest
-
-    with pytest.raises(ValueError, match="at least one query"):
-        bm25_topk_many(docs, {}, k=3)
-    with pytest.raises(ValueError, match="no terms"):
-        bm25_topk_many(docs, {1: []}, k=3)
 
 
 def test_streaming_rolling_anomaly_matches_batch_closed_buckets(spark, sf0001, tmp_path):
@@ -1924,26 +1707,6 @@ def test_weighted_median_crafted(spark):
     out = {r.g: r for r in weighted_median(df, ["g"], "v", "w").collect()}
     assert out["g1"].weighted_median == 3.0 and out["g1"].w_total == 100
     assert out["g2"].weighted_median == 10.0
-
-
-def test_top_p_support_crafted(spark):
-    """X116: boundary value crossing p is KEPT (nucleus rule); ties rank
-    by value; p=1 keeps everything."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import top_p_support
-
-    rows = ["a"] * 50 + ["b"] * 30 + ["c"] * 15 + ["d"] * 5
-    df = spark.createDataFrame([("g", v) for v in rows], "g string, v string")
-    out = {r.value: r for r in top_p_support(df, ["g"], "v", p=0.9).collect()}
-    # prefix masses: a:0, b:50, c:80, d:95 -> kept iff prev < 90
-    assert out["a"].kept and out["b"].kept and out["c"].kept
-    assert not out["d"].kept
-    assert [out[v].rank for v in "abcd"] == [1, 2, 3, 4]
-    all_kept = top_p_support(df, ["g"], "v", p=1.0).collect()
-    assert all(r.kept for r in all_kept)
-    import pytest
-
-    with pytest.raises(ValueError):
-        top_p_support(df, ["g"], "v", p=0.0)
 
 
 def test_oov_rate_crafted(spark):

@@ -229,31 +229,6 @@ class TestMadOutliers:
             assert approx[k]["mad"] == pytest.approx(e["mad"], rel=0.10)
 
 
-class TestEventAnalyticsPipeline:
-    def test_composition_consistent_with_operators(self, spark, sf001):
-        from dbms_data_anonymity_differential_privacy_spark import pipelines
-        from dbms_data_anonymity_differential_privacy_spark.operators.stats import (
-            transition_matrix,
-        )
-
-        ev = spark.read.parquet(f"{sf001}/events.parquet")
-        row = pipelines.event_analytics_summary(ev).collect()[0]
-        assert row["n_events"] == ev.count()
-        assert row["n_users"] == ev.select("user_id").distinct().count()
-        # rates are proper fractions and ordered like the funnel
-        assert 0 < row["purchase_rate_r"] <= row["click_rate_r"] <= 1.0
-        assert 0 < row["week1_retention_r"] <= 1.0
-        # the top transition really is the max-count pair
-        top = (
-            transition_matrix(ev)
-            .orderBy(F.col("cnt").desc(), "from_type", "to_type")
-            .limit(1)
-            .collect()[0]
-        )
-        assert (row["top_from"], row["top_to"]) == (top["from_type"], top["to_type"])
-        assert 0 <= row["busiest_hour"] <= 23
-
-
 class TestAttribution:
     def test_last_touch_wins_and_none_bucket(self, spark):
         from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (

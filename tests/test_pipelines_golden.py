@@ -285,54 +285,6 @@ def test_adult_csv_end_to_end(spark, adult_pdf, tmp_path):
     assert row["suppression_rate"] == pytest.approx(want["suppression_rate"], abs=1e-8)
 
 
-def test_private_export_accounting_consistency(spark, sf0001):
-    """pipe_private_export: per-cell redaction counts are bounded by doc
-    counts; every shard is in range; and the redacted funnel never keeps
-    more docs than the corpus holds."""
-    from dbms_data_anonymity_differential_privacy_spark import load_table, pipelines
-
-    docs = load_table(spark, sf0001, "documents")
-    plan = pipelines.private_export_plan(
-        docs, n_shards=4, gopher_thresholds={"min_stopwords": 1}
-    ).collect()
-    assert plan  # non-trivial at sf0.001
-    assert all(0 <= r.n_docs_redacted <= r.n_docs for r in plan)
-    assert all(0 <= r.shard < 4 for r in plan)
-    assert 0 < sum(r.n_docs for r in plan) <= docs.count()
-    assert all(r.total_tokens > 0 for r in plan)
-
-
-def test_corpus_datasheet_consistency(spark, sf001):
-    """pipe_corpus_datasheet: each card field equals its source operator
-    computed independently (the pipe_event_analytics convention)."""
-    from pyspark.sql import functions as F
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality
-    from dbms_data_anonymity_differential_privacy_spark.operators.text import fingerprint
-    from dbms_data_anonymity_differential_privacy_spark.pipelines import corpus_datasheet
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf001, "documents")
-    row = corpus_datasheet(docs, gopher_thresholds={"min_stopwords": 1}).collect()[0]
-    n_docs = docs.count()
-    assert row.n_docs == n_docs
-    n_fp = docs.select(fingerprint(F.col("text")).alias("f")).distinct().count()
-    assert row.dup_rate_r == round(1.0 - n_fp / n_docs, 9)
-    n_pass = (
-        gopher_quality(docs, thresholds={"min_stopwords": 1})
-        .where("pass_gopher")
-        .count()
-    )
-    assert row.gopher_pass_rate_r == round(n_pass / n_docs, 9)
-    top = (
-        docs.groupBy("lang").count()
-        .orderBy(F.desc("count"), F.asc("lang")).limit(1).collect()[0]
-    )
-    assert row.top_lang == top["lang"]
-    assert row.top_lang_share_r == round(top["count"] / n_docs, 9)
-    assert 0.0 <= row.mean_quality_r <= 1.0
-
-
 def test_three_pipeline_readme_shape_relationships(adult_sdf):
     """End-to-end semantic invariants of the FULL three-pipeline run,
     mirroring the reference's published relationships (BASELINE.md /

@@ -17,8 +17,7 @@ import pytest
 from dbms_data_anonymity_differential_privacy_spark import queries_registry as qr
 
 # ML-backed queries fit a model while *building* the DataFrame — exclude
-# from the sweep (their plans are MLlib-internal); multimodal uses Arrow
-# pandas UDFs by design.
+# from the sweep (their plans are MLlib-internal).
 SWEEP_EXCLUDE = {
     "c03_cluster_assign",
     "c03_cluster_generalize",
@@ -50,7 +49,7 @@ def plans(spark, sf001) -> dict[str, str]:
 def test_no_row_at_a_time_python_anywhere(plans):
     """BatchEvalPython = per-row Python UDF — forbidden in every contract
     query. (ArrowEvalPython/MapInPandas are the sanctioned vectorized
-    escape hatches, used only by multimodal.)"""
+    escape hatches.)"""
     offenders = [n for n, p in plans.items() if "BatchEvalPython" in p]
     assert offenders == []
 
@@ -246,30 +245,6 @@ def test_cosine_pairs_topm_partial_window_limit(plans):
     assert re.search(r"WindowGroupLimit.*Partial", p)
 
 
-def test_pack_chunks_no_single_reducer(plans):
-    """x21 packing: the global prefix sum must run as the two-pass
-    distributed formulation — range partition + per-partition offsets +
-    window partitioned by partition id. A naive SUM OVER (ORDER BY) plan
-    would show Exchange SinglePartition (every row through one reducer);
-    that operator must never appear."""
-    p = plans["x21_pack_chunks"]
-    assert "SinglePartition" not in p
-    assert "rangepartitioning" in p
-    assert "BroadcastExchange" in p  # partition offsets join
-
-
-def test_bm25_is_map_only_takeordered(plans):
-    """x20 BM25: the scoring scan is map-only (tf/dl are per-row array
-    folds — no token explode, no aggregation shuffle of token rows) and
-    the top-k compiles to TakeOrderedAndProject. The only aggregations
-    are the two scalar corpus-stat jobs run while BUILDING the frame,
-    which don't appear in this final plan."""
-    p = plans["x20_bm25_search"]
-    assert "TakeOrderedAndProject" in p
-    assert "Exchange hashpartitioning" not in p
-    assert "Generate" not in p  # no explode in the scoring path
-
-
 def test_contamination_probe_broadcasts_bench(plans):
     """x18: the benchmark shingle set is the broadcast side — the corpus
     scan must not shuffle for the membership probe."""
@@ -295,16 +270,6 @@ def test_clean_ops_are_map_only(plans):
         assert len(re.findall(r"Scan parquet|FileScan parquet", p)) == 1, name
         assert "Exchange hashpartitioning" not in p, name
         assert "pythonUDF" not in p, name
-
-
-def test_gopher_gate_is_map_only(plans):
-    """x27: the whole rule set is per-row array folds — no aggregation
-    exchange may appear (the only allowed exchange is the fan-out
-    round-robin on narrow test inputs)."""
-    p = plans["x27_gopher_quality"]
-    assert len(re.findall(r"Scan parquet|FileScan parquet", p)) == 1
-    assert "Exchange hashpartitioning" not in p
-    assert "pythonUDF" not in p
 
 
 def test_incremental_admit_shuffles_hashes_not_strings(plans):
@@ -403,20 +368,6 @@ def test_knn_join_corpus_never_shuffles(plans):
     assert len(re.findall(r"Exchange hashpartitioning", p)) <= 1
 
 
-def test_bm25_many_single_scan_partial_window_limit(plans):
-    """x83: batched BM25 scores every query off ONE shared tf relation
-    (the persisted base appears as an InMemoryTableScan — explain prints
-    the cached child's FileScan twice, so scan-count is not the gate),
-    with no Python, and the per-query rank<=k runs as a map-side
-    WindowGroupLimit Partial; the only hash exchange is the slim
-    (query_id) window input."""
-    p = plans["x83_bm25_many"]
-    assert "InMemoryTableScan" in p  # scoring reads the shared tf relation
-    assert "pythonUDF" not in p
-    assert re.search(r"WindowGroupLimit.*Partial", p)
-    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
-
-
 def test_qi_search_single_cube_pass(plans):
     """x100: ALL 2^m QI subsets come from ONE cube() Expand + partial-agg
     shuffle (the x33 lever) + a kilobyte re-agg — never a per-subset
@@ -435,14 +386,6 @@ def test_hard_negatives_corpus_never_shuffles(plans):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     assert re.search(r"WindowGroupLimit.*Partial", p)
     assert len(re.findall(r"Exchange hashpartitioning", p)) <= 1
-
-
-def test_sliding_chunks_map_only(plans):
-    """x130 must not shuffle at all: sequence+explode chunk fan-out is a
-    per-row Generate over the scan."""
-    p = plans["x130_chunks"]
-    assert "Exchange hashpartitioning" not in p
-    assert "Generate explode" in p
 
 
 def test_bloom_probe_broadcasts_position_set(plans):
@@ -480,15 +423,6 @@ def test_skyline_broadcast_joinback_no_cartesian(plans):
     # fact rows shuffle exactly once (the per-d1 collapse); the bucketed
     # prune + global sweep run on the slim group relation
     assert len(re.findall(r"Exchange hashpartitioning", p)) <= 2
-
-
-def test_dsir_broadcasts_llr_table(plans):
-    """x154: the per-word LLR relation (vocab-sized) broadcasts onto the
-    token stream — fact tokens never shuffle to be scored; the only fact
-    shuffles are the word-count and per-doc aggregations."""
-    p = plans["x154_dsir_weights"]
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
 
 
 def test_adamic_adar_broadcast_degrees_takeordered_cut(plans):

@@ -200,23 +200,6 @@ def test_clean_text_idempotent_and_canonical(spark, batch):
         assert not (r["c1"].startswith(" ") or r["c1"].endswith(" "))
 
 
-@given(batch=st.lists(texts, min_size=1, max_size=6))
-@settings(**SETTINGS)
-def test_gopher_stats_are_bounded(spark, batch):
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import gopher_quality
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(batch)], "doc_id long, text string"
-    )
-    for r in gopher_quality(df).collect():
-        assert r["n_tokens"] >= 0
-        for c in ("alpha_word_frac", "bullet_line_frac", "ellipsis_line_frac"):
-            assert 0.0 <= r[c] <= 1.0, c
-        assert r["symbol_ratio"] >= 0.0
-        assert 0 <= r["n_stopwords"] <= 8
-        assert r["mean_word_len"] >= 0.0
-
-
 @given(
     words=st.lists(
         st.text(alphabet="abcdef", min_size=1, max_size=6), min_size=1, max_size=20

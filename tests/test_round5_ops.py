@@ -118,36 +118,6 @@ def test_bloom_membership_no_false_negatives(spark):
     assert fps < 500
 
 
-def test_sliding_chunks_cover_every_token(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import sliding_chunks
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"t{i}" for i in range(25))),  # 25 tokens
-         (2, "one"),                                  # 1 token
-         (3, "   "),                                  # 0 tokens -> no chunks
-         (4, " ".join(f"u{i}" for i in range(10)))],  # exactly chunk_size
-        ["doc_id", "text"],
-    )
-    out = sliding_chunks(docs, chunk_size=10, overlap=3).collect()
-    by_doc: dict = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert 3 not in by_doc
-    assert len(by_doc[2]) == 1 and by_doc[2][0].chunk_tokens == 1
-    assert len(by_doc[4]) == 1 and by_doc[4][0].chunk_tokens == 10
-    # doc 1: starts 0,7,14,21 -> 4 chunks; union covers [0,25); stride 7
-    c1 = sorted(by_doc[1], key=lambda r: r.chunk_id)
-    assert [r.start_tok for r in c1] == [0, 7, 14, 21]
-    assert c1[-1].end_tok == 25
-    covered = set()
-    for r in c1:
-        assert 0 < r.chunk_tokens <= 10
-        covered.update(range(r.start_tok, r.end_tok))
-    assert covered == set(range(25))
-    with pytest.raises(ValueError):
-        sliding_chunks(docs, chunk_size=5, overlap=5)
-
-
 def test_containment_catches_subset_docs(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.dedup import (
         containment_pairs,
@@ -380,33 +350,6 @@ def test_retrieval_eval_perfect_and_empty(spark):
     # id 3: n_rel == 0 -> ratio metrics NULL, mrr floor 0.0
     assert out[3].n_rel == 0
     assert out[3].recall_k is None and out[3].ndcg is None and out[3].mrr == 0.0
-
-
-def test_rrf_fuse_hand_case(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import rrf_fuse, rrf_weights
-
-    wt = dict(rrf_weights(5, k0=60))
-    a = spark.createDataFrame([(10, 1), (11, 2), (12, 3)], ["doc_id", "rnk"])
-    b = spark.createDataFrame([(11, 1), (13, 2)], ["doc_id", "rnk"])
-    out = {r.doc_id: r for r in rrf_fuse([a, b], max_rank=5).collect()}
-    # doc 11 appears in both lists -> highest fused score
-    assert out[11].n_lists == 2 and out[11].best_rank == 1
-    assert out[11].rrf_int == wt[2] + wt[1]
-    assert out[11].fused_rank == 1
-    # single-list docs score exactly their one weight
-    assert out[10].rrf_int == wt[1] and out[13].rrf_int == wt[2]
-    assert out[12].rrf_int == wt[3]
-    # rank 1 in one list beats rank 2 in one list
-    assert out[10].fused_rank < out[13].fused_rank
-    assert out[11].rrf == round((wt[2] + wt[1]) / 1e12, 9)
-
-
-def test_rrf_fuse_rank_overflow_fails_loudly(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.search import rrf_fuse
-
-    a = spark.createDataFrame([(10, 7)], ["doc_id", "rnk"])
-    with pytest.raises(Exception, match="max_rank"):
-        rrf_fuse([a], max_rank=5).collect()
 
 
 def _acf_events(spark, counts):

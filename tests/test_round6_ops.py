@@ -1,4 +1,4 @@
-"""Round-6 operators: skyline, importance weights, link prediction,
+"""Round-6 operators: skyline, link prediction,
 rank statistics, permutation tests, quantile normalization, label
 propagation, isotonic calibration, association rules."""
 
@@ -66,44 +66,6 @@ def test_skyline_kd_matches_bruteforce(spark, k):
         tuple(r[c] for c in cols) for r in skyline_kd(df, cols, payload=["pid"]).collect()
     )
     assert got == _brute_skyline(pts)
-
-
-def test_dsir_importance_matches_bruteforce(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.mixing import dsir_importance
-
-    docs = [
-        (1, "cat dog cat", "t"),
-        (2, "dog fish", "t"),
-        (3, "cat cat dog", "r"),   # target-like
-        (4, "fish fish bird", "r"),
-        (5, "bird", "r"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text", "pool"])
-    out = {
-        r.doc_id: (r.dsir_weight, r.n_terms)
-        for r in dsir_importance(df, F.col("pool") == "t", vocab_size=4).collect()
-    }
-    # brute force: vocab = all 4 words; target counts cat2 dog2 fish1 bird0
-    import math
-
-    ct = {"cat": 2, "dog": 2, "fish": 1, "bird": 0}
-    cr = {"cat": 2, "dog": 1, "fish": 2, "bird": 2}
-    t_tot, r_tot, V = 5, 7, 4
-
-    def llr(w):
-        return math.log((ct[w] + 1) / (t_tot + V)) - math.log((cr[w] + 1) / (r_tot + V))
-
-    exp = {
-        3: round(llr("cat") * 2 + llr("dog"), 6),
-        4: round(llr("fish") * 2 + llr("bird"), 6),
-        5: round(llr("bird"), 6),
-    }
-    assert set(out) == {3, 4, 5}
-    assert out[3][1] == 3 and out[4][1] == 3 and out[5][1] == 1
-    for k in exp:
-        assert abs(out[k][0] - exp[k]) < 1e-9
-    # the target-like doc outranks the dissimilar ones
-    assert out[3][0] > out[4][0] and out[3][0] > out[5][0]
 
 
 def test_adamic_adar_matches_bruteforce(spark):
@@ -560,31 +522,6 @@ def test_sequential_ab_matches_bruteforce(spark):
     assert out[1].bound_r > out[2].bound_r > out[3].bound_r
 
 
-def test_graph_insights_composition(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.graph import label_propagation, pagerank_int
-    from dbms_data_anonymity_differential_privacy_spark.pipelines import graph_insights
-
-    def clique(nodes):
-        return [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
-
-    edges = clique([1, 2, 3]) + clique([10, 11, 12, 13]) + [(3, 10)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = {r.node: r for r in graph_insights(df).collect()}
-    # matches the standalone operators run on the same edges
-    both = df.unionAll(df.selectExpr("dst AS src", "src AS dst"))
-    pr = {r.node: r.rank_ppb for r in pagerank_int(both, iters=10).collect()}
-    lp = {r.node: r.community for r in label_propagation(df, iters=3).collect()}
-    assert set(out) == set(pr)
-    for n, r in out.items():
-        assert r.rank_ppb == pr[n] and r.community == lp[n]
-    # community sizes are consistent
-    from collections import Counter
-
-    sizes = Counter(lp.values())
-    for n, r in out.items():
-        assert r.community_size == sizes[r.community]
-
-
 def test_deletion_impact_plan_counts(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.integrity import deletion_impact_plan
 
@@ -908,39 +845,6 @@ def test_partition_count_memoizes_by_semantic_hash(spark):
     n2 = _partition_count(df.select("*"))
     assert n1 == n2 == 4
     assert len(_PARTITION_COUNT_CACHE) == 1
-
-
-def test_linear_quality_score_matches_bruteforce(spark):
-    import hashlib
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import linear_quality_score
-
-    docs = [(1, "apple banana apple"), (2, "banana cherry"), (3, ""), (4, None)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r.doc_id: (r.n_feats, r.logit_r, r.keep) for r in
-           linear_quality_score(df, n_buckets=16).collect()}
-
-    feats = {}
-    for did, text in docs:
-        for w in (text or "").strip().lower().split():
-            h = hashlib.md5(w.encode()).hexdigest()
-            b = int(h[:8], 16) % 16
-            s = 1 if h[8] < "8" else -1
-            feats[(did, b)] = feats.get((did, b), 0) + s
-    logits = {}
-    for (did, b), f in feats.items():
-        if f == 0:
-            continue
-        w = ((b * 2654435761 + 12345) % 1000003) / 1000003.0 - 0.5
-        logits.setdefault(did, []).append(f * w)
-    assert set(out) == {1, 2, 3, 4}
-    for did in (1, 2):
-        terms = sorted(logits.get(did, []))  # empty if ±1 signs fully cancel
-        s = 0.0
-        for x in terms:
-            s += x
-        assert out[did] == (len(terms), round(s, 9), s > 0.0)
-    assert out[3] == (0, 0.0, False) and out[4] == (0, 0.0, False)
 
 
 def test_leakage_safe_split_never_splits_near_dups(spark):

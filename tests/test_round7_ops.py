@@ -337,55 +337,6 @@ def test_cosine_topm_partial_window_limit_at_inflated_scale(spark, sf0001, tmp_p
 
 
 # ---------------------------------------------------------------------------
-# Streaming private export: stream ≡ batch byte identity over micro-batches
-# ---------------------------------------------------------------------------
-
-
-def test_private_export_stream_equals_batch(spark, sf0001, tmp_path):
-    """The composite (clean → redact → Gopher gate → watermarked
-    fingerprint dedup → shard rollup) run as a real two-micro-batch
-    stream must be BYTE-IDENTICAL to the batch twin — the
-    representative-independence design (dedup key carries lang, shard
-    hashes the fingerprint) makes first-arrival vs min-id survivors
-    indistinguishable in the rollup."""
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import _GOPHER_TUNING
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-    from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
-        private_export_batch,
-        private_export_stream,
-    )
-
-    docs = load_table(spark, sf0001, "documents")
-    batch = sorted(
-        tuple(r) for r in private_export_batch(docs, thresholds=_GOPHER_TUNING).collect()
-    )
-    assert batch, "fixture must produce a non-empty rollup"
-
-    stream_dir = str(tmp_path / "in")
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.mode("overwrite").parquet(stream_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    q = (
-        private_export_stream(stream, thresholds=_GOPHER_TUNING)
-        .writeStream.format("memory")
-        .queryName("pex_stream_r7")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(stream_dir)
-        q.processAllAvailable()
-        got = sorted(tuple(r) for r in spark.sql("SELECT * FROM pex_stream_r7").collect())
-    finally:
-        q.stop()
-    assert got == batch
-
-
-# ---------------------------------------------------------------------------
 # x176: corpus-level duplicated-line removal (dedup_lines_corpus)
 # ---------------------------------------------------------------------------
 

@@ -547,57 +547,6 @@ def test_drift_windows_flag_planted_mix_shift(spark):
 
 
 # ---------------------------------------------------------------------------
-# X187 quality gating curve
-# ---------------------------------------------------------------------------
-
-
-def test_gating_curve_monotone_and_terminal(spark, sf0001):
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        quality_gating_curve,
-    )
-
-    docs = spark.read.parquet(f"{sf0001}/documents.parquet")
-    rows = sorted(quality_gating_curve(docs, n_tiles=10).collect(), key=lambda r: r.tile)
-    assert [r.tile for r in rows] == list(range(1, 11))
-    for a, b in zip(rows, rows[1:]):
-        assert a.n_docs_cum < b.n_docs_cum
-        assert a.n_tokens_cum <= b.n_tokens_cum
-        assert a.score_floor_r >= b.score_floor_r  # thresholds descend
-        assert a.frac_docs_r <= b.frac_docs_r
-    last = rows[-1]
-    assert last.frac_docs_r == 1.0 and last.frac_tokens_r == 1.0
-    assert last.n_docs_cum == docs.count()
-
-
-def test_gating_curve_tracks_score_join(spark, sf0001):
-    """Tile-1 docs are exactly the top-decile scorers."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        linear_quality_score,
-        quality_gating_curve,
-    )
-
-    docs = spark.read.parquet(f"{sf0001}/documents.parquet")
-    n = docs.count()
-    top = {
-        r.doc_id
-        for r in linear_quality_score(docs)
-        .orderBy(F.desc("logit_r"), "doc_id")
-        .limit(n // 10)
-        .collect()
-    }
-    floor1 = {
-        r.score_floor_r
-        for r in quality_gating_curve(docs, n_tiles=10).collect()
-        if r.tile == 1
-    }.pop()
-    scored = linear_quality_score(docs).filter(F.col("logit_r") >= floor1).count()
-    # every tile-1 doc scores >= the tile-1 floor; floor is the decile cut
-    assert scored >= len(top) > 0
-    with pytest.raises(ValueError):
-        quality_gating_curve(docs, n_tiles=0)
-
-
-# ---------------------------------------------------------------------------
 # X188 Markov stationary
 # ---------------------------------------------------------------------------
 

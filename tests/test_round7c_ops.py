@@ -350,33 +350,6 @@ def test_ktruss_cascade_peel(spark):
     assert set(zip(pdf["a"], pdf["b"])) == set(k4)
 
 
-# ------------------------------------------------------------- packing
-def test_packing_efficiency_hand_values(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.packing import (
-        packing_efficiency,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a " * 10), (2, "b " * 30)], "doc_id LONG, text STRING"
-    )  # tok = 10, 30
-    pdf = (
-        packing_efficiency(docs, seq_lens=(16, 32))
-        .orderBy("seq_len")
-        .toPandas()
-        .set_index("seq_len")
-    )
-    # L=16: doc1 pads 6, doc2 truncates 14; packed: ceil(40/16)=3 seqs
-    assert pdf.loc[16, "pad_tokens"] == 6
-    assert pdf.loc[16, "trunc_tokens"] == 14
-    assert pdf.loc[16, "n_seqs_packed"] == 3
-    assert pdf.loc[16, "util_padded_r"] == pytest.approx((40 - 14) / 32, abs=1e-9)
-    assert pdf.loc[16, "util_packed_r"] == pytest.approx(40 / 48, abs=1e-9)
-    # L=32: doc1 pads 22, doc2 pads 2; packed: ceil(40/32)=2
-    assert pdf.loc[32, "pad_tokens"] == 24
-    assert pdf.loc[32, "trunc_tokens"] == 0
-    assert pdf.loc[32, "n_seqs_packed"] == 2
-
-
 # -------------------------------------------------------- brown-forsythe
 def test_brown_forsythe_equal_spread_near_zero(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.stats import brown_forsythe

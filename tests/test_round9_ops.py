@@ -392,32 +392,6 @@ def test_count_min_one_sided_and_tight_when_wide(spark):
     assert all(r["overcount"] == 0 for r in out)
 
 
-def test_boilerplate_by_source_hand_case(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        boilerplate_by_source,
-    )
-
-    # source s1: the 4-token line "a b c d" appears in BOTH docs
-    # (boilerplate at min_df=2); each doc also has a unique line.
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d w x y z", "s1"),
-            (2, "a b c d q r s t", "s1"),
-            (3, "h i j k", "s2"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = {r["source"]: r for r in boilerplate_by_source(docs, 4, 2).collect()}
-    s1 = out["s1"]
-    assert (s1["n_docs"], s1["n_lines"], s1["n_distinct_lines"]) == (2, 4, 3)
-    assert s1["n_boilerplate_lines"] == 1
-    # boilerplate mass = the repeated line's occurrences: 8 of 16 tokens
-    assert s1["boilerplate_token_share_r"] == 0.5
-    s2 = out["s2"]
-    assert s2["n_boilerplate_lines"] == 0
-    assert s2["boilerplate_token_share_r"] == 0.0
-
-
 def test_minhash_audit_error_band(spark, sf001):
     """The estimator must honor the Broder accuracy contract on real
     corpus pairs: mean |err| well inside the k=32 binomial band, and
@@ -522,29 +496,6 @@ def test_line_dup_profile_accounting(spark, sf001):
         assert r["n_line_occurrences"] == r["occurrences"] * r["n_distinct_lines"]
 
 
-def test_dedup_survivor_bias_partition(spark, sf001):
-    """kept + dropped must tile the corpus; dropped docs exist at sf0.01
-    (the x03 pair fixture); rates stay in [0, 1]."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.dedup import ngram_jaccard_pairs
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        dedup_survivor_bias,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import (
-        _GOPHER_TUNING,
-        load_table,
-    )
-
-    docs = load_table(spark, sf001, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.2, n=3)
-    rows = {r["status"]: r for r in dedup_survivor_bias(docs, pairs, _GOPHER_TUNING).collect()}
-    assert set(rows) == {"kept", "dropped"}
-    assert rows["kept"]["n_docs"] + rows["dropped"]["n_docs"] == docs.count()
-    n_drops = pairs.select("id_b").distinct().count()
-    assert rows["dropped"]["n_docs"] == n_drops
-    for r in rows.values():
-        assert 0.0 <= r["pass_rate_r"] <= 1.0 and r["mean_tokens_r"] > 0
-
-
 def test_vocab_coverage_monotone_and_exact(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.text import vocab_coverage
 
@@ -615,16 +566,3 @@ def test_minhash_audit_custom_columns(spark):
         df, threshold=0.2, n=3, num_hashes=32, text_col="body", id_col="id"
     ).collect()
     assert rows and {(r["id_a"], r["id_b"]) for r in rows} == {(1, 2)}
-
-
-def test_survivor_bias_custom_id_col(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.quality import (
-        dedup_survivor_bias,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "word " * 60) for i in range(6)], "id long, text string"
-    )
-    pairs = spark.createDataFrame([(0, 5)], "id_a long, id_b long")
-    rows = {r["status"]: r for r in dedup_survivor_bias(docs, pairs, id_col="id").collect()}
-    assert rows["dropped"]["n_docs"] == 1 and rows["kept"]["n_docs"] == 5

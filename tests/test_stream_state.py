@@ -10,9 +10,6 @@ The claims under test, from the operators' own docstrings:
   time-ordered multi-batch replay spanning ~30 days with a 1-day
   watermark, the final dedup state must hold strictly fewer rows than
   the all-time distinct (window, user) count.
-- pipe_private_export_stream (`streaming/export.py`): dedup state is
-  the distinct gated (lang, fingerprint) mass inside the watermark
-  horizon — never more than the all-time distinct count.
 
 State telemetry comes from the progress reports
 (``stateOperators[].numRowsTotal``), the same numbers a production
@@ -113,134 +110,6 @@ def test_x211_state_bounded_and_watermark_evicts(spark, tmp_path):
     assert final_max < n_pairs, (
         f"no eviction: final state {final_max} == all-time pairs {n_pairs}"
     )
-
-
-def test_private_export_stream_state_bounded(spark, tmp_path):
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import _GOPHER_TUNING
-    from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
-        _kept_with_fp,
-        private_export_stream,
-    )
-
-    docs = load_table(spark, SF001, "documents")
-    n_keys = (
-        _kept_with_fp(docs, _GOPHER_TUNING).select("lang", "__fp").distinct().count()
-    )
-    assert n_keys > 0
-
-    stream_dir = str(tmp_path / "docs")
-    half = docs.filter("doc_id % 2 = 0")
-    rest = docs.filter("doc_id % 2 = 1")
-    half.coalesce(1).write.mode("append").parquet(stream_dir)
-    time.sleep(1.05)
-    rest.coalesce(1).write.mode("append").parquet(stream_dir)
-    src = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    out = private_export_stream(src, thresholds=_GOPHER_TUNING)
-    q = _run_available_now(out, "complete", str(tmp_path / "ckpt"))
-    state = _progress_state_rows(q)
-    assert state, "no state telemetry captured"
-    # dedup + rollup operators: neither may exceed the distinct gated
-    # (lang, fingerprint) mass — the docstring's state contract
-    peak = max(max(per_op) for per_op in state)
-    assert peak <= n_keys, f"state {peak} exceeds distinct-key bound {n_keys}"
-
-
-def test_export_stream_checkpoint_restart_is_exactly_once(spark, tmp_path):
-    """r8 verdict task 6 — the sibling of the x211 restart proof for the
-    private-export composite: kill the stream after half the corpus,
-    restart a NEW query from the SAME checkpoint, feed the second half.
-    The gated-dedup state must restore (duplicates straddling the cut
-    stay suppressed — no double admission into the rollup), the second
-    life must read only the new file, and the final complete snapshot
-    must equal the batch twin byte-for-byte."""
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import _GOPHER_TUNING
-    from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
-        _kept_with_fp,
-        private_export_batch,
-        private_export_stream,
-    )
-
-    base = load_table(spark, SF001, "documents")
-    # the natural corpus has no duplicate fingerprints after the gate,
-    # so PLANT them: clone 20 gate-surviving even-id docs under fresh
-    # ids routed to the SECOND slice — duplicates that straddle the cut
-    # are exactly what the restored dedup state must suppress
-    offset = 1 << 20
-    kept_even = (
-        _kept_with_fp(base.filter("doc_id % 2 = 0"), _GOPHER_TUNING)
-        .select("doc_id").limit(20)
-    )
-    clones = base.join(kept_even, "doc_id").withColumn(
-        "doc_id", F.col("doc_id") + F.lit(offset)
-    ).select(*base.columns)
-    docs = base.unionByName(clones)
-    half = docs.filter(f"doc_id % 2 = 0 AND doc_id < {offset}")
-    rest = docs.join(half, "doc_id", "left_anti")
-    # the test only has power if duplicate keys STRADDLE the cut
-    keys = lambda d: {  # noqa: E731
-        (r["lang"], r["__fp"])
-        for r in _kept_with_fp(d, _GOPHER_TUNING).select("lang", "__fp").collect()
-    }
-    k1, k2 = keys(half), keys(rest)
-    assert k1 & k2, "no cross-cut duplicate fingerprints after planting"
-
-    def snap(df) -> dict:
-        return {
-            (r["shard"], r["lang"]): (
-                r["n_docs"], r["total_tokens"], r["n_docs_redacted"]
-            )
-            for r in df.collect()
-        }
-
-    batch_full = snap(private_export_batch(docs, thresholds=_GOPHER_TUNING))
-    batch_half = snap(private_export_batch(half, thresholds=_GOPHER_TUNING))
-
-    stream_dir = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ckpt")
-    snap_dir = tmp_path / "snap"
-    half.coalesce(1).write.mode("append").parquet(stream_dir)
-    n_rest = rest.count()
-
-    def run_life():
-        src = spark.readStream.schema(docs.schema).parquet(stream_dir)
-        out = private_export_stream(src, thresholds=_GOPHER_TUNING)
-
-        def sink(df, bid):
-            df.write.mode("overwrite").parquet(str(snap_dir / f"b{bid}"))
-
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(300)
-        return q
-
-    run_life()
-    ids1 = sorted(int(p.name[1:]) for p in snap_dir.iterdir())
-    life1 = snap(spark.read.parquet(str(snap_dir / f"b{ids1[-1]}")))
-    # first life's complete snapshot IS the half-corpus batch answer
-    assert life1 == batch_half
-
-    time.sleep(1.05)
-    rest.coalesce(1).write.mode("append").parquet(stream_dir)
-    q2 = run_life()
-    # the restarted life read ONLY the new slice (no reprocessing)
-    rows_life2 = sum(int(p["numInputRows"]) for p in q2.recentProgress)
-    assert rows_life2 == n_rest, (rows_life2, n_rest)
-    ids2 = sorted(int(p.name[1:]) for p in snap_dir.iterdir())
-    assert ids2[-1] > ids1[-1], "second life released no snapshot"
-    final = snap(spark.read.parquet(str(snap_dir / f"b{ids2[-1]}")))
-    # exactly-once across the restart: the dedup state restored, so the
-    # cross-cut duplicates were NOT re-admitted — the final release is
-    # byte-identical to the batch twin on the full corpus
-    assert final == batch_full
 
 
 def test_x211_checkpoint_restart_is_exactly_once(spark, tmp_path):

@@ -72,8 +72,8 @@ TARGET_OPS = [
     "x213_rmst", "x179_pettitt", "x143_mann_kendall", "x218_theil_sen",
     "x168_sequential_ab", "x74_ab_test", "x135_cuped", "x222_tost",
     # effect / ranking metrics
-    "x147_roc_auc", "x219_qini", "x136_decile_lift", "x192_calibration",
-    "x148_bh_fdr", "x163_bootstrap_ci", "x207_ipw_ate",
+    "x147_roc_auc", "x219_qini", "x136_decile_lift", "x148_bh_fdr",
+    "x163_bootstrap_ci", "x207_ipw_ate",
     # distributional fits / inequality
     "x111_gini", "x165_theil", "x128_zipf", "x184_good_turing",
     "x185_heaps_fit", "x145_jsd_sources", "x67_psi_drift",

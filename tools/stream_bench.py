@@ -1,7 +1,7 @@
 """Streaming throughput + state-store telemetry (r7 verdict task 4).
 
-Replays the three streaming contract queries over a multi-file event /
-document stream (default: the 10x-inflated synthetic sf1 data from
+Replays two streaming contract queries over a multi-file event stream
+(default: the 10x-inflated synthetic sf1 data from
 tools/inflate_sf.py) with ``maxFilesPerTrigger=1`` so availableNow runs
 a real multi-micro-batch replay, then reports per-query:
 
@@ -82,7 +82,6 @@ def main() -> int:
     spark = get_spark(app_name="stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import _GOPHER_TUNING
     from dbms_data_anonymity_differential_privacy_spark.streaming.anonymize import (
         events_readstream,
     )
@@ -93,15 +92,10 @@ def main() -> int:
         drift_windows_stream,
         reference_counts,
     )
-    from dbms_data_anonymity_differential_privacy_spark.streaming.export import (
-        private_export_stream,
-    )
 
     work = tempfile.mkdtemp(prefix="stream-bench-")
     ev_dir = os.path.join(work, "events")
-    doc_dir = os.path.join(work, "documents")
     split_parquet(spark, f"{sf_dir}/events.parquet", ev_dir, n_files)
-    split_parquet(spark, f"{sf_dir}/documents.parquet", doc_dir, max(2, n_files // 2))
     results = []
 
     # x211 — exact windowed distinct users (two chained stateful ops)
@@ -136,18 +130,6 @@ def main() -> int:
         types,
     )
     results.append(run_stream("x186_stream_drift", x186, "append", os.path.join(work, "c2")))
-
-    # pipe_private_export_stream — clean/redact/gate + watermarked dedup
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    docs_stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(doc_dir)
-    )
-    pex = private_export_stream(docs_stream, thresholds=_GOPHER_TUNING)
-    results.append(
-        run_stream("pipe_private_export_stream", pex, "complete", os.path.join(work, "c3"))
-    )
 
     print(json.dumps({"sf_dir": sf_dir, "n_files": n_files, "streams": results}))
     shutil.rmtree(work, ignore_errors=True)
