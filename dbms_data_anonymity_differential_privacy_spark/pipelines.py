@@ -22,22 +22,32 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbms_data_anonymity_differential_privacy_spark.functions.binning import bin_equal_width
-from dbms_data_anonymity_differential_privacy_spark.operators.clustering import cluster_anonymize
+from dbms_data_anonymity_differential_privacy_spark.operators.clustering import fit_clusters
 from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import class_sizes
-from dbms_data_anonymity_differential_privacy_spark.operators.metrics import _ncp_expr, ncp
+from dbms_data_anonymity_differential_privacy_spark.operators.metrics import _ncp_expr
 from dbms_data_anonymity_differential_privacy_spark.operators.tcloseness import (
     ROUND_DP as _ROUND_DP,
     _emd_from_counts,
     _verdict_keys,
     _violation_row,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.util import track_cached
+from dbms_data_anonymity_differential_privacy_spark.operators.util import sql_round, track_cached
 
 ROUND_DP = 9
+
+_CLUSTER_METRICS = T.StructType([
+    T.StructField("k_satisfied", T.BooleanType()),
+    T.StructField("uniqueness_rate", T.DoubleType()),
+    T.StructField("reid_risk", T.DoubleType()),
+    T.StructField("suppression_rate", T.DoubleType()),
+    T.StructField("ncp", T.DoubleType()),
+])
 
 
 def _suppression_cols(size: Column, kept_size: Column) -> list[Column]:
@@ -121,30 +131,41 @@ def clustering_pipeline(
     ``ncp`` = per-QI (nunique original - nunique *ranges*)/nunique original
     (:85-88 — note the anon side counts distinct range strings in the
     10-row generalization table, not row values).
-    """
-    clustered, generalized = cluster_anonymize(df, qi, n_clusters, seed)
-    # The clustered relation feeds every metric below; its lineage contains
-    # an MLlib model transform → always worth pinning.
-    clustered = track_cached(clustered.persist())
 
-    # every metric but NCP from ONE aggregation over the cluster sizes:
-    # reid_risk telescopes to n_clusters / n_rows (operators.metrics.
-    # reid_risk), and the rows in clusters < k are those clusters' sizes
-    size = F.col("class_size")
-    n_rows = F.sum(size)
-    per_cluster = class_sizes(clustered, ["cluster"]).agg(
-        (F.min(size) >= k).alias("k_satisfied"),
-        F.round(
-            F.sum(F.when(size == 1, 1).otherwise(0)) / F.lit(n_clusters), ROUND_DP
-        ).alias("uniqueness_rate"),
-        F.round(F.count(F.lit(1)) / n_rows, ROUND_DP).alias("reid_risk"),
-        F.round(
-            F.sum(F.when(size < k, size).otherwise(0)) / n_rows, ROUND_DP
-        ).alias("suppression_rate"),
-    )
-    # NCP with the generalization table as the anonymized side (:85-88).
-    metrics = per_cluster.crossJoin(F.broadcast(ncp(clustered, generalized, qi)))
-    return {"anonymized": clustered, "generalization": generalized, "metrics": metrics}
+    Everything but the rows comes from the fit's weighted QI-tuple table
+    (``operators.clustering``): one aggregation job feeds the driver-side
+    fit, the generalization table and this metrics row, which are local
+    relations; the rows are the fact scan broadcast-joined to the
+    (QI tuple → cluster) relation, computed by whichever action writes them.
+    """
+    fit = fit_clusters(df, qi, n_clusters, seed)
+    generalized = fit.generalization()
+    ranges = generalized.collect()  # a local relation: no job
+    sizes = fit.sizes()
+    n_rows = int(sizes.sum())
+
+    def rate(num: int, den: int) -> float | None:  # SQL: NULL over no rows
+        return sql_round(num / den, ROUND_DP) if den else None
+
+    # NCP with the generalization table as the anonymized side (:85-88):
+    # distinct non-NULL values per QI over the rows (= over the tuples)
+    # against distinct range strings; an all-NULL QI has no defined loss
+    per_col = []
+    for c in qi:
+        orig = int(fit.keys[c].nunique())
+        anon = len({r[c] for r in ranges})
+        per_col.append((orig - anon) / orig if orig else None)
+    ncp_val = None if None in per_col else sql_round(sum(per_col) / len(per_col), ROUND_DP)
+    row = {
+        "k_satisfied": bool(sizes.min() >= k) if n_rows else None,
+        "uniqueness_rate": rate(int((sizes == 1).sum()), n_clusters) if n_rows else None,
+        # reid_risk telescopes to n_clusters / n_rows (operators.metrics.reid_risk)
+        "reid_risk": rate(len(sizes), n_rows),
+        "suppression_rate": rate(int(sizes[sizes < k].sum()), n_rows),
+        "ncp": ncp_val,
+    }
+    metrics = df.sparkSession.createDataFrame(pd.DataFrame([row]), _CLUSTER_METRICS)
+    return {"anonymized": fit.clustered(), "generalization": generalized, "metrics": metrics}
 
 
 def t_closeness_pipeline(

@@ -19,10 +19,7 @@ from dbms_data_anonymity_differential_privacy_spark import queries_registry as q
 # ML-backed queries fit a model while *building* the DataFrame — exclude
 # from the sweep (their plans are MLlib-internal).
 SWEEP_EXCLUDE = {
-    "c03_cluster_assign",
-    "c03_cluster_generalize",
     "c10_utility_accuracy",
-    "pipe_clustering_metrics",
 }
 
 
@@ -94,6 +91,17 @@ def test_flagship_single_fact_shuffle(plans):
     assert build.lstrip(" :+-").startswith("BroadcastExchange HashedRelationBroadcastMode")
     assert "Exchange hashpartitioning" in build
     assert "Exchange hashpartitioning" not in probe
+
+
+def test_cluster_assign_is_one_scan_broadcast_joined_to_local_tuples(plans):
+    """c03: the rows get their cluster from ONE parquet scan probing the
+    broadcast (QI tuple → cluster) local relation the driver-side fit
+    built — no fact-side shuffle, no MLlib stage."""
+    p = plans["c03_cluster_assign"]
+    assert len(re.findall(r"Scan parquet|FileScan parquet", p)) == 1
+    probe, build = _children(p, r"BroadcastHashJoin .*BuildRight")
+    assert "LocalTableScan" in build
+    assert "Exchange" not in probe
 
 
 def test_naive_metrics_row_is_one_aggregation(plans):
