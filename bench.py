@@ -56,14 +56,10 @@ HEADLINE = [
     "x12_equal_freq_bin",
     "x13_pii_detect",
     "x14_repetition",
-    "x16_asof_join",
-    "x17_session_errors",
     "x18_contamination",
     "x19_vocab",
     "x22_group_percentiles",
-    "x23_bigram_lm",
     "x28_incremental_admit",
-    "x29_bpe_tokens",
     "x31_fuzzy_pairs",
     "x32_linkage_audit",
     "x33_rollup_release",
@@ -83,17 +79,12 @@ HEADLINE = [
     "x49_heavy_hitters_exact",
     "x50_weighted_sample",
     "x51_beta_likeness",
-    "x52_gapfill",
     "x53_mad_outliers",
-    "x54_funnel",
-    "x55_retention",
     "x56_continual_exact",
     "x57_fk_orphans",
     "x58_apply_changes",
     "x59_skew_report",
     "x60_quantile_sketch",
-    "x61_ohlc_bars",
-    "x62_lag_features",
     "x63_group_ols",
     "x66_trending",
     "x67_psi_drift",
@@ -107,7 +98,6 @@ HEADLINE = [
     "x75_benford",
     "x76_seasonality",
     "x77_expectations",
-    "x78_attribution",
     "x79_kaplan_meier",
     "x80_mann_whitney",
     "x81_knn_join",
@@ -116,12 +106,8 @@ HEADLINE = [
     "x87_rolling_anomaly",
     "x88_cusum",
     "x89_set_union_exact",
-    "x90_linear_attribution",
     "x91_winsorize",
-    "x92_user_growth",
-    "x94_step_latency",
     "x95_zorder",
-    "x98_session_impact",
     "x99_tfidf_topk",
     "x100_qi_search",
     "x101_ak_anonymity",
@@ -133,7 +119,6 @@ HEADLINE = [
     "x104_ewma",
     "x105_pivot_release",
     "x106_m_invariance",
-    "x107_funnel_windowed",
     "x108_ks_test",
     "x109_spearman",
     "x110_anova",
@@ -142,12 +127,8 @@ HEADLINE = [
     "x114_dp_heatmap_exact",
     "x115_weighted_median",
     "x117_oov_rate",
-    "x119_interp_gapfill",
-    "x120_burstiness",
-    "x121_rolling_wau",
     "x122_label_consistency",
     "x123_path_trigrams",
-    "x124_decay_attribution",
     "x111_gini",
     "x97_delta_presence",
     "x81_knn_join_arrow",
@@ -155,7 +136,6 @@ HEADLINE = [
     "x125_scd2",
     "x126_pagerank",
     "x127_anatomy",
-    "x128_zipf",
     "x129_bloom",
     "x131_containment",
     "x132_negative_samples",
@@ -163,15 +143,12 @@ HEADLINE = [
     "x134_nelson_aalen",
     "x135_cuped",
     "x136_decile_lift",
-    "x137_rfm",
     "x138_triangles",
-    "x139_hitk",
     "x140_retrieval_eval",
     "x142_acf",
     "x143_mann_kendall",
     "x144_target_encode",
     "x145_jsd_sources",
-    "x146_cohort_ltv",
     "x147_roc_auc",
     "x148_bh_fdr",
     "x149_kcore",
@@ -241,7 +218,6 @@ HEADLINE = [
     "x209_odds_ratio",
     "x210_mcnemar",
     "x211_distinct_users",
-    "x212_markov_attribution",
     "x213_rmst",
     "x214_pca_project",
     "x215_wilson_ci",
@@ -360,7 +336,7 @@ def main() -> None:
             # the first run's cache and report a fantasy number); drain
             # the engine's cache ledger too, and nudge the JVM GC so
             # localCheckpoint blocks from earlier queries actually free —
-            # at sf1 the 236-query session otherwise accumulates heap
+            # at sf1 the headline session otherwise accumulates heap
             # until a late query OOMs (x196, measured)
             spark.catalog.clearCache()
             release_cached_relations()

@@ -50,7 +50,6 @@ from dbms_data_anonymity_differential_privacy_spark.operators.dp import (
     dp_avg,
     dp_histogram,
     dp_count_gaussian,
-    dp_sum_gaussian,
     dp_mode,
     dp_noise_moments,
     dp_quantile,
@@ -120,12 +119,6 @@ from dbms_data_anonymity_differential_privacy_spark.operators.text import (
     text_stats,
     with_text_features,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_lm_scores
-from dbms_data_anonymity_differential_privacy_spark.operators.clean import (
-    clean_text,
-    filter_boilerplate_lines,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.bpe import bpe_tokenize, bpe_train
 from dbms_data_anonymity_differential_privacy_spark.operators.linkage import (
     fuzzy_pairs,
     fuzzy_pairs_fastss,
@@ -184,22 +177,9 @@ from dbms_data_anonymity_differential_privacy_spark.operators.snapshot import (
     snapshot_diff,
     snapshot_diff_summary,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (
-    funnel,
-    funnel_user_states,
-    last_touch_attribution,
-    linear_attribution,
-    retention_cohorts,
-    markov_attribution,
-)
 from dbms_data_anonymity_differential_privacy_spark.operators.sampling import weighted_sample_n
 from dbms_data_anonymity_differential_privacy_spark.operators.tcloseness import (
     beta_likeness_audit,
-)
-from dbms_data_anonymity_differential_privacy_spark.operators.temporal import (
-    gapfill_rollup,
-    lag_features,
-    ohlc_bars,
 )
 from dbms_data_anonymity_differential_privacy_spark.operators.metrics import mad_outlier_stats, winsorize
 from dbms_data_anonymity_differential_privacy_spark.operators.dp import (
@@ -261,7 +241,6 @@ from dbms_data_anonymity_differential_privacy_spark.streaming.anomaly import (
     rolling_anomaly_stateful,
     rolling_anomaly_stream,
 )
-from dbms_data_anonymity_differential_privacy_spark.streaming.funnel import funnel_stateful
 from dbms_data_anonymity_differential_privacy_spark.operators.util import release_cached_relations
 
 __all__ = [
@@ -290,7 +269,6 @@ __all__ = [
     "dp_avg",
     "dp_histogram",
     "dp_count_gaussian",
-    "dp_sum_gaussian",
     "dp_mode",
     "dp_quantile",
     "dp_topk",
@@ -334,7 +312,6 @@ __all__ = [
     "mcnemar_test",
     "windowed_distinct_users_batch",
     "windowed_distinct_users_stream",
-    "markov_attribution",
     "rmst",
     "pca_project",
     "wilson_ci_rates",
@@ -376,14 +353,9 @@ __all__ = [
     "stratified_split",
     "text_stats",
     "with_text_features",
-    "bigram_lm_scores",
-    "clean_text",
-    "filter_boilerplate_lines",
     "incremental_admit",
     "repeated_span_stats",
     "remove_repeated_spans",
-    "bpe_train",
-    "bpe_tokenize",
     "fuzzy_pairs",
     "fuzzy_pairs_fastss",
     "linkage_attack_audit",
@@ -416,12 +388,8 @@ __all__ = [
     "heavy_hitters",
     "snapshot_diff",
     "snapshot_diff_summary",
-    "funnel",
-    "funnel_user_states",
-    "retention_cohorts",
     "weighted_sample_n",
     "beta_likeness_audit",
-    "gapfill_rollup",
     "mad_outlier_stats",
     "continual_counts_exact",
     "dp_continual_counts",
@@ -432,15 +400,12 @@ __all__ = [
     "bottomk_sample",
     "quantile_sketch",
     "kmv_distinct",
-    "ohlc_bars",
-    "lag_features",
     "group_ols",
     "mutual_information",
     "top_k_per_group",
     "psi_drift",
     "psi_drift_bins",
     "dp_covariance",
-    "funnel_stateful",
     "release_cached_relations",
     "rolling_anomaly_stateful",
     "rolling_anomaly_stream",
@@ -453,8 +418,6 @@ __all__ = [
     "benford_audit",
     "seasonality_index",
     "expectation_report",
-    "last_touch_attribution",
-    "linear_attribution",
     "winsorize",
     "kaplan_meier",
     "time_to_event",

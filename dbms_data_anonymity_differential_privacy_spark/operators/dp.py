@@ -705,36 +705,6 @@ def dp_count_gaussian(
     )
 
 
-def dp_sum_gaussian(
-    df: DataFrame,
-    by: Sequence[str],
-    value_col: str,
-    epsilon: float,
-    delta: float,
-    lower: float,
-    upper: float,
-    seed: int = 42,
-    budget: "PrivacyBudget | None" = None,
-    release: str | None = None,
-) -> DataFrame:
-    """X1 — (epsilon, delta)-DP group sums, per-record clip to [lower, upper]
-    (L2 sensitivity = max(|lower|, |upper|): one record moves one group's
-    sum by at most that). Output: ``(*by, sum_exact, sum_dp)``."""
-    if lower >= upper:
-        raise ValueError("need lower < upper clipping bounds")
-    sens = max(abs(lower), abs(upper))
-    sigma = gaussian_sigma(epsilon, delta, sensitivity=sens)  # validates before charging
-    salt = _release_salt("sum.gauss", release, budget)
-    if budget is not None:
-        budget.spend(
-            epsilon, f"dp_sum_gaussian:{value_col}", delta=delta,
-            mechanism="gaussian",
-        )
-    clipped = F.least(F.greatest(F.col(value_col), F.lit(lower)), F.lit(upper))
-    agg = df.groupBy(*by).agg(F.sum(clipped).alias("sum_exact"))
-    return agg.withColumn("sum_dp", F.col("sum_exact") + gaussian_noise(by, sigma, seed, salt))
-
-
 def _candidate_count_scores(
     df: DataFrame,
     by: Sequence[str],

@@ -755,7 +755,7 @@ def rolling_anomaly(
     Shape: one (group, bucket) count aggregation, then windows over the
     buckets-sized relation — fact rows shuffle zero times beyond the
     count agg. Buckets are dense per group's observed span? No — only
-    observed buckets appear; compose with ``gapfill`` (x52) first when
+    observed buckets appear; zero-fill the buckets first when
     silence itself is the anomaly (a dropped-to-zero feed emits no rows
     to score).
 
@@ -978,8 +978,8 @@ def ewma_smooth(
 
     Shape: one (group, bucket) count aggregation; the collect + fold
     window runs over the buckets-sized relation (kilobytes per group),
-    never fact rows. Only observed buckets appear — compose with x52
-    gapfill first if silent buckets should decay the average.
+    never fact rows. Only observed buckets appear — zero-fill the
+    buckets first if silent buckets should decay the average.
 
     Output: ``(*group_cols, bucket_start, n, ewma_r)``.
     """

@@ -3,8 +3,13 @@
 A user of the reference runs three scripts top-to-bottom; each function
 here is the Spark-native equivalent of one script (SURVEY §3.1-§3.3),
 returning the anonymized relation plus a single-row metrics relation with
-the same metric definitions the script prints. Everything stays lazy; the
-metrics row is the only thing a caller should collect.
+the same metric definitions the script prints. The anonymized relation is
+computed by whichever action writes it, and the metrics row is the only
+thing a caller should collect. Building a release runs Spark jobs only
+where a driver-side step needs data: the clustering fit collects its
+weighted QI-tuple table, and t-closeness collects the global sensitive
+distribution twice (``tcloseness._emd_from_counts``, once for the filter's
+verdicts and once for the post-filter violation report).
 
 | function | reference entry point |
 |---|---|
@@ -91,7 +96,6 @@ def naive_suppression_pipeline(
     anon = clean.join(
         sizes.filter(kept).select(*qi), on=list(qi), how="left_semi"
     ).select(*clean.columns)
-    anon = track_cached(anon.persist())
 
     # no class survives → NULL sums: uniqueness and reid_risk stay NULL
     # (NULL/NULL, never an ANSI 0/0)
@@ -215,10 +219,11 @@ def t_closeness_pipeline(
         )
     )
     # the verdict keys feed post_counts, anon and the metrics row: persist
-    # them once; the join strategy is Spark's (threshold + AQE)
+    # them once; the join strategy is Spark's (threshold + AQE). anon has
+    # one consumer, the caller's write, so it stays unpersisted.
     ok = track_cached(_verdict_keys(counts, eff_qi, sensitive, k, t, mode).persist())
     post_counts = track_cached(counts.join(ok, on=eff_qi, how="left_semi").persist())
-    anon = track_cached(work.join(ok, on=eff_qi, how="left_semi").persist())
+    anon = work.join(ok, on=eff_qi, how="left_semi")
 
     # metric definitions identical to suppression_rate / uniqueness_rate
     # (classes denominator) / ncp (operators/metrics.py), as ONE class-level

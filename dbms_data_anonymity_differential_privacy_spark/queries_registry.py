@@ -2167,96 +2167,6 @@ def x15_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X16 — as-of join (operators/temporal.py): for every error event, the
-# latest same-user click at-or-before it. The oracle is the literal
-# semantics (per-row LATERAL top-1) while the engine runs the merge-scan
-# formulation (one shuffle, no pair blowup) — exactly the independence the
-# gate wants. Tie order (ts, value, event_id) matches the payload-struct
-# max on the Spark side.
-# --------------------------------------------------------------------------
-@query(
-    "x16_asof_join",
-    """
-    WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
-         r AS (SELECT user_id, ts, value, event_id FROM events WHERE event_type = 'click')
-    SELECT l.event_id, l.user_id, l.ts,
-           COALESCE(m.prior_ts, TIMESTAMP '1970-01-01') AS prior_ts,
-           COALESCE(m.prior_value, -1.0) AS prior_value,
-           COALESCE(m.prior_event_id, -1) AS prior_event_id
-    FROM l LEFT JOIN LATERAL (
-         SELECT r.ts AS prior_ts, r.value AS prior_value, r.event_id AS prior_event_id
-         FROM r WHERE r.user_id = l.user_id AND r.ts <= l.ts
-         ORDER BY r.ts DESC, r.value DESC, r.event_id DESC LIMIT 1) m ON TRUE
-    """,
-)
-def x16_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    left = ev.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
-    right = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "value", "event_id"
-    )
-    out = asof_join(left, right, on=["user_id"], payload=["value", "event_id"])
-    # no-match sentinels: the hash gate's null-comparison semantics are
-    # engine-dependent, so the BENCH QUERY releases non-null columns; the
-    # operator itself keeps proper NULL no-match semantics.
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.coalesce(F.col("prior_ts"), F.lit("1970-01-01").cast("timestamp")).alias("prior_ts"),
-        F.coalesce(F.col("prior_value"), F.lit(-1.0)).alias("prior_value"),
-        F.coalesce(F.col("prior_event_id"), F.lit(-1).cast("long")).alias("prior_event_id"),
-    )
-
-
-# --------------------------------------------------------------------------
-# X17 — keyed interval join (operators/temporal.py): errors counted inside
-# each user's view-sessions (sessionize → SortMergeJoin on user + range
-# filter → zero-filled count). Oracle: the x11 gaps-and-islands CTE plus a
-# plain inequality LEFT JOIN.
-# --------------------------------------------------------------------------
-@query(
-    "x17_session_errors",
-    """
-    WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
-               WHERE event_type = 'view'),
-    f AS (SELECT user_id, ts,
-                 CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                        OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                             > INTERVAL '30 minutes'
-                      THEN 1 ELSE 0 END AS new_s
-          FROM e),
-    s AS (SELECT user_id, ts,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM f),
-    sess AS (SELECT user_id, MIN(ts) AS session_start,
-                    MAX(ts) + INTERVAL '30 minutes' AS session_end,
-                    COUNT(*) AS n_events
-             FROM s GROUP BY user_id, sid),
-    err AS (SELECT user_id, ts FROM events WHERE event_type = 'error')
-    SELECT sess.user_id, sess.session_start, sess.session_end, sess.n_events,
-           COUNT(err.ts) AS n_errors
-    FROM sess LEFT JOIN err ON err.user_id = sess.user_id
-         AND err.ts >= sess.session_start AND err.ts < sess.session_end
-    GROUP BY 1, 2, 3, 4
-    """,
-)
-def x17_session_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import (
-        events_per_interval,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.streaming.sessions import sessionize_batch
-
-    ev = load_table(spark, sf_dir, "events")
-    sess = sessionize_batch(ev.where(F.col("event_type") == "view"), gap="30 minutes")
-    errs = ev.where(F.col("event_type") == "error").select("user_id", "ts")
-    return events_per_interval(sess, errs, ["user_id"], count_alias="n_errors")
-
-
-# --------------------------------------------------------------------------
 # X18 — benchmark-contamination scan (operators/dedup.py): distinct word
 # trigrams of each corpus doc probed against the benchmark set's shingles
 # (docs with doc_id % 50 == 0 stand in for an eval suite). Engine probes
@@ -2334,174 +2244,6 @@ def x22_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return group_percentiles(ev, ["event_type"], "value")
-
-
-@query(
-    "x23_bigram_lm",
-    """
-    WITH t AS (SELECT doc_id,
-                      list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                                  x -> x <> '') AS toks
-               FROM documents),
-    bb AS (SELECT doc_id,
-                  unnest(toks[1:len(toks) - 1]) AS w1,
-                  unnest(toks[2:len(toks)]) AS w2
-           FROM t WHERE len(toks) >= 2),
-    cb AS (SELECT w1, w2, COUNT(*) AS cb FROM bb GROUP BY 1, 2),
-    cu AS (SELECT w1, COUNT(*) AS cu FROM bb GROUP BY 1),
-    v AS (SELECT COUNT(DISTINCT tok) AS v
-          FROM (SELECT unnest(toks) AS tok FROM t)),
-    lp AS (SELECT bb.doc_id,
-                  ln(CAST(cb.cb + 1 AS DOUBLE)) - ln(CAST(cu.cu + v.v AS DOUBLE)) AS logp
-           FROM bb JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v)
-    SELECT doc_id, COUNT(*) AS n_bigrams,
-           ROUND(-list_reduce(list_sort(list(logp)), (a, b) -> a + b) / COUNT(*), 6)
-             AS avg_nll
-    FROM lp GROUP BY doc_id
-    """,
-)
-def x23_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X23 — corpus-self-trained bigram LM scoring (operators/lm.py):
-    CCNet/KenLM-style per-doc avg negative log-likelihood for quality
-    gating. Bit-exact across engines via the driver-side C-libm log table
-    (JVM Math.log is 1 ulp off libm on ~1e-4 of inputs, measured) and a
-    sorted-fold per-doc sum. The oracle joins string bigrams where the
-    engine joins xxhash64 pairs — equal up to 64-bit collisions, as for
-    x03/x18."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_lm_scores
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bigram_lm_scores(docs)
-
-
-def _clean_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text_sql
-
-    return f"""
-    WITH dirty AS (SELECT doc_id,
-                          '{_DIRT_PRE}' || text || '{_DIRT_TAIL}' AS d
-                   FROM documents)
-    SELECT doc_id,
-           CAST(length(d) AS BIGINT) AS n_raw,
-           {clean_text_sql("d")} AS clean_text,
-           CAST(length({clean_text_sql("d")}) AS BIGINT) AS n_clean
-    FROM dirty
-    """
-
-
-# Deterministic dirt appended in-query on BOTH engines: the synthetic corpus
-# has no markup/control chars (verified), so — like p02's derived NULLs —
-# the queries construct the condition they clean. Raw unicode spaces,
-# C0 controls, and tags all present.
-_DIRT_PRE = '<p class="x"> '
-_DIRT_TAIL = "</p>  weird　spacing\x07\x01 <br/> end."
-
-
-@query("x24_text_clean", _clean_sql())
-def x24_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X24 — crawl-text cleaning (operators/clean.py): strip markup,
-    drop C0 controls, normalize unicode spaces, collapse whitespace —
-    byte-identical chain on both engines, map-only."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text
-
-    docs = load_table(spark, sf_dir, "documents")
-    dirty = F.concat(F.lit(_DIRT_PRE), F.col("text"), F.lit(_DIRT_TAIL))
-    return docs.select(
-        "doc_id",
-        F.length(dirty).cast("long").alias("n_raw"),
-        clean_text(dirty).alias("clean_text"),
-        F.length(clean_text(dirty)).cast("long").alias("n_clean"),
-    )
-
-
-def _line_filter_sql() -> str:
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import line_filter_sql
-
-    dirty = (
-        "text || CASE WHEN doc_id % 2 = 0 THEN '.' ELSE '' END"
-        " || chr(10) || 'Subscribe to our newsletter now please!'"
-        " || chr(10) || 'This sentence has plenty of words and ends well.'"
-        " || chr(10) || 'too short.'"
-    )
-    return f"""
-    WITH dirty AS (SELECT doc_id, {dirty} AS d FROM documents)
-    SELECT doc_id,
-           CAST(len(string_split(d, chr(10))) AS INT) AS n_lines,
-           CAST(len(string_split({line_filter_sql("d")}, chr(10))) AS INT) AS n_kept_lines,
-           {line_filter_sql("d")} AS text_filtered
-    FROM dirty
-    """
-
-
-@query("x25_line_filter", _line_filter_sql())
-def x25_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X25 — C4-style boilerplate line filter (operators/clean.py): keep
-    lines with >= 5 words, terminal punctuation, and no blocklisted
-    phrase. Data-dependent: even doc_ids get a terminal '.' on their
-    content line and keep it; odd ones lose it. Map-only array ops."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import (
-        filter_boilerplate_lines,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    dirty = F.concat_ws(
-        "\n",
-        F.concat(F.col("text"), F.when(F.col("doc_id") % 2 == 0, F.lit(".")).otherwise(F.lit(""))),
-        F.lit("Subscribe to our newsletter now please!"),
-        F.lit("This sentence has plenty of words and ends well."),
-        F.lit("too short."),
-    )
-    out = filter_boilerplate_lines(
-        docs.select("doc_id", dirty.alias("d")), text_col="d", out_col="text_filtered"
-    )
-    return out.select(
-        "doc_id",
-        F.col("n_lines").cast("int").alias("n_lines"),
-        # rejoined-text line count (matches the oracle's split-of-joined:
-        # zero kept lines still yields one empty segment on both engines)
-        F.size(F.split(F.col("text_filtered"), r"\n")).cast("int").alias("n_kept_lines"),
-        "text_filtered",
-    )
-
-
-@query(
-    "pipe_lm_buckets",
-    """
-    WITH scores AS ({X23}),
-    b AS (SELECT *, CAST(NTILE(3) OVER (ORDER BY avg_nll, doc_id) - 1 AS INT) AS bucket
-          FROM scores)
-    SELECT bucket, COUNT(*) AS n_docs,
-           MIN(avg_nll) AS min_nll, MAX(avg_nll) AS max_nll,
-           CAST(SUM(n_bigrams) AS BIGINT) AS total_bigrams
-    FROM b GROUP BY 1
-    """,
-)
-def pipe_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite: CCNet-style perplexity bucketing (Wenzek et al. 2020
-    §4.3) — score every doc with the corpus bigram LM (x23), split into
-    head/middle/tail terciles by exact equal-frequency binning, roll up
-    per bucket. Exercises lm.py + binning.py composition end-to-end."""
-    from dbms_data_anonymity_differential_privacy_spark.functions.binning import (
-        bin_equal_frequency,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_lm_scores
-
-    docs = load_table(spark, sf_dir, "documents")
-    scores = bigram_lm_scores(docs)
-    binned = bin_equal_frequency(
-        scores, "avg_nll", 3, out_col="bucket", tiebreak_cols=["doc_id"]
-    )
-    return binned.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("avg_nll").alias("min_nll"),
-        F.max("avg_nll").alias("max_nll"),
-        F.sum("n_bigrams").cast("long").alias("total_bigrams"),
-    )
-
-
-ORACLE_SQL["pipe_lm_buckets"] = ORACLE_SQL["pipe_lm_buckets"].replace(
-    "{X23}", ORACLE_SQL["x23_bigram_lm"]
-)
 
 
 @query(
@@ -2616,21 +2358,6 @@ def x32_linkage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = binned_customer(spark, sf_dir)
     released = ka.k_anonymize_suppress(b, CUST_QI, 5)
     return linkage_attack_audit(released, b, CUST_QI)
-
-
-@query("x29_bpe_tokens")
-def x29_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X29 — real BPE tokenization (operators/bpe.py): distributed word
-    histogram -> driver-side Sennrich merge learning (vocab-sized) ->
-    broadcast merges -> Arrow-batched encode with per-word memo.
-    Rows-only by nature (iterative merges are not SQL-expressible);
-    exact behavior pinned by test_bpe.py incl. the paper's worked
-    example."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.bpe import bpe_tokenize, bpe_train
-
-    docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_train(docs, n_merges=100)
-    return bpe_tokenize(docs, merges).select("doc_id", "n_words", "n_bpe_tokens")
 
 
 # --------------------------------------------------------------------------
@@ -3377,40 +3104,6 @@ def x51_beta_likeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X52 — gap-filled time-bucket rollup (operators/temporal.py
-# gapfill_rollup): hypertable-style continuous aggregate — dense hourly
-# series per event type with zero-filled gaps and a trailing-3 average.
-# One fact aggregation; the dense grid and windows run on kilobytes.
-# --------------------------------------------------------------------------
-@query(
-    "x52_gapfill",
-    """
-    WITH r AS (SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
-                      CAST(COUNT(*) AS BIGINT) AS n, ROUND(SUM(value), 9) AS total
-               FROM events GROUP BY 1, 2),
-    b AS (SELECT UNNEST(generate_series((SELECT MIN(bucket_ts) FROM r),
-                                        (SELECT MAX(bucket_ts) FROM r),
-                                        INTERVAL '1 hour')) AS bucket_ts),
-    g AS (SELECT DISTINCT event_type FROM r),
-    d AS (SELECT g.event_type, b.bucket_ts,
-                 COALESCE(r.n, 0) AS n, COALESCE(r.total, 0.0) AS total
-          FROM g CROSS JOIN b
-          LEFT JOIN r ON r.event_type = g.event_type AND r.bucket_ts = b.bucket_ts)
-    SELECT event_type, bucket_ts, CAST(n AS BIGINT) AS n, total,
-           ROUND(AVG(n) OVER (PARTITION BY event_type ORDER BY bucket_ts
-                              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 9)
-               AS trail_avg_n_r
-    FROM d
-    """,
-)
-def x52_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import gapfill_rollup
-
-    ev = load_table(spark, sf_dir, "events")
-    return gapfill_rollup(ev, ["event_type"], bucket="1 hour", value_col="value", trailing=3)
-
-
-# --------------------------------------------------------------------------
 # X53 — robust per-group outlier screen (operators/metrics.py
 # mad_outlier_stats): Hampel MAD rule with exact type-7 medians (the x22
 # bit-match precedent); the sketch flavor is the 100 TB path.
@@ -3438,59 +3131,6 @@ def x53_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return mad_outlier_stats(ev, ["event_type"], "value")
-
-
-# --------------------------------------------------------------------------
-# X54 — ordered conversion funnel (operators/funnel.py): one shuffle + a
-# JVM higher-order fold instead of the classic k-1 fact self-joins. The
-# oracle replays the chained MIN(ts >= t_prev) semantics step by step.
-# --------------------------------------------------------------------------
-@query(
-    "x54_funnel",
-    """
-    WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                WHERE event_type = 'signup' GROUP BY 1),
-    s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-           WHERE e.event_type = 'click' AND e.ts >= s1.t1 GROUP BY 1),
-    s3 AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1)
-    SELECT CAST(1 AS INT) AS step, 'signup' AS event_type,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM s1) AS users
-    UNION ALL
-    SELECT CAST(2 AS INT), 'click', (SELECT CAST(COUNT(*) AS BIGINT) FROM s2)
-    UNION ALL
-    SELECT CAST(3 AS INT), 'purchase', (SELECT CAST(COUNT(*) AS BIGINT) FROM s3)
-    """,
-)
-def x54_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import funnel
-
-    ev = load_table(spark, sf_dir, "events")
-    return funnel(ev, ["signup", "click", "purchase"])
-
-
-# --------------------------------------------------------------------------
-# X55 — retention cohorts (operators/funnel.py retention_cohorts): events
-# collapse map-side to the distinct (user, week) activity relation before
-# any join; all shuffles are over that slim relation.
-# --------------------------------------------------------------------------
-@query(
-    "x55_retention",
-    """
-    WITH act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS period
-                 FROM events),
-    f AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1)
-    SELECT CAST(cohort AS VARCHAR) AS cohort,
-           CAST((period - cohort) // 7 AS INT) AS period_offset,
-           CAST(COUNT(*) AS BIGINT) AS active_users
-    FROM act JOIN f USING (user_id) GROUP BY 1, 2
-    """,
-)
-def x55_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import retention_cohorts
-
-    ev = load_table(spark, sf_dir, "events")
-    return retention_cohorts(ev)
 
 
 # --------------------------------------------------------------------------
@@ -3745,63 +3385,6 @@ def x60_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return kmv_distinct(ev, "user_id", k=64, salt="x60k")
-
-
-# --------------------------------------------------------------------------
-# X61 — OHLC resampling bars (operators/temporal.py ohlc_bars): the
-# market-data candle / metric downsampler. Argmin/argmax-by-time with a
-# pinned (ts, id) tie-break; window + aggregation share ONE shuffle.
-# --------------------------------------------------------------------------
-@query(
-    "x61_ohlc_bars",
-    """
-    WITH k AS (SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
-                      ts, event_id, value FROM events),
-    r AS (SELECT *,
-                 ROW_NUMBER() OVER (PARTITION BY event_type, bucket_ts
-                                    ORDER BY ts, event_id) AS ra,
-                 ROW_NUMBER() OVER (PARTITION BY event_type, bucket_ts
-                                    ORDER BY ts DESC, event_id DESC) AS rd
-          FROM k)
-    SELECT event_type, bucket_ts,
-           MAX(CASE WHEN ra = 1 THEN value END) AS open,
-           MAX(value) AS high, MIN(value) AS low,
-           MAX(CASE WHEN rd = 1 THEN value END) AS close,
-           CAST(COUNT(*) AS BIGINT) AS n, ROUND(SUM(value), 9) AS total_r
-    FROM r GROUP BY 1, 2
-    """,
-)
-def x61_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import ohlc_bars
-
-    ev = load_table(spark, sf_dir, "events")
-    return ohlc_bars(ev, ["event_type"], bucket="1 hour")
-
-
-# --------------------------------------------------------------------------
-# X62 — per-key lag/rolling ML features (operators/temporal.py
-# lag_features): the feature-store primitive. One shuffle on the key;
-# lag + rolling frames share the per-key sort.
-# --------------------------------------------------------------------------
-@query(
-    "x62_lag_features",
-    """
-    SELECT user_id, ts, event_id, value,
-           LAG(value) OVER w AS prev_value,
-           ROUND(value - LAG(value) OVER w, 9) AS delta_r,
-           date_diff('second', LAG(ts) OVER w, ts) AS gap_seconds,
-           ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 9)
-               AS trail_mean_r
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def x62_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import lag_features
-
-    ev = load_table(spark, sf_dir, "events")
-    return lag_features(ev, ["user_id"], window_rows=3)
 
 
 # --------------------------------------------------------------------------
@@ -4319,37 +3902,6 @@ def x77_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X78 — last-touch attribution (operators/funnel.py
-# last_touch_attribution): conversions credited to the latest prior
-# touch by COMPOSING the x16 as-of join; the oracle replays the LATERAL
-# top-1 with the same (ts desc, touch desc) tie order.
-# --------------------------------------------------------------------------
-@query(
-    "x78_attribution",
-    """
-    WITH conv AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
-    tch AS (SELECT user_id, ts, event_type AS touch FROM events
-            WHERE event_type <> 'purchase'),
-    a AS (SELECT c.user_id, m.touch
-          FROM conv c LEFT JOIN LATERAL (
-               SELECT t.touch FROM tch t
-               WHERE t.user_id = c.user_id AND t.ts <= c.ts
-               ORDER BY t.ts DESC, t.touch DESC LIMIT 1) m ON TRUE)
-    SELECT COALESCE(touch, '(none)') AS touch_type,
-           CAST(COUNT(*) AS BIGINT) AS conversions
-    FROM a GROUP BY 1
-    """,
-)
-def x78_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (
-        last_touch_attribution,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return last_touch_attribution(ev, conversion_type="purchase")
-
-
-# --------------------------------------------------------------------------
 # X79 — Kaplan-Meier survival (operators/stats.py kaplan_meier +
 # time_to_event): time-to-conversion with right censoring; the survival
 # product runs as exp(cumsum(ln)) with an explicit zero-factor flag over
@@ -4509,71 +4061,6 @@ def x95_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X92 — user growth curve (operators/funnel.py user_growth): exact
-# cumulative distinct users as a cumsum of first-appearance counts — a
-# user contributes to exactly one period, so no distinct-per-prefix
-# rescan; the global-order window runs on the periods-sized relation.
-# --------------------------------------------------------------------------
-@query(
-    "x92_user_growth",
-    """
-    WITH f AS (SELECT user_id, MIN(CAST(date_trunc('day', ts) AS DATE)) AS p
-               FROM events GROUP BY 1),
-    d AS (SELECT CAST(p AS VARCHAR) AS period, COUNT(*) AS new_users
-          FROM f GROUP BY 1)
-    SELECT period, new_users,
-           CAST(SUM(new_users) OVER (ORDER BY period
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS cum_users
-    FROM d
-    """,
-)
-def x92_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily new users + cumulative unique-user curve."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import user_growth
-
-    ev = load_table(spark, sf_dir, "events")
-    return user_growth(ev, period="day")
-
-
-# --------------------------------------------------------------------------
-# X94 — funnel step latencies (operators/funnel.py funnel_step_latency):
-# per consecutive step pair, exact latency percentiles over completing
-# users, in integer MICROseconds (unix_micros ≡ epoch_us; a
-# second-truncating timestamp diff would shear sub-second funnels).
-# --------------------------------------------------------------------------
-@query(
-    "x94_step_latency",
-    """
-    WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                WHERE event_type = 'signup' GROUP BY 1),
-    s2 AS (SELECT e.user_id, s1.t1, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-           WHERE e.event_type = 'click' AND e.ts >= s1.t1 GROUP BY 1, 2),
-    s3 AS (SELECT e.user_id, s2.t2, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1, 2)
-    SELECT 'signup' AS step_from, 'click' AS step_to,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           quantile_cont(epoch_us(t2) - epoch_us(t1), 0.5) AS p50_us,
-           quantile_cont(epoch_us(t2) - epoch_us(t1), 0.9) AS p90_us
-    FROM s2
-    UNION ALL
-    SELECT 'click', 'purchase', CAST(COUNT(*) AS BIGINT),
-           quantile_cont(epoch_us(t3) - epoch_us(t2), 0.5),
-           quantile_cont(epoch_us(t3) - epoch_us(t2), 0.9)
-    FROM s3
-    """,
-)
-def x94_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latency percentiles between consecutive funnel steps."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (
-        funnel_step_latency,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return funnel_step_latency(ev, ["signup", "click", "purchase"], ps=(0.5, 0.9))
-
-
-# --------------------------------------------------------------------------
 # X91 — per-group winsorization (operators/metrics.py winsorize): clip to
 # exact per-group [p1, p99]; type-7 percentile interpolation bit-matches
 # quantile_cont (the x22 exactness), so the clipped column hashes with NO
@@ -4597,43 +4084,6 @@ def x91_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     return winsorize(ev, ["event_type"], "value", 0.01, 0.99)
-
-
-# --------------------------------------------------------------------------
-# X90 — linear multi-touch attribution (operators/funnel.py
-# linear_attribution): credit split equally over all prior touches, x78
-# last-touch's sibling. The Σ(1/n) rollup is decomposed into exact
-# integer (type, n) counts + a LEFT-TO-RIGHT fold over the n-sorted tiny
-# relation (aggregate(sort_array(collect_list)) ≡ list_reduce(list(...
-# ORDER BY n))) so the float sum is order-deterministic on both engines.
-# --------------------------------------------------------------------------
-@query(
-    "x90_linear_attribution",
-    """
-    WITH conv AS (SELECT user_id AS u, ts AS cts, event_id AS cid
-                  FROM events WHERE event_type = 'purchase'),
-    t AS (SELECT user_id AS tu, ts AS tts, event_type AS touch
-          FROM events WHERE event_type <> 'purchase'),
-    p AS (SELECT conv.cid, t.touch FROM conv
-          LEFT JOIN t ON t.tu = conv.u AND t.tts <= conv.cts),
-    nn AS (SELECT cid, touch,
-                  CASE WHEN touch IS NULL THEN 1
-                       ELSE COUNT(touch) OVER (PARTITION BY cid) END AS n
-           FROM p),
-    s AS (SELECT COALESCE(touch, '(none)') AS touch_type, n FROM nn),
-    bn AS (SELECT touch_type, n, COUNT(*) AS cnt FROM s GROUP BY 1, 2)
-    SELECT touch_type, CAST(SUM(cnt) AS BIGINT) AS n_pairs,
-           ROUND(list_reduce(list(CAST(cnt AS DOUBLE) / n ORDER BY n),
-                             (a, b) -> a + b), 9) AS credit_r
-    FROM bn GROUP BY 1
-    """,
-)
-def x90_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch credit per touch type (conversion='purchase')."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import linear_attribution
-
-    ev = load_table(spark, sf_dir, "events")
-    return linear_attribution(ev)
 
 
 # --------------------------------------------------------------------------
@@ -4903,79 +4353,6 @@ def x81_knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X98 — interval overlap join (operators/temporal.py interval_overlap_join):
-# the bucket-fragmentation range join. Sessions impacted by error-burst
-# hours; all-integer per-user rollup. Oracle = the literal inequality join.
-# --------------------------------------------------------------------------
-SESSIONS_CTE = """
-    e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-    f AS (SELECT user_id, ts,
-                 CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                        OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                             > INTERVAL '30 minutes'
-                      THEN 1 ELSE 0 END AS new_s
-          FROM e),
-    s AS (SELECT user_id, ts,
-                 SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-          FROM f),
-    sess AS (SELECT user_id, MIN(ts) AS session_start,
-                    MAX(ts) + INTERVAL '30 minutes' AS session_end
-             FROM s GROUP BY user_id, sid)
-"""
-
-
-@query(
-    "x98_session_impact",
-    f"""
-    WITH {SESSIONS_CTE},
-    bursts AS (SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS w_start,
-                      CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL '1 hour' AS w_end
-               FROM events WHERE event_type = 'error'
-               GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-    pairs AS (SELECT sess.user_id, sess.session_start,
-                     epoch_us(LEAST(sess.session_end, b.w_end))
-                       - epoch_us(GREATEST(sess.session_start, b.w_start)) AS ov
-              FROM sess JOIN bursts b
-                ON sess.session_start < b.w_end AND b.w_start < sess.session_end)
-    SELECT user_id,
-           CAST(COUNT(DISTINCT session_start) AS BIGINT) AS n_impacted_sessions,
-           CAST(COUNT(*) AS BIGINT) AS n_burst_hits,
-           CAST(SUM(ov) AS BIGINT) AS overlap_us
-    FROM pairs GROUP BY user_id
-    """,
-)
-def x98_session_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Which user sessions overlapped an error-burst hour, and for how
-    long: sessionize -> hourly burst windows (>= 5 errors) -> bucket-
-    fragmentation overlap join -> exact-integer per-user rollup."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import (
-        interval_overlap_join,
-    )
-    from dbms_data_anonymity_differential_privacy_spark.streaming.sessions import sessionize_batch
-
-    ev = load_table(spark, sf_dir, "events")
-    sessions = sessionize_batch(ev, gap="30 minutes")
-    hour = F.date_trunc("hour", F.col("ts"))
-    bursts = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(hour.alias("w_start"))
-        .agg(F.count(F.lit(1)).alias("n_err"))
-        .filter(F.col("n_err") >= 5)
-        .select("w_start", (F.col("w_start") + F.expr("INTERVAL 1 HOUR")).alias("w_end"))
-    )
-    pairs = interval_overlap_join(
-        sessions, bursts, "session_start", "session_end", "w_start", "w_end",
-        bucket_us=3_600_000_000,
-    )
-    return pairs.groupBy("user_id").agg(
-        F.countDistinct("session_start").alias("n_impacted_sessions"),
-        F.count(F.lit(1)).alias("n_burst_hits"),
-        F.sum("overlap_us").alias("overlap_us"),
-    )
-
-
-# --------------------------------------------------------------------------
 # X99 — per-document TF-IDF keywords (operators/text.py tfidf_topk):
 # word-count shuffle + vocab-sized df agg + broadcast driver-libm idf
 # table + map-side WindowGroupLimit top-k. Oracle mirrors the exact
@@ -5150,53 +4527,6 @@ def x103_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X124 — time-decay attribution (operators/funnel.py
-# time_decay_attribution): integer micro-credit exactness — the decay
-# table is driver-built literal integers (no engine pow()), credits are
-# (w·1e6) DIV Σw. Same literal rows embedded in both engines.
-# --------------------------------------------------------------------------
-def _x124_sql(half_life: int = 24, max_age: int = 720) -> str:
-    rows = ", ".join(
-        f"({h}, {round(1_000_000 * 0.5 ** (h / half_life))})"
-        for h in range(max_age + 1)
-    )
-    return f"""
-    WITH conv AS (SELECT user_id AS u, ts AS cts, event_id AS cid
-                  FROM events WHERE event_type = 'purchase'),
-    t AS (SELECT user_id AS tu, ts AS tts, event_type AS touch
-          FROM events WHERE event_type <> 'purchase'),
-    decay(age_h, w) AS (VALUES {rows}),
-    p AS (SELECT c.cid, t.touch, d.w
-          FROM conv c
-          LEFT JOIN t ON t.tu = c.u AND t.tts <= c.cts
-          LEFT JOIN decay d ON d.age_h = CAST(FLOOR(
-                 (epoch_us(c.cts) - epoch_us(t.tts)) / 3600000000.0) AS BIGINT)),
-    s AS (SELECT *, SUM(w) OVER (PARTITION BY cid) AS sw FROM p),
-    tr AS (SELECT touch AS touch_type, 1 AS n, (CAST(w AS BIGINT) * 1000000) // sw AS c
-           FROM s WHERE sw IS NOT NULL AND sw > 0 AND w IS NOT NULL AND w > 0),
-    nr AS (SELECT '(none)' AS touch_type, 1 AS n, 1000000 AS c
-           FROM (SELECT DISTINCT cid FROM s WHERE sw IS NULL OR sw = 0))
-    SELECT touch_type, CAST(SUM(n) AS BIGINT) AS n_pairs,
-           CAST(SUM(c) AS BIGINT) AS credit_ppm
-    FROM (SELECT * FROM tr UNION ALL SELECT * FROM nr) GROUP BY 1
-    """
-
-
-@query("x124_decay_attribution", None)  # SQL attached below (literal table)
-def x124_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-decay multi-touch attribution (24 h half-life, ppm credits)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (
-        time_decay_attribution,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return time_decay_attribution(ev, half_life_hours=24, max_age_hours=720)
-
-
-ORACLE_SQL["x124_decay_attribution"] = _x124_sql()
-
-
-# --------------------------------------------------------------------------
 # X125 — SCD Type 2 build (operators/scd.py scd2_build): change-compress
 # the per-user event stream, then validity intervals / versions / the
 # is_current flag off the same key-partitioned window family. Oracle =
@@ -5313,45 +4643,6 @@ def x127_anatomy(spark: SparkSession, sf_dir: str) -> DataFrame:
         c, qi=["c_nationkey"], sensitive="c_mktsegment", id_col="c_custkey", ell=3
     )
     return parts["st"].join(parts["groups"], on="group_id")
-
-
-# --------------------------------------------------------------------------
-# X128 — Zipf rank-frequency fit (operators/lm.py zipf_fit): OLS of
-# ln(count) on ln(rank) for the top-1000 words; libm log table + sorted
-# folds keep both engines bit-identical (the x23 idiom).
-# --------------------------------------------------------------------------
-@query(
-    "x128_zipf",
-    """
-    WITH toks AS (SELECT unnest(list_filter(
-                    string_split_regex(lower(trim(text)), '\\s+'),
-                    w -> w <> '')) AS tok FROM documents),
-    wc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY 1),
-    topk AS (SELECT cnt FROM wc ORDER BY cnt DESC, tok LIMIT 1000),
-    xy AS (SELECT ln(CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC) AS DOUBLE)) AS x,
-                  ln(CAST(cnt AS DOUBLE)) AS y FROM topk),
-    s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                 list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sx,
-                 list_reduce(list_sort(list(y)), (a, b) -> a + b) AS sy,
-                 list_reduce(list_sort(list(x * y)), (a, b) -> a + b) AS sxy,
-                 list_reduce(list_sort(list(x * x)), (a, b) -> a + b) AS sxx,
-                 list_reduce(list_sort(list(y * y)), (a, b) -> a + b) AS syy
-          FROM xy)
-    SELECT n AS n_words,
-           ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9) AS slope_r,
-           ROUND((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 9)
-             AS intercept_r,
-           ROUND(((n * sxy - sx * sy) * (n * sxy - sx * sy))
-                 / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 9) AS r2_r
-    FROM s
-    """,
-)
-def x128_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus Zipf slope over the top-1000 vocabulary."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import zipf_fit
-
-    docs = load_table(spark, sf_dir, "documents")
-    return zipf_fit(docs, top_k=1000)
 
 
 # --------------------------------------------------------------------------
@@ -5646,41 +4937,6 @@ def x136_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X137 — RFM segmentation (operators/funnel.py rfm_segments).
-# --------------------------------------------------------------------------
-@query(
-    "x137_rfm",
-    """
-    WITH anch AS (SELECT MAX(ts) AS maxts FROM events),
-    pu AS (SELECT user_id AS u, MAX(ts) AS last_ts,
-                  CAST(COUNT(*) AS BIGINT) AS freq,
-                  COALESCE(SUM(value), 0.0) AS money
-           FROM events GROUP BY 1),
-    st AS (SELECT u, freq, money,
-                  (epoch_us(anch.maxts) - epoch_us(last_ts)) / 86400000000.0
-                    AS rec_days
-           FROM pu CROSS JOIN anch),
-    coded AS (SELECT *,
-                CAST(NTILE(5) OVER (ORDER BY rec_days DESC, u) * 100
-                     + NTILE(5) OVER (ORDER BY freq ASC, u) * 10
-                     + NTILE(5) OVER (ORDER BY money ASC, u) AS INT) AS segment
-              FROM st)
-    SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_users,
-           ROUND(AVG(rec_days), 9) AS avg_recency_days_r,
-           ROUND(AVG(freq), 9) AS avg_frequency_r,
-           ROUND(AVG(money), 9) AS avg_monetary_r
-    FROM coded GROUP BY 1
-    """,
-)
-def x137_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-segment RFM rollup (5x5x5 coding, 5 = best)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import rfm_segments
-
-    ev = load_table(spark, sf_dir, "events")
-    return rfm_segments(ev)
-
-
-# --------------------------------------------------------------------------
 # X138 — triangle census (operators/graph.py triangle_count) over the
 # co-purchase graph (pairs with support >= 2): Suri–Vassilvitskii degree
 # orientation bounds wedge fan-out by the oriented out-degree. Oracle =
@@ -5718,39 +4974,6 @@ def x138_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join form it replaced; see _copurchase_part_edges, r10)
     edges = _copurchase_part_edges(spark, sf_dir)
     return triangle_count(edges)
-
-
-# --------------------------------------------------------------------------
-# X139 — popularity hit@k (operators/funnel.py popularity_hitk): the
-# recommender-eval floor; train/test date split, top-k broadcast,
-# map-side semi-join hit test.
-# --------------------------------------------------------------------------
-@query(
-    "x139_hitk",
-    """
-    WITH pur AS (SELECT o.o_custkey AS u, l.l_partkey AS item, o.o_orderdate AS d
-                 FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-    topk AS (SELECT item FROM (SELECT item, COUNT(*) AS c FROM pur
-                               WHERE d < TIMESTAMP '1999-01-01 00:00:00'
-                               GROUP BY 1)
-             ORDER BY c DESC, item LIMIT 20),
-    test AS (SELECT u, item FROM pur
-             WHERE d >= TIMESTAMP '1999-01-01 00:00:00'),
-    tu AS (SELECT CAST(COUNT(DISTINCT u) AS BIGINT) AS n_test_users FROM test),
-    h AS (SELECT CAST(COUNT(DISTINCT u) AS BIGINT) AS n_hit FROM test
-          WHERE item IN (SELECT item FROM topk))
-    SELECT 20 AS k, tu.n_test_users, h.n_hit,
-           ROUND(h.n_hit * 1.0 / tu.n_test_users, 9) AS hit_rate_r
-    FROM tu CROSS JOIN h
-    """,
-)
-def x139_hitk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hit-rate@20 of the popularity baseline, 1999-01-01 split."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import popularity_hitk
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return popularity_hitk(o, li, "1999-01-01 00:00:00", k=20)
 
 
 # --------------------------------------------------------------------------
@@ -6269,63 +5492,6 @@ def x145_jsd_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# X146 — cohort LTV curve (operators/funnel.py cohort_ltv): dense
-# per-cohort cumulative revenue per user by cohort age; x55 cohort
-# definition, ordered-window cumsum, one division for ltv. Fact rows
-# aggregate twice (activity collapse + revenue); the grid/windows run on
-# the cohorts-by-ages relation.
-# --------------------------------------------------------------------------
-@query(
-    "x146_cohort_ltv",
-    """
-    WITH act AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS period
-                 FROM events),
-    f AS (SELECT user_id, MIN(period) AS cohort FROM act GROUP BY 1),
-    sz AS (SELECT cohort, COUNT(*) AS cohort_users FROM f GROUP BY 1),
-    -- two-level sorted fold, not SUM: pins float addition order at both
-    -- levels so the 9-dp release can't straddle a rounding band, while
-    -- no aggregation holds a whole cohort-week's raw rows (matches the
-    -- engine's nested aggregate(array_sort(collect_list(...))))
-    pu AS (SELECT f.cohort,
-                  CAST((date_trunc('week', e.ts) - f.cohort) // 7 AS INT)
-                    AS age_weeks,
-                  e.user_id,
-                  list_reduce(list_sort(list(e.value)), (a, b) -> a + b) AS urev
-           FROM events e JOIN f ON f.user_id = e.user_id
-           WHERE e.event_type = 'purchase'
-           GROUP BY 1, 2, 3),
-    rev AS (SELECT cohort, age_weeks,
-                   list_reduce(list_sort(list(urev)), (a, b) -> a + b) AS rev
-            FROM pu GROUP BY 1, 2),
-    hz AS (SELECT MAX(period) AS hi FROM act),
-    grid AS (SELECT sz.cohort, sz.cohort_users,
-                    unnest(generate_series(0,
-                        CAST((hz.hi - sz.cohort) // 7 AS INT))) AS age_weeks
-             FROM sz CROSS JOIN hz),
-    dense AS (SELECT g.cohort, g.age_weeks, g.cohort_users,
-                     COALESCE(rev.rev, 0.0) AS rev
-              FROM grid g LEFT JOIN rev
-                ON rev.cohort = g.cohort AND rev.age_weeks = g.age_weeks),
-    c AS (SELECT *, SUM(rev) OVER (PARTITION BY cohort ORDER BY age_weeks
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS cum
-          FROM dense)
-    SELECT CAST(cohort AS VARCHAR) AS cohort, CAST(age_weeks AS INT) AS age_weeks,
-           CAST(cohort_users AS BIGINT) AS cohort_users,
-           ROUND(rev, 9) AS rev_r, ROUND(cum, 9) AS cum_rev_r,
-           ROUND(cum / CAST(cohort_users AS DOUBLE), 9) AS ltv_r
-    FROM c
-    """,
-)
-def x146_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly-cohort cumulative purchase revenue per user by age."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import cohort_ltv
-
-    ev = load_table(spark, sf_dir, "events")
-    return cohort_ltv(ev)
-
-
-# --------------------------------------------------------------------------
 # X147 — exact ROC-AUC (operators/features.py roc_auc): rank-formulation
 # AUC with x109-style doubled tie-averaged ranks — exact DECIMAL/HUGEINT
 # sums over the distinct-score relation, one IEEE division at release.
@@ -6427,126 +5593,6 @@ ORACLE_SQL["x122_label_consistency"] = f"""
     JOIN embeddings cl ON cl.vec_id = nn.id_c
     GROUP BY 1, 2
     """
-
-
-# --------------------------------------------------------------------------
-# X121 — rolling active users (operators/funnel.py rolling_active_users):
-# sliding-window COUNT DISTINCT via map-side day-contribution explode
-# (W x the distinct activity relation) + one (day, user) distinct.
-# --------------------------------------------------------------------------
-@query(
-    "x121_rolling_wau",
-    """
-    WITH act AS (SELECT DISTINCT user_id,
-                        CAST(date_trunc('day', ts) AS DATE) AS d
-                 FROM events),
-    hi AS (SELECT MAX(d) AS hi FROM act),
-    contrib AS (SELECT DISTINCT user_id,
-                       CAST(unnest(generate_series(d, d + INTERVAL 6 DAY,
-                                                   INTERVAL 1 DAY)) AS DATE) AS day
-                FROM act)
-    SELECT CAST(day AS VARCHAR) AS day, CAST(COUNT(*) AS BIGINT) AS active_users
-    FROM contrib CROSS JOIN hi WHERE day <= hi GROUP BY 1
-    """,
-)
-def x121_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day distinct active users per day."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import (
-        rolling_active_users,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return rolling_active_users(ev, window_days=7)
-
-
-# --------------------------------------------------------------------------
-# X120 — inter-event burstiness (operators/funnel.py interevent_stats):
-# per-user gap CV from integer-µs window gaps + decimal-exact Σg²
-# (x87 variance form, x109 decimal convention).
-# --------------------------------------------------------------------------
-@query(
-    "x120_burstiness",
-    """
-    WITH g AS (SELECT user_id,
-                      epoch_us(ts) - lag(epoch_us(ts)) OVER
-                        (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-               FROM events),
-    a AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-                 CAST(COUNT(gap) AS BIGINT) AS n_gaps,
-                 CAST(SUM(gap) AS BIGINT) AS sg,
-                 SUM(CAST(gap AS HUGEINT) * CAST(gap AS HUGEINT)) AS sgg
-          FROM g GROUP BY 1)
-    SELECT user_id, n_events, n_gaps,
-           CASE WHEN n_gaps >= 1
-                THEN CAST((2 * sg + n_gaps) // (2 * n_gaps) AS BIGINT) END
-             AS mean_gap_us,
-           ROUND(CASE WHEN n_gaps >= 2 AND sg > 0
-                      THEN SQRT(CAST(CAST(n_gaps AS HUGEINT) * sgg
-                                     - CAST(sg AS HUGEINT) * CAST(sg AS HUGEINT)
-                                     AS DOUBLE)
-                                / CAST(n_gaps * (n_gaps - 1) AS DOUBLE))
-                           / (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)) END, 6)
-             AS cv_r
-    FROM a
-    """,
-)
-def x120_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user inter-event gap statistics and burstiness CV."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import interevent_stats
-
-    ev = load_table(spark, sf_dir, "events")
-    return interevent_stats(ev)
-
-
-# --------------------------------------------------------------------------
-# X119 — interpolation gapfill (operators/temporal.py
-# interpolate_gapfill): dense per-group spine + two ignore-nulls window
-# passes; linear interp between observed neighbors, LOCF at the edges.
-# --------------------------------------------------------------------------
-@query(
-    "x119_interp_gapfill",
-    """
-    WITH obs AS (SELECT event_type,
-                        CAST(date_trunc('hour', ts) AS TIMESTAMP) AS b,
-                        AVG(value) AS v
-                 FROM events GROUP BY 1, 2),
-    span AS (SELECT event_type, MIN(b) AS lo, MAX(b) AS hi FROM obs GROUP BY 1),
-    spine AS (SELECT event_type, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS b
-              FROM span),
-    dense AS (SELECT s.event_type, s.b, o.v
-              FROM spine s LEFT JOIN obs o USING (event_type, b)),
-    nb AS (SELECT event_type, b, v,
-                  last_value(v IGNORE NULLS) OVER wf AS pv,
-                  last_value(CASE WHEN v IS NOT NULL THEN epoch(b) END IGNORE NULLS)
-                    OVER wf AS pt,
-                  last_value(v IGNORE NULLS) OVER wb AS nv,
-                  last_value(CASE WHEN v IS NOT NULL THEN epoch(b) END IGNORE NULLS)
-                    OVER wb AS nt
-           FROM dense
-           WINDOW wf AS (PARTITION BY event_type ORDER BY b
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                  wb AS (PARTITION BY event_type ORDER BY b DESC
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-    SELECT event_type, b AS bucket_ts,
-           ROUND(CASE WHEN v IS NOT NULL THEN v
-                      WHEN pv IS NULL THEN nv
-                      WHEN nv IS NULL THEN pv
-                      ELSE pv + (nv - pv) * CAST(epoch(b) - pt AS DOUBLE)
-                                          / CAST(nt - pt AS DOUBLE) END, 9) AS value_r,
-           CASE WHEN v IS NOT NULL THEN 'obs'
-                WHEN pv IS NULL OR nv IS NULL THEN 'locf'
-                ELSE 'interp' END AS src
-    FROM nb
-    """,
-)
-def x119_interp_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly mean event value per type, gaps linearly interpolated."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import (
-        interpolate_gapfill,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return interpolate_gapfill(ev, ["event_type"], bucket="1 hour")
 
 
 # --------------------------------------------------------------------------
@@ -6881,41 +5927,6 @@ def x108_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return ks_statistic(ev, "value", "event_type", "click", "purchase")
-
-
-# --------------------------------------------------------------------------
-# X107 — windowed funnel (operators/funnel.py funnel(within_seconds=...)):
-# conversion bounded to a step-1-anchored window — the "converted within
-# 72 h of signup" product metric. Same fold, one extra guard; the oracle
-# chains MIN under the same anchor bound.
-# --------------------------------------------------------------------------
-@query(
-    "x107_funnel_windowed",
-    """
-    WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                WHERE event_type = 'signup' GROUP BY 1),
-    s2 AS (SELECT e.user_id, s1.t1, MIN(e.ts) AS t2
-           FROM events e JOIN s1 USING (user_id)
-           WHERE e.event_type = 'click' AND e.ts >= s1.t1
-             AND e.ts <= s1.t1 + INTERVAL 72 HOURS GROUP BY 1, 2),
-    s3 AS (SELECT e.user_id, MIN(e.ts) AS t3
-           FROM events e JOIN s2 USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t2
-             AND e.ts <= s2.t1 + INTERVAL 72 HOURS GROUP BY 1)
-    SELECT 1 AS step, 'signup' AS event_type,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM s1) AS users
-    UNION ALL SELECT 2, 'click', (SELECT CAST(COUNT(*) AS BIGINT) FROM s2)
-    UNION ALL SELECT 3, 'purchase', (SELECT CAST(COUNT(*) AS BIGINT) FROM s3)
-    """,
-)
-def x107_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """signup -> click -> purchase completed within 72 h of signup."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import funnel
-
-    ev = load_table(spark, sf_dir, "events")
-    return funnel(
-        ev, ["signup", "click", "purchase"], within_seconds=72 * 3600
-    )
 
 
 # --------------------------------------------------------------------------
@@ -9702,105 +8713,6 @@ def x211_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SQL["x210_mcnemar"] = ORACLE_SQL["x210_mcnemar"].replace(
     "{LANG_SCORE_CTE}", _LANG_SCORE_CTE
 )
-
-
-# --------------------------------------------------------------------------
-# X212 — Markov-chain attribution by removal effect (operators/funnel.py
-# markov_attribution): the data-driven successor of x78/x90/x124;
-# journey chain built distributed, absorption replayed as 30 unrolled
-# Jacobi steps per variant (base + one per channel) — the x188
-# discipline. Channels are the data-independent event vocabulary.
-# --------------------------------------------------------------------------
-PUBLIC_EVENT_CHANNELS = ("click", "error", "signup", "view")
-
-
-def _x212_sql(n_iter: int = 30, channels=PUBLIC_EVENT_CHANNELS) -> str:
-    ctes = [
-        "e2 AS (SELECT user_id, event_type,"
-        " ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn"
-        " FROM events)",
-        "cv AS (SELECT user_id,"
-        " MIN(CASE WHEN event_type = 'purchase' THEN rn END) AS crn,"
-        " MAX(rn) AS mrn FROM e2 GROUP BY 1)",
-        "fj AS (SELECT e2.user_id, e2.rn,"
-        " CASE WHEN e2.event_type = 'purchase' THEN 'CONV' ELSE e2.event_type END"
-        " AS st, cv.crn, cv.mrn"
-        " FROM e2 JOIN cv USING (user_id)"
-        " WHERE cv.crn IS NULL OR e2.rn <= cv.crn)",
-        "tr0 AS (SELECT COALESCE(LAG(st) OVER (PARTITION BY user_id ORDER BY rn),"
-        " 'START') AS f, st AS t FROM fj)",
-        "term AS (SELECT st AS f, 'NULL' AS t FROM fj"
-        " WHERE crn IS NULL AND rn = mrn)",
-        "cnt AS (SELECT f, t, COUNT(*) AS c FROM"
-        " (SELECT f, t FROM tr0 UNION ALL SELECT f, t FROM term) GROUP BY 1, 2)",
-        "rt AS (SELECT f, SUM(c) AS nn FROM cnt GROUP BY 1)",
-        "p AS MATERIALIZED (SELECT cnt.f, cnt.t,"
-        " CAST(cnt.c AS DOUBLE) / CAST(rt.nn AS DOUBLE) AS p"
-        " FROM cnt JOIN rt USING (f))",
-    ]
-    variants = [("b", None)] + [(f"v{i}", ch) for i, ch in enumerate(channels)]
-    for tag, ch in variants:
-        if ch is None:
-            ctes.append(f"p_{tag} AS MATERIALIZED (SELECT f, t, p FROM p)")
-        else:
-            ctes.append(
-                f"p_{tag} AS MATERIALIZED (SELECT f,"
-                f" CASE WHEN t = '{ch}' THEN 'NULL' ELSE t END AS t,"
-                f" SUM(p) AS p FROM p WHERE f <> '{ch}' GROUP BY 1, 2)"
-            )
-        ctes.append(
-            f"pc_{tag} AS MATERIALIZED (SELECT f AS s,"
-            f" SUM(CASE WHEN t = 'CONV' THEN p ELSE 0.0 END) AS pc"
-            f" FROM p_{tag} GROUP BY 1)"
-        )
-        ctes.append(f"x_{tag}_0 AS (SELECT s, 0.0 AS x FROM pc_{tag})")
-        # every step MATERIALIZED: a lazy chain of 30 nested-subquery
-        # CTEs makes DuckDB's planner super-linear in depth (measured:
-        # 0.08 s at depth 5, 3 s at depth 15, unbounded at 30)
-        for k in range(1, n_iter + 1):
-            ctes.append(
-                f"x_{tag}_{k} AS MATERIALIZED (SELECT pc.s, pc.pc + COALESCE(sj.v, 0.0) AS x"
-                f" FROM pc_{tag} pc LEFT JOIN"
-                f" (SELECT pp.f AS s, SUM(pp.p * xk.x) AS v"
-                f"  FROM p_{tag} pp JOIN x_{tag}_{k - 1} xk ON xk.s = pp.t"
-                f"  GROUP BY 1) sj ON sj.s = pc.s)"
-            )
-    ctes.append(
-        f"base AS (SELECT x AS pb FROM x_b_{n_iter} WHERE s = 'START')"
-    )
-    fin_rows = " UNION ALL ".join(
-        f"SELECT '{ch}' AS channel,"
-        f" (SELECT x FROM x_v{i}_{n_iter} WHERE s = 'START') AS pr"
-        for i, ch in enumerate(channels)
-    )
-    ctes.append(f"fin AS ({fin_rows})")
-    ctes.append(
-        "re AS MATERIALIZED (SELECT channel, pr,"
-        " CASE WHEN base.pb > 0 THEN (base.pb - pr) / base.pb ELSE 0.0 END AS re"
-        " FROM fin CROSS JOIN base)"
-    )
-    ctes.append("ssum AS (SELECT SUM(re) AS s FROM re)")
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + """ SELECT re.channel,
-                     ROUND(base.pb, 6) AS p_conv_base_r,
-                     ROUND(re.pr, 6) AS p_conv_removed_r,
-                     ROUND(re.re, 6) AS removal_effect_r,
-                     ROUND(CASE WHEN ssum.s > 0 THEN re.re / ssum.s END, 6)
-                       AS share_r
-              FROM re CROSS JOIN base CROSS JOIN ssum"""
-    )
-
-
-@query("x212_markov_attribution", _x212_sql())
-def x212_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Removal-effect attribution of purchase conversions over the
-    event-type journey chain."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import markov_attribution
-
-    ev = load_table(spark, sf_dir, "events")
-    return markov_attribution(ev, conversion_type="purchase", n_iter=30)
 
 
 # --------------------------------------------------------------------------

@@ -30,25 +30,22 @@ def write_release(
     mode: str = "error",
     target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> None:
-    """Write an anonymized release as parquet.
+    """Write an anonymized release as parquet, in one Spark action.
 
     Coalesces to roughly ``logical_size / target_file_bytes`` output files
     using the optimizer's size estimate — cheap (no extra action), and at
     worst the estimate is off by the compression factor, which only shifts
-    file sizes, never correctness. Skips coalescing when partitioning (the
-    partition columns dominate layout there).
+    file sizes, never correctness. ``coalesce`` never raises the partition
+    count, so a plan with fewer partitions than that writes one file per
+    partition. Skips coalescing when partitioning (the partition columns
+    dominate layout there).
     """
-    writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        writer = df.write.mode(mode).partitionBy(*partition_by)
     else:
         est_bytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         n_files = max(1, min(10_000, math.ceil(float(est_bytes) / target_file_bytes)))
-        if n_files < df.rdd.getNumPartitions():
-            df = df.coalesce(n_files)
-            writer = df.write.mode(mode)
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
+        writer = df.coalesce(n_files).write.mode(mode)
     writer.parquet(path)
 
 

@@ -89,8 +89,8 @@ def heavy_hitters_stateful(
     tracked), because MG folds compose: applying the update rule
     row-by-row across micro-batches IS the sequential algorithm.
 
-    Rows are applied in event-time order WITHIN each micro-batch (same
-    disclosed discipline as the streaming funnel): all Arrow chunks for
+    Rows are applied in event-time order WITHIN each micro-batch (a
+    disclosed discipline): all Arrow chunks for
     the group are concatenated FIRST and sorted once (stable mergesort,
     item as tiebreak), so groups larger than one Arrow batch still fold
     in batch-wide event-time order. The equivalence test replays one

@@ -174,7 +174,7 @@ def test_metrics_row_matches_spark_definitions(spark, sf001):
 
 def test_clustering_release_job_budget(spark, sf001, tmp_path):
     """A clustering release — read, pipeline, write, metrics collect —
-    runs at most 6 Spark jobs: the tuple aggregation, the write and its
+    runs at most 5 Spark jobs: the tuple aggregation, the write and its
     broadcast, and nothing per Lloyd iteration."""
     with _job_group(spark, "clustering-release") as jobs:
         out = pipelines.clustering_pipeline(
@@ -183,4 +183,4 @@ def test_clustering_release_job_budget(spark, sf001, tmp_path):
         write_release(out["anonymized"], str(tmp_path / "rel"))
         out["metrics"].collect()
         out["generalization"].collect()
-    assert len(jobs) <= 6, len(jobs)
+    assert len(jobs) <= 5, len(jobs)

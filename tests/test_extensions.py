@@ -1389,6 +1389,16 @@ def test_incremental_admit_empty_batch(spark):
     assert incremental_admit(batch, corpus).count() == 0
 
 
+def test_incremental_admit_empty_corpus(spark):
+    from dbms_data_anonymity_differential_privacy_spark.operators.dedup import incremental_admit
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    short = spark.createDataFrame([(1, "one")], "doc_id long, text string")
+    # empty existing corpus: the whole batch is fresh and admitted
+    out = incremental_admit(short, empty).collect()
+    assert len(out) == 1 and out[0]["admitted"] is True
+
+
 def test_repeated_span_stats_and_removal(spark):
     """x40: cross-doc duplicated token windows are found with exact
     interval-union coverage, and the removal half cuts exactly the
@@ -1728,3 +1738,40 @@ def test_oov_rate_crafted(spark):
     assert out[2].n_tokens == 4 and out[2].n_oov == 2
     assert out[2].oov_rate_r == 0.5
     assert out[3].n_tokens == 0 and out[3].oov_rate_r == 0.0
+
+
+def test_contamination_check_counts(spark):
+    from dbms_data_anonymity_differential_privacy_spark.operators.dedup import contamination_check
+
+    corpus = spark.createDataFrame(
+        [
+            (1, "a b c d e"),        # trigrams: abc bcd cde
+            (2, "x y z w"),          # trigrams: xyz yzw — disjoint from bench
+            (3, "a"),                # too short: zero trigrams
+        ],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [(100, "a b c d q")],  # trigrams: abc bcd cdq
+        "doc_id long, text string",
+    )
+    rows = {r.doc_id: r for r in contamination_check(corpus, bench, n=3).collect()}
+    assert rows[1].n_ngrams == 3 and rows[1].n_hits == 2
+    assert abs(rows[1].contaminated_frac - 2 / 3) < 1e-9
+    assert rows[2].n_hits == 0 and rows[2].contaminated_frac == 0.0
+    assert rows[3].n_ngrams == 0 and rows[3].contaminated_frac == 0.0
+
+
+def test_vocab_stats_order_and_df(spark):
+    from dbms_data_anonymity_differential_privacy_spark.operators.text import vocab_stats
+
+    docs = spark.createDataFrame(
+        [(1, "apple banana apple"), (2, "banana cherry"), (3, "  ")],
+        "doc_id long, text string",
+    )
+    rows = vocab_stats(docs, top_k=10).collect()
+    assert [(r.token, r.term_freq, r.doc_freq) for r in rows] == [
+        ("apple", 2, 1),
+        ("banana", 2, 2),
+        ("cherry", 1, 1),
+    ]

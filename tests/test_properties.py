@@ -164,68 +164,6 @@ def test_ngram_jaccard_prefix_filter_exact(spark, docs, threshold):
 
 # --- round-3 text ops: properties over arbitrary text -----------------------
 
-texts = st.text(
-    alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FFF),
-    min_size=0,
-    max_size=200,
-)
-
-
-@given(batch=st.lists(texts, min_size=1, max_size=6))
-@settings(**SETTINGS)
-def test_clean_text_idempotent_and_canonical(spark, batch):
-    """clean_text is a projection onto its own fixed point: applying it
-    twice equals applying it once, and output never contains markup
-    brackets' innards, C0 controls, or runs of whitespace."""
-    import re
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.clean import clean_text
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(batch)], "doc_id long, text string"
-    )
-    once = df.select("doc_id", clean_text(F.col("text")).alias("c1"))
-    twice = once.select("doc_id", F.col("c1"), clean_text(F.col("c1")).alias("c2"))
-    for r in twice.collect():
-        assert r["c2"] == r["c1"]
-        assert not re.search(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]", r["c1"])
-        # runs of ENGINE whitespace must be collapsed. The class is Java
-        # regex \s = [ \t\n\x0B\f\r] (what collapse_ws actually matches),
-        # NOT Python re \s: Python's additionally covers U+0085/U+2028/
-        # U+2029, which are neither C0 controls nor Zs space separators,
-        # so the operator deliberately passes them through (hypothesis
-        # falsified the old Python-\s assertion with '0 \x85' — a test
-        # bug, not an operator bug; the operator's output is oracle-pinned)
-        assert not re.search(r"[ \t\n\x0b\f\r]{2}", r["c1"])
-        assert not (r["c1"].startswith(" ") or r["c1"].endswith(" "))
-
-
-@given(
-    words=st.lists(
-        st.text(alphabet="abcdef", min_size=1, max_size=6), min_size=1, max_size=20
-    ),
-    n_merges=st.integers(0, 30),
-)
-@settings(**SETTINGS)
-def test_bpe_encoding_partitions_the_word(spark, words, n_merges):
-    """For ANY corpus and merge budget: encoding a word concatenates back
-    to word+</w>, and total BPE tokens never exceed total characters+1
-    per word (merges only shrink)."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.bpe import (
-        EOW,
-        encode_word,
-        learn_merges,
-    )
-
-    hist = [(w, 1) for w in sorted(set(words))]
-    merges = learn_merges(hist, n_merges=n_merges, min_pair_count=1)
-    ranks = {tuple(m): i for i, m in enumerate(merges)}
-    for w in words:
-        toks = encode_word(w, ranks)
-        assert "".join(toks) == w + EOW
-        assert 1 <= len(toks) <= len(w) + 1
-
-
 @given(
     names=st.lists(
         st.text(alphabet="abc", min_size=0, max_size=6), min_size=1, max_size=12
@@ -586,58 +524,6 @@ def test_ewma_matches_python_fold_any_series(spark, counts, alpha):
         num = sum(x * wts[len(xs) - 1 - j] for j, x in enumerate(xs))
         den = sum(wts[: len(xs)])
         assert got[i] == pytest.approx(round(num / den, 6), abs=2e-6)
-
-
-@given(
-    a_iv=st.lists(
-        st.tuples(st.integers(0, 300), st.integers(0, 200)), min_size=1, max_size=15
-    ),
-    b_iv=st.lists(
-        st.tuples(st.integers(0, 300), st.integers(0, 200)), min_size=1, max_size=15
-    ),
-    bucket_min=st.sampled_from([7, 60, 187]),
-)
-@settings(**SETTINGS)
-def test_interval_overlap_join_matches_bruteforce_any_intervals(
-    spark, a_iv, b_iv, bucket_min
-):
-    """X98 over arbitrary (possibly empty/touching/multi-bucket) interval
-    sets and bucket widths: the fragment-join pair set equals the brute
-    force, each pair exactly once."""
-    import datetime as dt
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.temporal import (
-        interval_overlap_join,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def mk(iv):
-        return [
-            (i, t0 + dt.timedelta(minutes=s), t0 + dt.timedelta(minutes=s + d))
-            for i, (s, d) in enumerate(iv)
-        ]
-
-    ar, br = mk(a_iv), mk(b_iv)
-    a = spark.createDataFrame(ar, "id long, s timestamp, e timestamp")
-    b = spark.createDataFrame(br, "id long, bs timestamp, be timestamp")
-    got = [
-        (r["id"], r["r_id"])
-        for r in interval_overlap_join(
-            a, b, "s", "e", "bs", "be", bucket_us=bucket_min * 60_000_000
-        ).collect()
-    ]
-    # empty intervals ([t, t)) contain no points: the operator documents
-    # they emit nothing, so the brute force must skip them too
-    expected = {
-        (i, j)
-        for i, s1, e1 in ar
-        if e1 > s1
-        for j, s2, e2 in br
-        if e2 > s2 and s1 < e2 and s2 < e1
-    }
-    assert set(got) == expected
-    assert len(got) == len(expected)  # emit-once: no duplicate pairs
 
 
 # ---------------------------------------------------------------------------

@@ -83,27 +83,6 @@ def test_anatomize_groups_are_diverse_when_eligible(spark):
         anatomize(df, qi=["qi1"], sensitive="sens", id_col="id", ell=1)
 
 
-def test_zipf_fit_recovers_exact_power_law(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import zipf_fit
-
-    # construct counts 16, 8, 4, 2, 1 for words a..e: ln c = ln 16 - ln 2 * ...
-    # not exactly linear in ln rank, so cross-check against numpy OLS
-    words = {"aa": 16, "bb": 8, "cc": 4, "dd": 2, "ee": 1}
-    text = " ".join(w for w, c in words.items() for _ in range(c))
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    row = zipf_fit(df, top_k=5).collect()[0]
-    import numpy as np
-
-    cnts = sorted(words.values(), reverse=True)
-    x = np.log(np.arange(1, 6, dtype=float))
-    y = np.log(np.array(cnts, dtype=float))
-    slope, intercept = np.polyfit(x, y, 1)
-    assert row.n_words == 5
-    assert abs(row.slope_r - slope) < 1e-6
-    assert abs(row.intercept_r - intercept) < 1e-6
-    assert 0.9 < row.r2_r <= 1.0
-
-
 def test_bloom_membership_no_false_negatives(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.sketch import bloom_membership
 
@@ -243,25 +222,6 @@ def test_decile_lift_orders_high_scores_first(spark):
     assert sum(r.n_users for r in out.values()) == 100
 
 
-def test_rfm_codes_best_customers_555(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import rfm_segments
-    import datetime
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    for u in range(25):
-        # user u has u+1 events, each of value u, last at day u
-        for i in range(u + 1):
-            rows.append((u, t0 + datetime.timedelta(days=u, hours=i), float(u)))
-    df = spark.createDataFrame(rows, ["user_id", "ts", "value"])
-    segs = rfm_segments(df).collect()
-    assert sum(r.n_users for r in segs) == 25
-    # user 24: most recent, most frequent, highest monetary -> 555
-    assert any(r.segment == 555 and r.n_users >= 1 for r in segs)
-    # user 0: oldest, least frequent, lowest monetary -> 111
-    assert any(r.segment == 111 for r in segs)
-
-
 def test_triangle_count_known_graphs(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.graph import triangle_count
 
@@ -279,26 +239,6 @@ def test_triangle_count_known_graphs(spark):
     star = [(0, 1), (0, 2), (0, 3)]
     out3 = triangle_count(spark.createDataFrame(star, ["src", "dst"])).collect()[0]
     assert (out3.n_triangles, out3.n_triples) == (0, 3)
-
-
-def test_popularity_hitk_hand_case(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import popularity_hitk
-    import datetime
-
-    d_tr = datetime.datetime(1998, 1, 1)
-    d_te = datetime.datetime(2000, 1, 1)
-    orders = spark.createDataFrame(
-        [(1, 10, d_tr), (2, 11, d_tr), (3, 10, d_te), (4, 12, d_te)],
-        ["o_orderkey", "o_custkey", "o_orderdate"],
-    )
-    # train: item 7 bought twice, item 8 once -> top-1 = {7}
-    li = spark.createDataFrame(
-        [(1, 7), (1, 8), (2, 7), (3, 7), (4, 9)], ["l_orderkey", "l_partkey"]
-    )
-    r = popularity_hitk(orders, li, "1999-01-01 00:00:00", k=1).collect()[0]
-    # test users: 10 (bought 7 -> hit), 12 (bought 9 -> miss)
-    assert r.k == 1 and r.n_test_users == 2 and r.n_hit == 1
-    assert r.hit_rate_r == 0.5
 
 
 def test_retrieval_eval_hand_case(spark):
@@ -544,42 +484,6 @@ def test_jsd_other_bucket_completes_distribution(spark):
     assert r.n_terms == 2  # 'top' + OTHER
     assert r.a_total == 5 and r.b_total == 5
     assert 0.0 < r.jsd_norm_r < 1.0
-
-
-def test_cohort_ltv_hand_case(spark):
-    import datetime
-
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import cohort_ltv
-
-    # Monday anchors: 2024-01-01 and 2024-01-08 are week starts
-    w0 = datetime.datetime(2024, 1, 1, 10)
-    w1 = datetime.datetime(2024, 1, 8, 10)
-    w2 = datetime.datetime(2024, 1, 15, 10)
-    rows = [
-        # user 1: cohort w0, buys 10.0 in w0 and 20.0 in w2
-        (1, 1, w0, "purchase", 10.0),
-        (2, 1, w2, "purchase", 20.0),
-        # user 2: cohort w0 (click only, no purchase)
-        (3, 2, w0, "click", 0.0),
-        # user 3: cohort w1, buys 6.0 in w1
-        (4, 3, w1, "purchase", 6.0),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, event_type string, value double"
-    )
-    out = {(r.cohort, r.age_weeks): r for r in cohort_ltv(ev).collect()}
-    # cohort w0: 2 users, ages 0..2 dense
-    c0 = "2024-01-01"
-    assert out[(c0, 0)].cohort_users == 2
-    assert out[(c0, 0)].rev_r == 10.0 and out[(c0, 0)].ltv_r == 5.0
-    assert out[(c0, 1)].rev_r == 0.0 and out[(c0, 1)].cum_rev_r == 10.0  # quiet week
-    assert out[(c0, 2)].cum_rev_r == 30.0 and out[(c0, 2)].ltv_r == 15.0
-    # cohort w1: 1 user, ages 0..1 (horizon = w2)
-    c1 = "2024-01-08"
-    assert out[(c1, 0)].ltv_r == 6.0
-    assert out[(c1, 1)].rev_r == 0.0 and out[(c1, 1)].cum_rev_r == 6.0
-    assert (c1, 2) not in out  # ages stop at the corpus horizon
-    assert len(out) == 3 + 2
 
 
 def test_roc_auc_separation_and_ties(spark):

@@ -689,34 +689,6 @@ def _rel_close(a, b, tol=1e-9):
     return abs(a - b) <= tol * max(1.0, abs(a), abs(b))
 
 
-def test_bigram_lm_exact_and_jvm_modes_agree(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_lm_scores
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    ex = {r.doc_id: (r.n_bigrams, r.avg_nll) for r in bigram_lm_scores(docs).collect()}
-    jv = {
-        r.doc_id: (r.n_bigrams, r.avg_nll)
-        for r in bigram_lm_scores(docs, exact=False).collect()
-    }
-    assert ex.keys() == jv.keys() and len(ex) > 0
-    for d in ex:
-        assert ex[d][0] == jv[d][0]
-        assert _rel_close(ex[d][1], jv[d][1]), (d, ex[d], jv[d])
-
-
-def test_zipf_fit_exact_and_jvm_modes_agree(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import zipf_fit
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    ex = zipf_fit(docs, top_k=200).collect()[0]
-    jv = zipf_fit(docs, top_k=200, exact=False).collect()[0]
-    assert ex.n_words == jv.n_words
-    for f in ("slope_r", "intercept_r", "r2_r"):
-        assert _rel_close(ex[f], jv[f]), (f, ex[f], jv[f])
-
-
 def test_tfidf_exact_and_jvm_modes_agree(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.text import tfidf_topk
     from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
@@ -744,19 +716,6 @@ def test_jsd_exact_and_jvm_modes_agree(spark):
     assert (ex.n_terms, ex.a_total, ex.b_total) == (jv.n_terms, jv.a_total, jv.b_total)
     for f in ("jsd_r", "jsd_norm_r"):
         assert _rel_close(ex[f], jv[f]), (f, ex[f], jv[f])
-
-
-def test_jvm_log_modes_have_no_driver_log_table(spark):
-    """The production flavor's physical plan must contain the JVM LOG and
-    no broadcast scan of a local log-table relation."""
-    from dbms_data_anonymity_differential_privacy_spark.operators.lm import bigram_lm_scores
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    p = bigram_lm_scores(docs, exact=False)._jdf.queryExecution().explainString(jmode)
-    assert "ln(" in p  # JVM log expression inside the projection
-    assert "LocalTableScan" not in p and "Scan ExistingRDD" not in p
 
 
 def test_dp_noise_moments_match_closed_form_across_scales(spark):

@@ -665,57 +665,6 @@ def test_windowed_distinct_users_stream_matches_batch(spark, sf0001, tmp_path):
     assert len(got) >= len(batch) - 2
 
 
-# --------------------------------------------------- markov attribution
-def test_markov_attribution_single_channel_gets_all_credit(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import markov_attribution
-
-    # every converting journey passes through 'ad' only
-    rows = []
-    eid = 0
-    for u in range(10):
-        rows.append((u, f"2024-01-01 00:0{u % 6}:00", eid, "ad")); eid += 1
-        if u < 7:
-            rows.append((u, f"2024-01-01 01:0{u % 6}:00", eid, "purchase")); eid += 1
-    df = spark.createDataFrame(
-        rows, "user_id LONG, ts STRING, event_id LONG, event_type STRING"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    pdf = markov_attribution(df, n_iter=30).toPandas().set_index("channel")
-    assert list(pdf.index) == ["ad"]
-    assert pdf.loc["ad", "p_conv_base_r"] == pytest.approx(0.7, abs=1e-6)
-    assert pdf.loc["ad", "p_conv_removed_r"] == 0.0
-    assert pdf.loc["ad", "removal_effect_r"] == pytest.approx(1.0, abs=1e-6)
-    assert pdf.loc["ad", "share_r"] == pytest.approx(1.0, abs=1e-6)
-
-
-def test_markov_attribution_useless_channel_gets_no_credit(spark):
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import markov_attribution
-
-    # 'ad' leads to purchase; 'spam' only appears in non-converting tails
-    rows = []
-    eid = 0
-    for u in range(6):
-        rows.append((u, "2024-01-01 00:00:00", eid, "ad")); eid += 1
-        rows.append((u, "2024-01-01 00:10:00", eid, "purchase")); eid += 1
-    for u in range(6, 10):
-        rows.append((u, "2024-01-01 00:00:00", eid, "spam")); eid += 1
-    df = spark.createDataFrame(
-        rows, "user_id LONG, ts STRING, event_id LONG, event_type STRING"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    pdf = markov_attribution(df, n_iter=30).toPandas().set_index("channel")
-    assert pdf.loc["spam", "removal_effect_r"] == pytest.approx(0.0, abs=1e-6)
-    assert pdf.loc["ad", "removal_effect_r"] == pytest.approx(1.0, abs=1e-6)
-
-
-def test_markov_attribution_shares_sum_to_one(spark, sf0001):
-    from dbms_data_anonymity_differential_privacy_spark.operators.funnel import markov_attribution
-    from dbms_data_anonymity_differential_privacy_spark.sources.readers import load_table
-
-    ev = load_table(spark, sf0001, "events")
-    pdf = markov_attribution(ev, n_iter=30).toPandas()
-    assert abs(pdf["share_r"].sum() - 1.0) < 1e-4
-    assert (pdf["p_conv_base_r"] > 0).all()
-
-
 # -------------------------------------------------------------------- rmst
 def test_rmst_hand_computed(spark):
     from dbms_data_anonymity_differential_privacy_spark.operators.stats import rmst

@@ -111,32 +111,6 @@ def test_hits_int_rejects_zero_iters(spark):
 
 
 # ---------------------------------------------------------------------------
-# r8 advisory (low): the x212 oracle hardcodes the channel vocabulary;
-# pin the events fixture to it so a new event_type desyncs LOUDLY.
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", SF001])
-def test_x212_channel_vocab_pinned_to_fixture(sf_dir):
-    import duckdb
-
-    from dbms_data_anonymity_differential_privacy_spark.queries_registry import (
-        PUBLIC_EVENT_CHANNELS,
-    )
-
-    vocab = {
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT DISTINCT event_type FROM '{sf_dir}/events.parquet'"
-        ).fetchall()
-    }
-    assert vocab - {"purchase"} == set(PUBLIC_EVENT_CHANNELS), (
-        "events fixture vocabulary moved: update PUBLIC_EVENT_CHANNELS "
-        "(x212's oracle derives its removal variants from it)"
-    )
-
-
-# ---------------------------------------------------------------------------
 # c03_encode_scale: the oracle-checkable prefix must match the REAL MLlib
 # StringIndexer(alphabetAsc) + StandardScaler(withMean, withStd) stages.
 # ---------------------------------------------------------------------------

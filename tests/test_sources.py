@@ -55,6 +55,39 @@ def test_write_release_roundtrip(spark, sf0001, tmp_path):
     assert len(glob.glob(f"{out}/part-*.parquet")) == 1
 
 
+def test_write_release_runs_one_action(spark, sf0001, tmp_path):
+    """write_release runs the same Spark jobs as a plain coalesced parquet
+    write of the same plan: its file-count estimate adds no action. The
+    plan shuffles (a class count semi-joined back) and persists nothing,
+    so any extra action on it would re-run its stages."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from dbms_data_anonymity_differential_privacy_spark.sources.writers import write_release
+    from dbms_data_anonymity_differential_privacy_spark import load_table
+
+    c = load_table(spark, sf0001, "customer")
+    big = c.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n")).filter("n >= 5")
+    rel = c.join(big.select("c_nationkey"), on="c_nationkey", how="left_semi")
+    sc = spark.sparkContext
+
+    def jobs(name, write) -> int:
+        sc.setJobGroup(name, name)
+        try:
+            write()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    release, plain = str(tmp_path / "release"), str(tmp_path / "plain")
+    n_release = jobs("write-release-one-action", lambda: write_release(rel, release))
+    n_plain = jobs("plain-coalesced-write", lambda: rel.coalesce(1).write.parquet(plain))
+    assert n_release == n_plain, (n_release, n_plain)
+    assert len(glob.glob(f"{release}/part-*.parquet")) == 1
+    assert spark.read.parquet(release).count() == spark.read.parquet(plain).count()
+
+
 def test_write_release_partitioned(spark, sf0001, tmp_path):
     from dbms_data_anonymity_differential_privacy_spark.sources.writers import write_release
     from dbms_data_anonymity_differential_privacy_spark import load_table

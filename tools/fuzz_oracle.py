@@ -75,7 +75,7 @@ TARGET_OPS = [
     "x147_roc_auc", "x219_qini", "x136_decile_lift", "x148_bh_fdr",
     "x163_bootstrap_ci", "x207_ipw_ate",
     # distributional fits / inequality
-    "x111_gini", "x165_theil", "x128_zipf", "x184_good_turing",
+    "x111_gini", "x165_theil", "x184_good_turing",
     "x185_heaps_fit", "x145_jsd_sources", "x67_psi_drift",
     "x69_corr_matrix", "x63_group_ols", "x167_mahalanobis",
     # DP pre-noise exact twins
