@@ -9,8 +9,10 @@ and streaming anonymization.
 
 Everything is expressed against the DataFrame API so Catalyst handles
 planning/pushdown, and designed for a 1000-executor / 100 TB deployment:
-no driver-side loops over data, no collect() except final scalars, window
-counts instead of self-joins, broadcast for tiny relations.
+no driver-side loops over rows; the driver collects only domain-bounded
+tables (class and QI-tuple counts, bin edges, final scalars), each under
+``MAX_QI_TUPLES`` rows; window counts instead of self-joins, broadcast
+for tiny relations.
 """
 
 from dbms_data_anonymity_differential_privacy_spark.session import get_spark

@@ -33,17 +33,20 @@ def bin_equal_width(df: DataFrame, col: str, n_bins: int, out_col: str | None = 
     mn, mx = f"__{col}_mn", f"__{col}_mx"
     minmax = df.agg(F.min(col).alias(mn), F.max(col).alias(mx))
     binned = df.crossJoin(F.broadcast(minmax)).withColumn(
-        out_col,
-        F.when(F.col(mn) == F.col(mx), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col(col) - F.col(mn)) * n_bins / (F.col(mx) - F.col(mn))),
-                F.lit(n_bins - 1),
-            )
-        )
-        .cast("int"),
+        out_col, _equal_width_bin(F.col(col), F.col(mn), F.col(mx), n_bins)
     )
     return binned.drop(mn, mx)
+
+
+def _equal_width_bin(x: Column, mn: Column, mx: Column, n_bins: int) -> Column:
+    """The equal-width bin of ``x`` over the edges ``[mn, mx]``: the one
+    expression :func:`bin_equal_width` and the t-closeness pipeline (with
+    collected edges as literals of the column's type) both evaluate."""
+    return (
+        F.when(mn == mx, F.lit(0))
+        .otherwise(F.least(F.floor((x - mn) * n_bins / (mx - mn)), F.lit(n_bins - 1)))
+        .cast("int")
+    )
 
 
 def equal_width_bin_sql(table: str, col: str, n_bins: int, out_col: str | None = None) -> str:

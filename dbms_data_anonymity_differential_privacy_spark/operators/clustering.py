@@ -53,21 +53,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Distinct QI tuples the driver-side fit accepts: the collected table, the
-# broadcast lookup and the numpy fit all scale with it.
-MAX_QI_TUPLES = 1_000_000
+# MAX_QI_TUPLES is read at call time from this module, so a caller can
+# lower the fit's limit here alone; QITupleLimitError is the fit's refusal.
+from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import (  # noqa: F401
+    MAX_QI_TUPLES,
+    TUPLE_COUNT_COL,
+    QITupleLimitError,
+    collect_tuple_counts,
+)
+
 MAX_ITER = 20  # MLlib KMeans defaults
 TOL = 1e-4
-
-_WEIGHT = "__weight"
 
 
 class NullQIError(ValueError):
     """A numeric QI holds NULL or NaN, which has no position to cluster on."""
-
-
-class QITupleLimitError(ValueError):
-    """More distinct QI tuples than the driver-side fit accepts."""
 
 
 @dataclass(frozen=True)
@@ -143,21 +143,16 @@ class ClusterFit:
 
 def _tuple_table(df: DataFrame, qi: Sequence[str]) -> tuple[pd.DataFrame, np.ndarray]:
     """The distinct QI tuples of ``df`` (sorted, NULLs last) and their row
-    counts. The limit keeps an oversized table off the driver inside the
-    same job; it never cuts a table the fit accepts."""
-    table = (
-        df.groupBy(*qi)
-        .agg(F.count(F.lit(1)).alias(_WEIGHT))
-        .limit(MAX_QI_TUPLES + 1)
-        .toPandas()
+    counts."""
+    table = collect_tuple_counts(
+        df,
+        qi,
+        "bin the QIs first (e.g. functions.binning.bin_equal_width) to cluster on the driver",
+        limit=MAX_QI_TUPLES,
+        as_pandas=True,
     )
-    if len(table) > MAX_QI_TUPLES:
-        raise QITupleLimitError(
-            f"more than {MAX_QI_TUPLES} distinct QI tuples over {list(qi)}: bin the "
-            "QIs first (e.g. functions.binning.bin_equal_width) to cluster on the driver"
-        )
     table = table.sort_values(list(qi), na_position="last", ignore_index=True)
-    return table[list(qi)], table[_WEIGHT].to_numpy(dtype=np.int64)
+    return table[list(qi)], table[TUPLE_COUNT_COL].to_numpy(dtype=np.int64)
 
 
 def _encode(keys: pd.DataFrame, string_cols: set[str]) -> np.ndarray:

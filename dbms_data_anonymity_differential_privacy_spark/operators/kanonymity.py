@@ -17,16 +17,51 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 CLASS_SIZE_COL = "class_size"
+
+# Distinct tuples a driver-side step accepts: the collected table and the
+# work done on it scale with this, not with the row count.
+MAX_QI_TUPLES = 1_000_000
+TUPLE_COUNT_COL = "__count"
+
+
+class QITupleLimitError(ValueError):
+    """More distinct QI tuples than a driver-side step accepts."""
 
 
 def class_sizes(df: DataFrame, qi: Sequence[str]) -> DataFrame:
     """P5 — the QI group-frequency relation: one row per equivalence class
     with its member count (reference ``naive-suppresion.py:34``)."""
     return df.groupBy(*qi).agg(F.count(F.lit(1)).alias(CLASS_SIZE_COL))
+
+
+def collect_tuple_counts(
+    df: DataFrame,
+    cols: Sequence[str],
+    hint: str,
+    limit: int | None = None,
+    as_pandas: bool = False,
+) -> list[Row] | pd.DataFrame:
+    """The distinct ``cols`` tuples of ``df`` with their row counts
+    (``TUPLE_COUNT_COL``), collected in one aggregation: Rows, or a pandas
+    frame with ``as_pandas``. More than ``limit`` (default
+    ``MAX_QI_TUPLES``) tuples raise :class:`QITupleLimitError`, whose
+    message ends with ``hint``; the limit keeps an oversized table off the
+    driver inside the same job and never cuts a table that is accepted."""
+    limit = MAX_QI_TUPLES if limit is None else limit
+    table = (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias(TUPLE_COUNT_COL))
+        .limit(limit + 1)
+    )
+    got = table.toPandas() if as_pandas else table.collect()
+    if len(got) > limit:
+        raise QITupleLimitError(f"more than {limit} distinct QI tuples over {list(cols)}: {hint}")
+    return got
 
 
 def with_class_size(df: DataFrame, qi: Sequence[str], out_col: str = CLASS_SIZE_COL) -> DataFrame:

@@ -9,9 +9,24 @@ positions, positions, global_probs, group_probs)`` with positions
 
     EMD = sum over positions p < m-1 of |CDF_class(p) - CDF_global(p)|
 
-which we compute with a window cumulative sum — pure built-in SQL, fully
-whole-stage-codegen'd and DuckDB-oracle-checkable. No per-group Python
-loop (the reference loops classes in the driver; we shuffle once).
+Shape: every t-closeness quantity — class sizes, the k-filter, the global
+distribution, each class's EMD — is a function of the (class, sensitive
+value, count) table, which is bounded by |classes| x |support|, not by
+the row count. :func:`class_emd`, :func:`t_violations`,
+:func:`t_closeness_filter` and ``pipelines.t_closeness_pipeline`` run ONE
+aggregation of the fact table and collect that table
+(``kanonymity.collect_tuple_counts``: above ``MAX_QI_TUPLES`` rows it
+refuses with ``QITupleLimitError``). The EMDs fold on the driver
+(:class:`ClassTable`), and results come back as local relations, so
+collecting them runs no job; nothing is persisted. Filtered rows are the
+fact scan semi-joined to the local relation of kept class keys.
+
+Exactness: the fold is, term by term, the IEEE-754 double arithmetic of
+the Spark expression chain it replaced (see :meth:`ClassTable.emd`), and
+rounding to 9 dp stays Spark's own ``ROUND``, evaluated as a projection
+over a local relation, which the optimizer folds without a job. A
+verdict on a rounded EMD is therefore the one SQL gives, also within
+1e-12 of ``t``.
 
 Mode quirk (SURVEY §3.4): the reference's *main pipeline* invokes its
 check once per class, so the "global" distribution is the class itself and
@@ -19,23 +34,37 @@ the EMD test never rejects anything — only the k-filter acts. We default
 to the intended Li/Li/Venkatasubramanian (ICDE 2007) semantics
 (``mode='strict'``) and keep ``mode='reference'`` (k-filter only) to
 replicate the published numbers.
-
-Scale: the support (distinct sensitive values) is tiny → broadcast. The
-class-distribution relation has |classes| x |support| rows — far smaller
-than the fact table. The only big shuffle is the initial per-class count.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import k_anonymize_suppress
-from dbms_data_anonymity_differential_privacy_spark.operators.util import track_cached
+from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import (
+    TUPLE_COUNT_COL,
+    collect_tuple_counts,
+)
+from dbms_data_anonymity_differential_privacy_spark.operators.util import local_relation
 
 ROUND_DP = 9
+
+_NAN = float("nan")
+
+
+def _canon(v):
+    """One NaN object for every NaN, so Python keys group NaNs as Spark
+    does (a NaN equals itself only by identity)."""
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _spark_order(v):
+    """Sort key of a non-NULL value in Spark's ascending order: NaN after
+    every other double; strings by code point, which is UTF-8 byte order."""
+    return (v != v, v)
 
 
 def sensitive_support(df: DataFrame, sensitive: str) -> DataFrame:
@@ -76,115 +105,128 @@ def sensitive_distribution(
     )
 
 
+class ClassTable:
+    """The collected ``(class, sensitive value, count)`` table of ``df``
+    and the driver-side EMD fold over it.
+
+    ``size`` maps each class key (the tuple of its QI values; NULL-QI
+    classes included, as ``groupBy`` keeps them) to its row count, NULL
+    sensitive rows included; ``counts`` maps it to its non-NULL sensitive
+    values' row counts. NaN keys and values are one object (:func:`_canon`).
+    """
+
+    def __init__(self, df: DataFrame, qi: Sequence[str], sensitive: str, hint: str) -> None:
+        self.df, self.qi = df, tuple(qi)
+        self.size: dict[tuple, int] = {}
+        self.counts: dict[tuple, dict] = {}
+        n = len(self.qi)
+        for r in collect_tuple_counts(df, [*self.qi, sensitive], hint):
+            key = tuple(_canon(v) for v in r[:n])
+            value, cnt = _canon(r[n]), r[TUPLE_COUNT_COL]
+            self.size[key] = self.size.get(key, 0) + cnt
+            per = self.counts.setdefault(key, {})
+            if value is not None:
+                per[value] = cnt
+
+    def k_classes(self, k: int) -> list[tuple]:
+        """Classes of at least ``k`` rows whose keys a semi join can match:
+        a NULL QI value equals nothing."""
+        return [c for c, n in self.size.items() if n >= k and None not in c]
+
+    def emd(self, classes: Sequence[tuple]) -> list[float]:
+        """Unrounded EMD of each of ``classes`` against the distribution of
+        ``classes`` together; ``[]`` when they hold no non-NULL sensitive
+        value.
+
+        The double arithmetic of the former Spark chain, term by term:
+        ``pg_j = g_j / total`` and ``p_j = cnt_j / class_total`` are
+        int / int divisions (Spark casts both longs to double, exact below
+        2^53, then divides), ``cum_j = cum_{j-1} + (p_j - pg_j)`` and
+        ``emd = |cum_1| + ... + |cum_{m-1}|`` fold in ascending support
+        order. A class whose sensitive values are all NULL, and every class
+        of a one-value support, gets 0.0.
+        """
+        glob: dict = {}
+        for c in classes:
+            for v, cnt in self.counts[c].items():
+                glob[v] = glob.get(v, 0) + cnt
+        support = sorted(glob, key=_spark_order)
+        total = sum(glob.values())
+        pg = [glob[v] / total for v in support]
+        out = []
+        for c in classes if support else ():
+            per = self.counts[c]
+            tot = sum(per.values())
+            cum = emd = None
+            for j, v in enumerate(support[:-1] if per else ()):
+                d = per.get(v, 0) / tot - pg[j]
+                cum = d if cum is None else cum + d
+                emd = abs(cum) if emd is None else emd + abs(cum)
+            out.append(0.0 if emd is None else emd)
+        return out
+
+    def keys(self, classes: Sequence[tuple]) -> DataFrame:
+        """``classes`` as a local relation of QI keys, typed as in ``df``."""
+        schema = T.StructType([self.df.schema[c] for c in self.qi])
+        return local_relation(self.df.sparkSession, schema, classes)
+
+
+def spark_round(spark, values: Sequence[float]) -> list[float]:
+    """``values`` rounded to ``ROUND_DP`` by Spark's own ``ROUND`` (which
+    rounds the JVM's decimal string of a double, not its binary value),
+    folded over a local relation: no job."""
+    schema = T.StructType([T.StructField("v", T.DoubleType())])
+    rel = local_relation(spark, schema, [(v,) for v in values])
+    return [r[0] for r in rel.select(F.round("v", ROUND_DP)).collect()]
+
+
+# the raw fields of the violation report, as a local relation holds them
+VIOLATION_FIELDS = [
+    T.StructField("violations", T.LongType()),
+    T.StructField("total_groups", T.LongType(), False),
+]
+
+
+def violation_fields(rounded: Sequence[float], t: float) -> tuple[int | None, int]:
+    """``(violations, total_groups)`` over rounded class EMDs: classes
+    with EMD > t, and classes; violations is NULL over no class, as
+    SQL's SUM is."""
+    return (sum(e > t for e in rounded) if rounded else None), len(rounded)
+
+
+def violation_cols() -> list[Column]:
+    """``violations, total_groups, violation_rate`` over a relation that
+    holds the first two (:func:`violation_fields`)."""
+    return [
+        F.col("violations"),
+        F.col("total_groups"),
+        F.round(F.col("violations") / F.col("total_groups"), ROUND_DP).alias("violation_rate"),
+    ]
+
+
+_HINT = "bin the QIs first (e.g. functions.binning.bin_equal_width)"
+
+
 def class_emd(df: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
     """1-D EMD of each QI class's sensitive distribution vs the table-wide
-    distribution: ``(*qi, emd)``.
+    distribution: ``(*qi, emd)``, rounded to 9 dp — a local relation.
 
-    Window-cumsum formulation (exactly equivalent to scipy's
-    ``wasserstein_distance`` on unit-spaced positions — verified in tests):
-    cum = running sum over positions of (p_class - p_global); EMD = sum of
-    |cum| over positions 1..m-1.
-
-    Physical shape: the fact table is touched EXACTLY ONCE — one shuffle
-    into the per-(class, sensitive-value) count relation. That relation is
-    |classes| x |support| rows (tiny), persisted, and every downstream
-    piece (support, global distribution, zero-fill grid, cumsum) derives
-    from it. At 100 TB the big table contributes one aggregation; all EMD
-    math happens on kilobytes.
+    Equivalent to scipy's ``wasserstein_distance`` on unit-spaced
+    positions (verified in tests). The fact table is aggregated once into
+    the (class, sensitive value, count) table; the EMDs fold on the
+    driver (:meth:`ClassTable.emd`).
     """
-    counts = track_cached(
-        df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
+    table = ClassTable(df, qi, sensitive, _HINT)
+    classes = list(table.size)
+    emd = table.emd(classes)
+    spark = df.sparkSession
+    schema = T.StructType(
+        [df.schema[c] for c in qi] + [T.StructField("emd", T.DoubleType(), False)]
     )
-    return _emd_from_counts(counts, qi, sensitive)
-
-
-def _emd_from_counts(counts: DataFrame, qi: Sequence[str], sensitive: str) -> DataFrame:
-    """EMD math over a pre-aggregated ``(*qi, sensitive, __cnt)`` relation.
-    Callers persist ``counts``: it feeds an eager collect of the global
-    distribution here and the per-class aggregation after it.
-
-    Shape (r11 rewrite): the sensitive support is SMALL BY DEFINITION in
-    t-closeness (it is the attribute whose distribution is being
-    protected), so the global distribution collects to the driver in one
-    tiny job and the per-class EMD folds as ONE literal expression chain
-    over a per-class count map — a single groupBy exchange over the
-    already-aggregated counts relation. The previous window-cumsum
-    formulation paid a zero-fill crossJoin grid, two global windows, two
-    joins, a per-class running-sum window and a final re-aggregation —
-    ~5 exchanges of kilobyte relations whose scheduling dominated the
-    t-closeness pipelines at every scale (measured 2.9 s per chain over
-    a 150-row counts relation at sf0.1).
-
-    EXACT-ARITHMETIC twin of the window form, term by term:
-    ``p_global_j = g_j / total`` (int64→double division, identical to
-    the window-sum division), ``p_j = coalesce(cnt_j, 0) / class_size``
-    with ``class_size`` summed over non-null-sensitive rows only (the
-    zero-fill grid never matched nulls), the running ``cum_j`` built as
-    the same left-fold ``cum_{j-1} + (p_j - pg_j)`` the pos-ordered
-    window produced, and ``emd = |cum_1| + ... + |cum_{m-1}|`` folded in
-    ascending position order — the order the pos-sorted window rows
-    entered the old sum. A class whose every row has NULL sensitive kept
-    an emd of 0.0 under the old form (the null-skipping sum saw only the
-    final ``otherwise(0.0)`` row) — reproduced explicitly below.
-    """
-    nn = counts.where(F.col(sensitive).isNotNull())
-    gd = nn.groupBy(sensitive).agg(F.sum("__cnt").alias("__g")).orderBy(sensitive).collect()
-    if not gd:
-        # no support values → the old zero-fill grid was empty → empty
-        # (qi, emd) relation
-        return counts.where(F.lit(False)).select(
-            *qi, F.lit(0.0).cast("double").alias("emd")
-        )
-    total = 0
-    for r in gd:
-        total += r["__g"]  # exact int64 — order-free
-    support = [r[sensitive] for r in gd]  # Spark-side sort: engine collation
-    pg = [r["__g"] / total for r in gd]  # int/int → correctly-rounded double
-    n_vals = len(support)
-
-    entry = F.when(
-        F.col(sensitive).isNotNull(),
-        F.struct(F.col(sensitive).alias("k"), F.col("__cnt").alias("v")),
+    rows = [(*c, e) for c, e in zip(classes, emd)]
+    return local_relation(spark, schema, rows).select(
+        *qi, F.round("emd", ROUND_DP).alias("emd")
     )
-    per_class = counts.groupBy(*qi).agg(
-        F.map_from_entries(F.collect_list(entry)).alias("__m"),
-        F.sum(F.when(F.col(sensitive).isNotNull(), F.col("__cnt"))).alias("__tot"),
-    )
-    cum = None
-    emd_chain = None
-    for j in range(n_vals):
-        p_j = F.coalesce(F.col("__m")[F.lit(support[j])], F.lit(0)) / F.col("__tot")
-        d_j = p_j - F.lit(pg[j])
-        cum = d_j if cum is None else cum + d_j
-        if j < n_vals - 1:
-            term = F.abs(cum)
-            emd_chain = term if emd_chain is None else emd_chain + term
-    # all-null-sensitive classes (NULL __tot) released 0.0 under the old
-    # null-skipping sum; n_vals == 1 released 0.0 for every class
-    emd = (
-        F.lit(0.0)
-        if emd_chain is None
-        else F.when(F.col("__tot").isNotNull(), emd_chain).otherwise(F.lit(0.0))
-    )
-    return per_class.select(*qi, F.round(emd, ROUND_DP).alias("emd"))
-
-
-def _verdict_keys(
-    counts: DataFrame, qi: Sequence[str], sensitive: str, k: int, t: float, mode: str
-) -> DataFrame:
-    """Keys of the classes that survive t-closeness suppression, derived
-    from the persisted ``(*qi, sensitive, __cnt)`` relation: class sizes →
-    k-filter → (strict mode) EMD to the post-k-anonymity distribution ≤ t.
-    Shared by :func:`t_closeness_filter` and ``pipelines.t_closeness_pipeline``."""
-    if mode not in ("strict", "reference"):
-        raise ValueError(f"unknown mode: {mode}")
-    sizes = counts.groupBy(*qi).agg(F.sum("__cnt").alias("__class_size"))
-    big = sizes.filter(F.col("__class_size") >= F.lit(k)).select(*qi)
-    if mode == "reference":
-        return big  # SURVEY §3.4: as-written = k-filter only
-    kcounts = track_cached(counts.join(big, on=list(qi), how="left_semi").persist())
-    emd = _emd_from_counts(kcounts, qi, sensitive)
-    return emd.filter(F.col("emd") <= F.lit(t)).select(*qi)
 
 
 def t_closeness_filter(
@@ -205,19 +247,35 @@ def t_closeness_filter(
     the EMD test vacuous — only the k-filter acts (SURVEY §3.4).
 
     Physical shape: the fact table is NEVER shuffled as whole rows. One
-    aggregation produces the (class, sensitive, count) relation; class
-    sizes, the k-filter, and the EMD verdict are all computed on that tiny
-    relation; surviving class keys join back onto the fact scan as a
-    plain semi join. The verdict relation is worst-case rows/k keys, so
-    the join carries no hint: Spark's static ``autoBroadcastJoinThreshold``
-    plus AQE's runtime join selection pick broadcast or shuffled (skew-
-    split) semi join; the algebra is the same either way.
+    aggregation produces the collected (class, sensitive, count) table;
+    class sizes, the k-filter and the EMD verdicts are computed from it on
+    the driver; the kept class keys, a local relation, join back onto the
+    fact scan as a plain semi join. That relation is worst-case rows/k
+    keys, so the join carries no hint: Spark's
+    ``autoBroadcastJoinThreshold`` plus AQE's runtime join selection pick
+    broadcast or shuffled semi join; the algebra is the same either way.
     """
-    counts = track_cached(
-        df.groupBy(*qi, sensitive).agg(F.count(F.lit(1)).alias("__cnt")).persist()
-    )
-    ok = _verdict_keys(counts, qi, sensitive, k, t, mode)
-    return df.join(ok, on=list(qi), how="left_semi")
+    check_mode(mode)
+    table = ClassTable(df, qi, sensitive, _HINT)
+    ok = verdict_classes(table, k, t, mode)
+    return df.join(table.keys(ok), on=list(qi), how="left_semi")
+
+
+def check_mode(mode: str) -> None:
+    if mode not in ("strict", "reference"):
+        raise ValueError(f"unknown mode: {mode}")
+
+
+def verdict_classes(table: ClassTable, k: int, t: float, mode: str) -> list[tuple]:
+    """Classes that survive t-closeness suppression: size >= k, then
+    (strict mode) rounded EMD to the post-k-anonymity distribution <= t.
+    Shared by :func:`t_closeness_filter` and
+    ``pipelines.t_closeness_pipeline``, which check ``mode`` first."""
+    big = table.k_classes(k)
+    if mode == "reference":
+        return big  # SURVEY §3.4: as-written = k-filter only
+    rounded = spark_round(table.df.sparkSession, table.emd(big))
+    return [c for c, e in zip(big, rounded) if e <= t]
 
 
 def l_diversity_filter(
@@ -246,19 +304,13 @@ def l_diversity_filter(
 def t_violations(df: DataFrame, qi: Sequence[str], sensitive: str, t: float = 0.2) -> DataFrame:
     """C9 — single-row report: #classes with EMD > t vs the table
     distribution, total classes, violation rate (reference
-    ``t-closeness.py:186-208``)."""
-    return _violation_row(class_emd(df, qi, sensitive), t)
-
-
-def _violation_row(emd: DataFrame, t: float) -> DataFrame:
-    """``violations, total_groups, violation_rate`` over a ``(*qi, emd)``
-    relation — NULL violations/rate when it has no classes."""
-    violated = F.sum(F.when(F.col("emd") > t, 1).otherwise(0))
-    return emd.agg(
-        violated.alias("violations"),
-        F.count(F.lit(1)).alias("total_groups"),
-        F.round(violated / F.count(F.lit(1)), ROUND_DP).alias("violation_rate"),
-    )
+    ``t-closeness.py:186-208``); NULL violations and rate over no class.
+    A local relation built from the collected class table."""
+    table = ClassTable(df, qi, sensitive, _HINT)
+    spark = df.sparkSession
+    rounded = spark_round(spark, table.emd(list(table.size)))
+    raw = local_relation(spark, T.StructType(VIOLATION_FIELDS), [violation_fields(rounded, t)])
+    return raw.select(*violation_cols())
 
 
 def l_diversity_entropy_stats(
@@ -310,7 +362,7 @@ def entropy_l_diversity_filter(
         (F.col("entropy_r") >= F.lit(round(math.log(l), ROUND_DP)))
         & (F.col("class_size") >= F.lit(k))
     ).select(*qi)
-    return df.join(F.broadcast(ok), on=list(qi), how="left_semi").select(*df.columns)
+    return df.join(ok, on=list(qi), how="left_semi").select(*df.columns)
 
 
 def recursive_cl_diversity_filter(
@@ -326,7 +378,9 @@ def recursive_cl_diversity_filter(
     All-integer verdict arithmetic over the counts relation — exact and
     engine-portable (unlike the entropy variant), so the filtered release
     itself is oracle-hashable. Physical shape: one fact aggregation, one
-    window over the slim counts relation, verdict keys broadcast back.
+    window over the slim counts relation, verdict keys joined back with a
+    plain semi join (worst case rows/k keys: Spark's threshold and AQE
+    pick the strategy).
     """
     if l < 2:
         raise ValueError("l must be >= 2")
@@ -347,7 +401,7 @@ def recursive_cl_diversity_filter(
     ok = verdict.filter(
         (F.col("__r1") < F.lit(float(c)) * F.col("__tail")) & (F.col("__sz") >= F.lit(k))
     ).select(*qi)
-    return df.join(F.broadcast(ok), on=list(qi), how="left_semi").select(*df.columns)
+    return df.join(ok, on=list(qi), how="left_semi").select(*df.columns)
 
 
 def beta_likeness_audit(

@@ -6,13 +6,15 @@ import os
 import threading
 from collections import OrderedDict
 from contextlib import contextmanager
+from typing import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 # Session-scoped ledger of every relation the engine persists on the
-# caller's behalf (the pipelines' and t-closeness operators' shared
-# counts and verdict-key relations, the pipelines' released relations).
+# caller's behalf (the naive release's class-size relation, operators'
+# staged relations).
 # HARD-capped: harnesses that rely on
 # spark.catalog.clearCache() between queries never drain the ledger's
 # Python/JVM plan references, so without a cap a long bench sweep or
@@ -271,3 +273,23 @@ def sql_round(v: float, nd: int) -> float:
 
     scaled = abs(v) * (10 ** nd)
     return math.copysign(math.floor(scaled + 0.5), v) / (10 ** nd)
+
+
+def local_relation(spark, schema: StructType, rows: Sequence[Sequence]) -> DataFrame:
+    """A local relation of ``rows`` typed by ``schema``. It is built
+    through Arrow with no pandas cast, so NULL and NaN stay distinct and
+    long and decimal values stay exact. Collecting it, or a projection of
+    it, runs no Spark job: the optimizer folds the projection into the
+    relation."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    # toInternal: a timestamp, collected as a naive local time, becomes the
+    # UTC microseconds Spark stores, as when PySpark converts it
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.table({
+        f.name: pa.array([f.dataType.toInternal(v) for v in c], type=to_arrow_type(f.dataType))
+        for f, c in zip(schema.fields, columns)
+    })
+    return spark.createDataFrame(table.to_pandas(types_mapper=pd.ArrowDtype), schema)

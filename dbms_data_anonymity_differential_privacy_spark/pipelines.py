@@ -6,10 +6,11 @@ returning the anonymized relation plus a single-row metrics relation with
 the same metric definitions the script prints. The anonymized relation is
 computed by whichever action writes it, and the metrics row is the only
 thing a caller should collect. Building a release runs Spark jobs only
-where a driver-side step needs data: the clustering fit collects its
-weighted QI-tuple table, and t-closeness collects the global sensitive
-distribution twice (``tcloseness._emd_from_counts``, once for the filter's
-verdicts and once for the post-filter violation report).
+where a driver-side step needs data, and the driver collects only
+domain-bounded tables, each under ``MAX_QI_TUPLES`` rows: the clustering
+fit collects its weighted QI-tuple table, and t-closeness collects its
+binning edges and its (class, sensitive value, count) table. Their
+metrics rows are then local relations, so collecting them runs no job.
 
 | function | reference entry point |
 |---|---|
@@ -32,17 +33,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dbms_data_anonymity_differential_privacy_spark.functions.binning import bin_equal_width
+from dbms_data_anonymity_differential_privacy_spark.functions.binning import _equal_width_bin
 from dbms_data_anonymity_differential_privacy_spark.operators.clustering import fit_clusters
 from dbms_data_anonymity_differential_privacy_spark.operators.kanonymity import class_sizes
 from dbms_data_anonymity_differential_privacy_spark.operators.metrics import _ncp_expr
 from dbms_data_anonymity_differential_privacy_spark.operators.tcloseness import (
     ROUND_DP as _ROUND_DP,
-    _emd_from_counts,
-    _verdict_keys,
-    _violation_row,
+    VIOLATION_FIELDS,
+    ClassTable,
+    check_mode,
+    spark_round,
+    verdict_classes,
+    violation_cols,
+    violation_fields,
 )
-from dbms_data_anonymity_differential_privacy_spark.operators.util import sql_round, track_cached
+from dbms_data_anonymity_differential_privacy_spark.operators.util import (
+    local_relation,
+    sql_round,
+    track_cached,
+)
 
 ROUND_DP = 9
 
@@ -55,11 +64,9 @@ _CLUSTER_METRICS = T.StructType([
 ])
 
 
-def _suppression_cols(size: Column, kept_size: Column) -> list[Column]:
-    """``n_orig, n_anon, suppression_rate`` as aggregates over a class
-    relation: ``size`` per class, ``kept_size`` NULL for a suppressed class."""
-    n_orig = F.coalesce(F.sum(size), F.lit(0))
-    n_anon = F.coalesce(F.sum(kept_size), F.lit(0))
+def _suppression_cols(n_orig: Column, n_anon: Column) -> list[Column]:
+    """``n_orig, n_anon, suppression_rate`` from the row counts before and
+    after suppression."""
     return [
         n_orig.alias("n_orig"),
         n_anon.alias("n_anon"),
@@ -100,7 +107,9 @@ def naive_suppression_pipeline(
     # no class survives → NULL sums: uniqueness and reid_risk stay NULL
     # (NULL/NULL, never an ANSI 0/0)
     metrics = sizes.agg(
-        *_suppression_cols(size, kept_size),
+        *_suppression_cols(
+            F.coalesce(F.sum(size), F.lit(0)), F.coalesce(F.sum(kept_size), F.lit(0))
+        ),
         F.coalesce(F.min(kept_size), F.lit(0)).alias("min_class_size"),
         F.coalesce(F.min(kept_size) >= k, F.lit(False)).alias("k_satisfied"),
         F.round(
@@ -194,60 +203,72 @@ def t_closeness_pipeline(
     ``uniqueness_rate`` classes-denominator (:211-214), ``ncp`` (:226-234),
     ``violations / total_groups / violation_rate`` vs the *post-filter*
     table distribution (:186-208).
-    """
-    clean = df.na.drop("any")
-    work = clean
-    eff_qi = list(qi)
-    for col, n_bins in (bin_spec or {}).items():
-        out = f"{col}_bin"
-        work = bin_equal_width(work, col, n_bins, out)
-        eff_qi = [out if c == col else c for c in eff_qi]
 
-    # ONE fact-table aggregation: the (class, sensitive, count) relation
-    # feeds the k-filter, both EMD chains (filter verdicts + post-filter
-    # violation report), and every metric — n_orig/n_anon/suppression/
-    # uniqueness from summed counts, NCP from per-column distincts of the
-    # class tuples. Composing the standalone operators instead would
-    # re-aggregate the fact table once per metric; at 100 TB that is the
-    # difference between one big-table pass for the whole metrics row and
-    # five. Only the anonymized output itself rescans fact rows.
-    counts = (
-        track_cached(
-            work.groupBy(*eff_qi, sensitive)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .persist()
-        )
+    Physical shape: the binning edges are one collected aggregation, and
+    the (class, sensitive value, count) table another
+    (``tcloseness.ClassTable``); the verdicts and the metrics row are
+    computed from that table on the driver, and the metrics row is a local
+    relation, so collecting it runs no job. The anonymized rows are the
+    fact scan semi-joined to the local relation of kept class keys,
+    computed by whichever action writes them. Nothing is persisted.
+    """
+    check_mode(mode)
+    clean = df.na.drop("any")
+    # the edges of every binned column in one aggregation, then the bins
+    # as bin_equal_width computes them, with the edges as literals of the
+    # column's type (Decimal and long arithmetic stay as they were)
+    spec = dict(bin_spec or {})
+    edges = (
+        clean.agg(*[f(c) for c in spec for f in (F.min, F.max)]).first() if spec else []
     )
-    # the verdict keys feed post_counts, anon and the metrics row: persist
-    # them once; the join strategy is Spark's (threshold + AQE). anon has
-    # one consumer, the caller's write, so it stays unpersisted.
-    ok = track_cached(_verdict_keys(counts, eff_qi, sensitive, k, t, mode).persist())
-    post_counts = track_cached(counts.join(ok, on=eff_qi, how="left_semi").persist())
-    anon = work.join(ok, on=eff_qi, how="left_semi")
+    work, eff_qi = clean, list(qi)
+    for i, (col, n_bins) in enumerate(spec.items()):
+        dt = clean.schema[col].dataType
+        lo, hi = (F.lit(edges[2 * i + j]).cast(dt) for j in (0, 1))
+        work = work.withColumn(f"{col}_bin", _equal_width_bin(F.col(col), lo, hi, n_bins))
+        eff_qi = [f"{col}_bin" if c == col else c for c in eff_qi]
+
+    # ONE fact-table aggregation, collected: the (class, sensitive, count)
+    # table feeds the k-filter, both EMD folds (filter verdicts and the
+    # post-filter violation report) and every metric. Only the anonymized
+    # output itself rescans fact rows.
+    table = ClassTable(
+        work, eff_qi, sensitive,
+        "coarsen the QIs with bin_spec (equal-width bins) before the t-closeness release",
+    )
+    ok = verdict_classes(table, k, t, mode)
+    anon = work.join(table.keys(ok), on=eff_qi, how="left_semi")
 
     # metric definitions identical to suppression_rate / uniqueness_rate
-    # (classes denominator) / ncp (operators/metrics.py), as ONE class-level
-    # aggregation: each class carries its size and a pass flag (NULL for a
-    # suppressed class), and every "after" metric is a conditional
-    # aggregate. NCP's per-column distincts over class tuples equal those
-    # over fact rows. No class passes → NULL sum over 0 classes: the
-    # uniqueness rate stays NULL (NULL/0, never an ANSI 0/0).
-    sizes = counts.groupBy(*eff_qi).agg(F.sum("__cnt").alias("class_size"))
-    flagged = sizes.join(ok.withColumn("__ok", F.lit(True)), on=eff_qi, how="left")
-    size, passed = F.col("class_size"), F.col("__ok")
-    kept_size = F.when(passed, size)
-    per_class = flagged.agg(
-        *_suppression_cols(size, kept_size),
-        F.round(
-            F.sum(F.when(passed, F.when(size == 1, 1).otherwise(0))) / F.count(kept_size),
-            _ROUND_DP,
-        ).alias("uniqueness_rate"),
-        _ncp_expr(
-            [F.countDistinct(c) for c in eff_qi],
-            [F.countDistinct(F.when(passed, F.col(c))) for c in eff_qi],
-        ).alias("ncp"),
+    # (classes denominator) / ncp (operators/metrics.py) and t_violations
+    # against the post-filter distribution; the counts they divide are
+    # summed here, and the divisions and ROUNDs are Spark's, folded over
+    # the one-row local relation. No class passes → NULL uniqueness and
+    # violation rates (NULL/0, never an ANSI 0/0). NCP's per-column
+    # distincts over class tuples equal those over fact rows.
+    spark, n = df.sparkSession, len(eff_qi)
+    row = [
+        sum(table.size.values()),
+        sum(table.size[c] for c in ok),
+        sum(table.size[c] == 1 for c in ok) if ok else None,
+        len(ok),
+        *[len({c[i] for c in table.size} - {None}) for i in range(n)],
+        *[len({c[i] for c in ok}) for i in range(n)],
+        *violation_fields(spark_round(spark, table.emd(ok)), t),
+    ]
+    fields = (
+        [T.StructField(f, T.LongType(), f == "__unique") for f in
+         ("n_orig", "n_anon", "__unique", "__kept")]
+        + [T.StructField(f"__{side}{i}", T.LongType(), False) for side in "oa" for i in range(n)]
+        + VIOLATION_FIELDS
     )
-    # t_violations' report, against the post-filter distribution
-    viol = _violation_row(_emd_from_counts(post_counts, eff_qi, sensitive), t)
-    metrics = per_class.crossJoin(F.broadcast(viol))
+    raw = local_relation(spark, T.StructType(fields), [row])
+    metrics = raw.select(
+        *_suppression_cols(F.col("n_orig"), F.col("n_anon")),
+        F.round(F.col("__unique") / F.col("__kept"), _ROUND_DP).alias("uniqueness_rate"),
+        _ncp_expr(
+            [F.col(f"__o{i}") for i in range(n)], [F.col(f"__a{i}") for i in range(n)]
+        ).alias("ncp"),
+        *violation_cols(),
+    )
     return {"anonymized": anon, "metrics": metrics}

@@ -546,7 +546,8 @@ def c10_utility_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C4/C9 — t-closeness (milestone 2). QI = (o_orderpriority, 10-bin
 # o_totalprice), sensitive = o_orderstatus, k=5, t=0.05 (per-class EMD at
 # sf0.01 spans 0.006-0.112, median 0.04 → both keep and reject paths are
-# exercised). SQL mirrors the window-cumsum EMD exactly.
+# exercised). The SQL computes the same cumulative-difference EMD with a
+# window cumsum; the engine folds it on the driver.
 # --------------------------------------------------------------------------
 ORD_QI = ["o_orderpriority", "price_bin"]
 T_THRESHOLD = 0.05
@@ -1609,7 +1610,10 @@ def pipe_naive_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emd_ctes_for(src: str, qi: Sequence[str], sensitive: str, pfx: str) -> str:
     """DuckDB CTE chain computing per-class EMD of ``sensitive`` vs the
     global distribution of relation ``src`` — the SQL twin of
-    ``operators.tcloseness.class_emd`` (window-cumsum formulation)."""
+    ``operators.tcloseness.class_emd``. The engine folds the cumulative
+    differences over the sorted support on the driver, from its collected
+    (class, sensitive value, count) table; this twin builds the same sum
+    with a zero-filled grid and a window cumsum, and both round to 9 dp."""
     q = ", ".join(qi)
     g_cols = ", ".join(f"g.{c}" for c in qi)
     on_grp = " AND ".join(f"c.{c} = g.{c}" for c in qi)

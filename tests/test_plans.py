@@ -135,19 +135,19 @@ def test_tcloseness_filter_broadcasts_class_verdicts(plans):
 
 
 def test_class_key_broadcast_hint_is_size_gated(spark, sf001):
-    """The k-anonymity / t-closeness class-key joins carry no broadcast
-    hint: Spark's own size threshold (plus AQE at runtime) picks the
-    strategy. A key relation is worst-case rows/k keys, so a forced
-    broadcast would OOM the driver at 100 TB. Gate both flavors: BHJ under
-    the threshold (the module-level `plans` gates above), shuffled
-    LeftSemi with autoBroadcastJoinThreshold disabled here, with result
-    counts identical under both strategies."""
+    """The k-anonymity / t-closeness / recursive (c, l)-diversity class-key
+    joins carry no broadcast hint: Spark's own size threshold (plus AQE at
+    runtime) picks the strategy. A key relation is worst-case rows/k keys,
+    so a forced broadcast would OOM the driver at 100 TB. Gate both
+    flavors: BHJ under the threshold (the module-level `plans` gates
+    above), shuffled LeftSemi with autoBroadcastJoinThreshold disabled
+    here, with result counts identical under both strategies."""
     from dbms_data_anonymity_differential_privacy_spark import queries_registry as qr
 
     spark.catalog.clearCache()
     baseline = {
         n: qr.QUERIES[n](spark, sf001).count()
-        for n in ("c01_k_anonymize_suppress", "c04_t_closeness_strict")
+        for n in ("c01_k_anonymize_suppress", "c04_t_closeness_strict", "x39_recursive_cl")
     }
     spark.catalog.clearCache()
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
